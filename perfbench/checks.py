@@ -70,6 +70,15 @@ class Oracle:
             self._cache[sql] = ([c[0] for c in res.description], res.fetchall())
         return self._cache[sql]
 
+    def read_parquet_dir(self, path: str) -> tuple[list, list]:
+        """The rows a Spark job wrote under ``path``, in file and row order."""
+        res = self.con.execute(
+            f"SELECT * EXCLUDE (filename, file_row_number) FROM read_parquet("
+            f"'{path}/*.parquet', filename = true, file_row_number = true) "
+            f"ORDER BY filename, file_row_number"
+        )
+        return [c[0] for c in res.description], res.fetchall()
+
     def check(self, sql: str, rows, cols) -> str | None:
         want_cols, want_rows = self.query(sql)
         return compare([tuple(r) for r in rows], cols, want_rows, want_cols)

@@ -1,6 +1,6 @@
-"""The workloads. Each is a fixed list of operations; one pass runs
-every operation once, in order, to a collected result or a committed
-write. An operation's ``run`` is timed; its ``check`` is not."""
+"""The workloads. Each is a fixed list of operations; a run's one pass
+runs every operation once, in order, to a collected result or a
+committed write. An operation's ``run`` is timed; its ``check`` is not."""
 
 from __future__ import annotations
 
@@ -18,6 +18,7 @@ from jobminer_spark import ORACLES, QUERIES
 from jobminer_spark.data.skill_dictionary import dictionary_rows
 from jobminer_spark.lakehouse import create_table, merge_into, read_snapshot
 from jobminer_spark.pipeline import run_pipeline
+from jobminer_spark.sinks import write_parquet
 from jobminer_spark.sources import delta, iceberg
 from jobminer_spark.sources.parquet import load_table
 
@@ -62,23 +63,16 @@ def _parquet_bytes(table: pa.Table) -> int:
 class Workload:
     name = ""
     tables: tuple[str, ...] = ()  # fixture tables scanned once in set-up
-    # Whole passes per run: one, cold, the way a batch job runs in a
-    # fresh process. Later passes of a run would be cheaper (JIT, caches),
-    # so a fixed count keeps every run's figure the same kind of figure.
-    passes = 1
 
     def ops(self) -> list[Op]:
         raise NotImplementedError
 
     def prepare(self, ctx: Ctx) -> None:
-        """Once per run, untimed."""
+        """Before the pass, untimed."""
 
-    def begin_pass(self, ctx: Ctx) -> None:
-        """Before each pass, untimed."""
-
-    def end_pass(self, ctx: Ctx) -> dict[str, float]:
-        """After each pass, untimed: the pass's storage figures and the
-        counts the engine's write calls returned."""
+    def finish(self, ctx: Ctx) -> dict[str, float]:
+        """After the pass, untimed: its storage figures and the counts
+        the engine's write calls returned."""
         return {}
 
 
@@ -155,23 +149,23 @@ class EtlDaily(Workload):
 
     def prepare(self, ctx: Ctx) -> None:
         ctx.oracle.register_days(N_DAYS, dictionary_rows())
-
-    def day_dir(self, ctx: Ctx, d: int) -> str:
-        return os.path.join(ctx.inputs, "etl", f"day{d}")
-
-    def begin_pass(self, ctx: Ctx) -> None:
         root = os.path.join(ctx.work, "etl")
         shutil.rmtree(root, ignore_errors=True)
         self.listings = os.path.join(root, "job_listings")
         self.skills = os.path.join(root, "skills")
+        self.report = os.path.join(root, "top_categories")
         self.input_bytes = 0
+        self.rows: dict[int, dict] = {}
         self.files = {"lakehouse.files_rewritten": 0, "lakehouse.files_carried": 0}
 
-    def _batch(self, ctx: Ctx, d: int):
+    def day_dir(self, ctx: Ctx, d: int) -> str:
+        return os.path.join(ctx.inputs, "etl", f"day{d}")
+
+    def _batch(self, ctx: Ctx, d: int, existing=None):
         day = self.day_dir(ctx, d)
         self.input_bytes += _dir_bytes(day)
         with ctx.span("pipeline.build"):
-            listings, skills = run_pipeline(ctx.spark, day)
+            listings, skills = run_pipeline(ctx.spark, day, existing_jobs=existing)
         return _keyed(listings, skills)
 
     def load_day1(self, ctx: Ctx):
@@ -181,10 +175,12 @@ class EtlDaily(Workload):
             create_table(ctx.spark, self.skills, st, "skill_key")
 
     def merge_day(self, ctx: Ctx, d: int):
-        lt, st = self._batch(ctx, d)
-        expired = ctx.spark.read.parquet(os.path.join(self.day_dir(ctx, d), "expired.parquet"))
         with ctx.span("lakehouse.read"):
             snap = read_snapshot(ctx.spark, self.listings)
+        # dedup-on-insert (operators.dedupe.upsert_new_keys): postings
+        # already in job_listings leave the batch, skills included
+        lt, st = self._batch(ctx, d, existing=snap)
+        expired = ctx.spark.read.parquet(os.path.join(self.day_dir(ctx, d), "expired.parquet"))
         expiry = (
             snap.join(expired.select(F.col("doc_id").alias("job_key")), "job_key", "left_semi")
             .withColumn("listing_status", F.lit("Expired"))
@@ -206,14 +202,14 @@ class EtlDaily(Workload):
     def check_tables(self, ctx: Ctx, d: int) -> str | None:
         """Both tables against DuckDB's state after days 1..``d``; keeps
         the collected rows for the re-application check and space_amp."""
-        self.rows = {}
+        self.rows[d] = {}
         for table, cols, sql in (
             (self.listings, _LISTING_COLS, ctx.oracle.listings_sql(d)),
             (self.skills, _SKILL_COLS, ctx.oracle.skills_sql(d)),
         ):
             df = read_snapshot(ctx.spark, table)
             rows = df.collect()
-            self.rows[table] = (df.columns, rows)
+            self.rows[d][table] = (df.columns, rows)
             idx = [df.columns.index(c) for c in cols]
             bad = ctx.oracle.check(sql, [[r[i] for i in idx] for r in rows], cols)
             if bad:
@@ -232,9 +228,9 @@ class EtlDaily(Workload):
             for d in (1, 2)
         )
         again = day1 & day2
-        for table, (cols, after) in self.rows.items():
+        for table, (cols, after) in self.rows[2].items():
             j = cols.index("job_id")
-            before = read_snapshot(ctx.spark, table, 1).collect()
+            _cols, before = self.rows[1][table]
             bad = compare(
                 [r for r in after if r[j] in again], cols,
                 [r for r in before if r[j] in again], cols,
@@ -245,7 +241,8 @@ class EtlDaily(Workload):
 
     def top_categories(self, ctx: Ctx):
         """pipeline.flagship_query's shape over the committed tables,
-        restricted to postings that are still active."""
+        restricted to postings that are still active, written out as
+        the day's report through the parquet sink."""
         with ctx.span("lakehouse.read"):
             skills = read_snapshot(ctx.spark, self.skills)
             active = read_snapshot(ctx.spark, self.listings).filter(
@@ -261,11 +258,13 @@ class EtlDaily(Workload):
                 .orderBy(F.col("n_mentions").desc(), F.col("skill_category"))
                 .limit(10)
             )
-            rows = df.collect()
-        return df.columns, rows
+        with ctx.span("sinks.write"):
+            write_parquet(df, self.report, mode="overwrite")
 
-    def check_top(self, ctx: Ctx, res) -> str | None:
-        cols, rows = res
+    def check_top(self, ctx: Ctx, _res) -> str | None:
+        """The written report, read back by DuckDB in file order, against
+        the same query in DuckDB."""
+        cols, rows = ctx.oracle.read_parquet_dir(self.report)
         want_cols, want = ctx.oracle.query(ctx.oracle.top_categories_sql(N_DAYS))
         bad = compare(rows, cols, want, want_cols)
         if bad is None and [r[0] for r in rows] != [w[0] for w in want]:
@@ -279,13 +278,13 @@ class EtlDaily(Workload):
             Op("top_categories", self.top_categories, self.check_top, read=True),
         ]
 
-    def end_pass(self, ctx: Ctx) -> dict[str, float]:
+    def finish(self, ctx: Ctx) -> dict[str, float]:
         written = _dir_bytes(self.listings) + _dir_bytes(self.skills)
         once = sum(
             _parquet_bytes(pa.Table.from_pylist([r.asDict() for r in rows]))
-            for _cols, rows in self.rows.values()
+            for _cols, rows in self.rows[N_DAYS].values()
         )
-        # tables start empty each pass: everything under them was written in it
+        # the tables started empty: everything under them was written in the pass
         return {"write_amp": written / self.input_bytes, "space_amp": written / once, **self.files}
 
 
@@ -310,8 +309,6 @@ class LakeMaint(Workload):
         self.lake = lake
         self.update_keys = pq.read_table(os.path.join(lake, "update_keys.parquet"))["o_orderkey"].to_pylist()
         self.delete_keys = pq.read_table(os.path.join(lake, "delete_keys.parquet"))["o_orderkey"].to_pylist()
-
-    def begin_pass(self, ctx: Ctx) -> None:
         root = os.path.join(ctx.work, "lake")
         shutil.rmtree(root, ignore_errors=True)
         self.d = os.path.join(root, "orders_delta")
@@ -388,16 +385,18 @@ class LakeMaint(Workload):
             len(iceberg.iceberg_live_files(self.i)),
         )
 
+    def check_delete(self, ctx: Ctx, _res) -> str | None:
+        self.before_compact = self.live_files(ctx)
+        return self._fingerprints(ctx, ctx.oracle.orders_after_sql(True, True))
+
     def compact(self, ctx: Ctx):
-        before = self.live_files(ctx)
         with ctx.span("delta.optimize"):
             delta.optimize_delta(ctx.spark, self.d, target_files=1)
         with ctx.span("iceberg.rewrite"):
             iceberg.rewrite_iceberg_data_files(ctx.spark, self.i, target_files=1)
-        return before
 
-    def check_compact(self, ctx: Ctx, before) -> str | None:
-        after = self.live_files(ctx)
+    def check_compact(self, ctx: Ctx, _res) -> str | None:
+        before, after = self.before_compact, self.live_files(ctx)
         if not (after[0] < before[0] and after[1] < before[1]):
             return f"live files did not drop: before {before}, after {after}"
         return self._fingerprints(ctx, ctx.oracle.orders_after_sql(True, True))
@@ -428,12 +427,12 @@ class LakeMaint(Workload):
         return [
             Op("lake_write", self.write, state(False, False)),
             Op("lake_update", self.update, state(True, False)),
-            Op("lake_delete", self.delete, state(True, True)),
+            Op("lake_delete", self.delete, self.check_delete),
             Op("lake_compact", self.compact, self.check_compact),
             Op("lake_read", self.read, self.check_read, read=True),
         ]
 
-    def end_pass(self, ctx: Ctx) -> dict[str, float]:
+    def finish(self, ctx: Ctx) -> dict[str, float]:
         written = _dir_bytes(self.d) + _dir_bytes(self.i)
         # the checks found both tables equal to DuckDB's final state
         final = ctx.oracle.con.execute(ctx.oracle.orders_after_sql(True, True)).fetch_arrow_table()
