@@ -2,36 +2,31 @@
 
 Writes, from one ``--seed``, everything the workloads read:
 
-* the fixture tables they scan (``orders`` and ``documents``), with the schemas and value ranges of the engine's
-  test fixtures at sf0.01, one parquet file each;
+* the fixture table they scan, ``documents``, with the schema and
+  value ranges of the engine's test fixture, one parquet file;
 * the ``etl_daily`` day batches: per day a ``documents``-shaped file
   of postings drawn from ``documents`` (day 1: new postings; day 2:
   every day-1 posting that did not expire, new postings, and in-batch
-  duplicates on both days) and an ``expired`` key list;
-* the ``lake_maint`` change sets over ``orders``: an append batch, the
-  update keys and the delete keys.
+  duplicates on both days) and an ``expired`` key list.
 
 Only numpy and pyarrow are used, so generation needs no Spark session
 and stays outside every timed region. The same seed writes the same
 bytes.
 
-    python3 perfbench/gen.py --seed 7 --out /tmp/inputs
+    python3 perfbench/gen.py --seed 7 --out .bench_work/inputs/seed7
 """
 
 from __future__ import annotations
 
 import argparse
-import datetime as dt
 import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-# Row counts (the engine's sf0.01 fixture sizes; documents is larger so
-# the daily batches can draw their postings from it).
-N_CUSTOMER = 1500
-N_ORDERS = 15000
+# Documents is larger than the engine's fixture so the daily batches
+# can draw their postings from it.
 N_DOCUMENTS = 800
 
 # etl_daily: two days over the documents pool.
@@ -40,12 +35,6 @@ DAY2_NEW = 100
 DAY2_EXPIRED = 50
 INBATCH_DUPS = 10
 
-# lake_maint change sets over orders.
-APPEND_ROWS = 500
-UPDATE_KEYS = 300
-DELETE_KEYS = 200
-
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 LANGS = ["en", "en", "en", "de", "es", "fr", "zh"]
 # The fixture vocabulary plus single-word skill-dictionary terms, so the
 # daily job's skill mining has hits in every category it can resolve.
@@ -60,35 +49,11 @@ SKILL_WORDS = (
     "jenkins statistics forecasting scrum"
 ).split()
 
-DAY0 = dt.datetime(1995, 1, 1)
-DATE_SPAN_DAYS = 2404  # 1995-01-01 .. 2001-08-01, the fixture range
-
-
-def _ts_us(days: np.ndarray) -> np.ndarray:
-    base = int(DAY0.replace(tzinfo=dt.timezone.utc).timestamp()) * 1_000_000
-    return base + days.astype(np.int64) * 86_400_000_000
-
 
 def _write(table: pa.Table, path: str) -> None:
     tmp = path + ".tmp"
     pq.write_table(table, tmp)
     os.replace(tmp, path)
-
-
-def orders_rows(rng: np.random.Generator, first_key: int, n: int) -> pa.Table:
-    keys = np.arange(first_key, first_key + n)
-    return pa.table(
-        {
-            "o_orderkey": pa.array(keys, pa.int64()),
-            "o_custkey": pa.array(rng.integers(0, N_CUSTOMER, n), pa.int64()),
-            "o_orderstatus": [("F", "O", "P")[s] for s in rng.integers(0, 3, n)],
-            "o_totalprice": np.round(rng.uniform(1000.0, 500000.0, n), 2),
-            "o_orderdate": pa.array(
-                _ts_us(rng.integers(0, DATE_SPAN_DAYS + 1, n)), pa.timestamp("us")
-            ),
-            "o_orderpriority": [PRIORITIES[p] for p in rng.integers(0, 5, n)],
-        }
-    )
 
 
 def documents(rng: np.random.Generator) -> pa.Table:
@@ -137,14 +102,8 @@ def generate(out: str, seed: int) -> None:
         return
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng(seed)
-    tables = {
-        "orders": orders_rows(rng, 0, N_ORDERS),
-        "documents": documents(rng),
-    }
-    for name, t in tables.items():
-        _write(t, os.path.join(out, f"{name}.parquet"))
-
-    docs = tables["documents"]
+    docs = documents(rng)
+    _write(docs, os.path.join(out, "documents.parquet"))
     for i, day in enumerate(day_plan(rng), start=1):
         d = os.path.join(out, "etl", f"day{i}")
         os.makedirs(d, exist_ok=True)
@@ -154,20 +113,6 @@ def generate(out: str, seed: int) -> None:
             pa.table({"doc_id": pa.array(day["expired"], pa.int64())}),
             os.path.join(d, "expired.parquet"),
         )
-
-    lake = os.path.join(out, "lake")
-    os.makedirs(lake, exist_ok=True)
-    _write(orders_rows(rng, N_ORDERS, APPEND_ROWS), os.path.join(lake, "append.parquet"))
-    n_all = N_ORDERS + APPEND_ROWS
-    keys = rng.permutation(n_all)
-    _write(
-        pa.table({"o_orderkey": pa.array(np.sort(keys[:UPDATE_KEYS]), pa.int64())}),
-        os.path.join(lake, "update_keys.parquet"),
-    )
-    _write(
-        pa.table({"o_orderkey": pa.array(np.sort(keys[UPDATE_KEYS : UPDATE_KEYS + DELETE_KEYS]), pa.int64())}),
-        os.path.join(lake, "delete_keys.parquet"),
-    )
     open(os.path.join(out, "_DONE"), "w").close()
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import signal
+import subprocess
 import threading
 import time
 
@@ -32,6 +34,13 @@ def process_start_epoch() -> float:
     return btime + int(_stat(os.getpid())[19]) / _CLK
 
 
+def host_steal_seconds() -> float:
+    """CPU time the hypervisor gave to other guests, summed over this
+    machine's CPUs (the steal column of /proc/stat)."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / _CLK
+
+
 def tree_pids(root: int) -> list[int]:
     """``root`` and all its live descendants."""
     children: dict[int, list[int]] = {}
@@ -46,6 +55,46 @@ def tree_pids(root: int) -> list[int]:
         out.append(p)
         todo.extend(children.get(p, []))
     return out
+
+
+def _alive(pid: int) -> bool:
+    st = _stat(pid)
+    if st is None:
+        return False
+    if st[0] == "Z":
+        # a zombie child of ours is reaped here; one reparented to init
+        # is init's to reap, and it runs no more
+        with contextlib.suppress(ChildProcessError):
+            os.waitpid(pid, os.WNOHANG)
+        return False
+    return True
+
+
+def stop_tree(root: int, gateway, timeout: float = 60.0) -> None:
+    """Ends every descendant of ``root`` and waits until each has ended.
+    The JVM's gateway server exits when its stdin closes, and its Python
+    workers go with it; whatever still runs after ``timeout`` is killed."""
+    rest = [p for p in tree_pids(root) if p != root]
+    deadline = time.time() + timeout
+    if gateway is not None:
+        with contextlib.suppress(OSError):
+            gateway.stdin.close()
+        try:
+            gateway.wait(timeout)
+        except subprocess.TimeoutExpired:
+            gateway.kill()
+            gateway.wait()
+    killed = False
+    while True:
+        rest = [p for p in rest if _alive(p)]
+        if not rest or (killed and time.time() > deadline):
+            return
+        if not killed and time.time() > deadline:
+            for p in rest:
+                with contextlib.suppress(OSError):
+                    os.kill(p, signal.SIGKILL)
+            killed, deadline = True, time.time() + 10
+        time.sleep(0.05)
 
 
 def _cmdline(pid: int) -> str:

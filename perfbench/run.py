@@ -16,7 +16,9 @@ folded from spans recorded here and from Spark's event log). The traced
 run also writes its spans and folded counters to
 ``.bench_work/trace-<workload>-<seed>.json``.
 
-Everything the run writes stays under ``.bench_work/`` in the checkout.
+Everything the run writes stays under ``.bench_work/`` in the checkout,
+and every process it starts (the JVM and its Python workers) has ended
+before it exits.
 """
 
 from __future__ import annotations
@@ -42,7 +44,9 @@ from measure import (  # noqa: E402
     Tracer,
     cpu_seconds,
     fold_event_log,
+    host_steal_seconds,
     process_start_epoch,
+    stop_tree,
     union_seconds,
 )
 
@@ -73,18 +77,6 @@ LAYER_METRICS = {
     "sinks.write_s": "s",
     "lakehouse.files_rewritten": "count",
     "lakehouse.files_carried": "count",
-    "delta.write_s": "s",
-    "delta.update_s": "s",
-    "delta.delete_s": "s",
-    "delta.optimize_s": "s",
-    "delta.read_s": "s",
-    "iceberg.write_s": "s",
-    "iceberg.merge_s": "s",
-    "iceberg.delete_s": "s",
-    "iceberg.rewrite_s": "s",
-    "iceberg.read_s": "s",
-    "delta.live_files": "count",
-    "iceberg.live_files": "count",
     "read_s": "s",
     "write_amp": "ratio",
     "space_amp": "ratio",
@@ -170,6 +162,14 @@ def main() -> None:
         with sampler:
             result = _run(a, tracer, inputs, run_dir, nproc, t_start, gen_s)
     finally:
+        # spark.stop() leaves the JVM running until this process exits:
+        # end it, and every worker it started, before the run returns
+        gateway = None
+        if "pyspark" in sys.modules:
+            from pyspark import SparkContext
+
+            gateway = getattr(SparkContext._gateway, "proc", None)
+        stop_tree(os.getpid(), gateway)
         shutil.rmtree(run_dir, ignore_errors=True)
     if a.trace:
         result["metrics"]["process.peak_rss_mb"] = sampler.peak_bytes / 2**20
@@ -234,7 +234,7 @@ def _run(a, tracer: Tracer, inputs: str, run_dir: str, nproc: int, t_start: floa
         print("# " + json.dumps(header), flush=True)
 
         setup_s = time.time() - t_start - gen_s
-        p = {"ops": {}, "cpu": 0.0, "pycpu": 0.0, "read": 0.0, "check": 0.0}
+        p = {"ops": {}, "cpu": 0.0, "pycpu": 0.0, "steal": 0.0, "read": 0.0, "check": 0.0}
         attempted = failed = 0
         failures: dict[str, str] = {}
         tracker = sc.statusTracker()
@@ -242,6 +242,7 @@ def _run(a, tracer: Tracer, inputs: str, run_dir: str, nproc: int, t_start: floa
             sc.setJobGroup(op.name, op.name)
             loose = set(tracker.getJobIdsForGroup(None))
             c0, w0 = cpu_seconds(os.getpid())
+            g0 = host_steal_seconds()
             ts = time.time()
             err = None
             try:
@@ -251,6 +252,7 @@ def _run(a, tracer: Tracer, inputs: str, run_dir: str, nproc: int, t_start: floa
                 err = f"{type(e).__name__}: {e}"[:300]
             te = time.time()
             c1, w1 = cpu_seconds(os.getpid())
+            g1 = host_steal_seconds()
             n_jobs = len(tracker.getJobIdsForGroup(op.name)) + len(
                 set(tracker.getJobIdsForGroup(None)) - loose
             )
@@ -271,6 +273,7 @@ def _run(a, tracer: Tracer, inputs: str, run_dir: str, nproc: int, t_start: floa
             p["ops"][op.name] = {"wall": te - ts, "start": ts, "end": te, "jobs": n_jobs}
             p["cpu"] += c1 - c0
             p["pycpu"] += w1 - w0
+            p["steal"] += g1 - g0
             if op.read:
                 p["read"] += te - ts
         sc.setJobGroup("check", "output checks")
@@ -279,7 +282,8 @@ def _run(a, tracer: Tracer, inputs: str, run_dir: str, nproc: int, t_start: floa
         p["check"] += time.time() - tc
         p["wall"] = sum(o["wall"] for o in p["ops"].values())
         print(
-            f"# pass: {p['wall']:.2f}s cpu {p['cpu']:.2f}s checks {p['check']:.2f}s "
+            f"# pass: {p['wall']:.2f}s cpu {p['cpu']:.2f}s host steal {p['steal']:.2f}s "
+            f"checks {p['check']:.2f}s "
             + " ".join(f"{n}={o['wall']:.2f}/{o['jobs']}" for n, o in p["ops"].items()),
             file=sys.stderr, flush=True,
         )

@@ -19,8 +19,6 @@ from jobminer_spark.data.skill_dictionary import dictionary_rows
 from jobminer_spark.lakehouse import create_table, merge_into, read_snapshot
 from jobminer_spark.pipeline import run_pipeline
 from jobminer_spark.sinks import write_parquet
-from jobminer_spark.sources import delta, iceberg
-from jobminer_spark.sources.parquet import load_table
 
 from checks import Oracle, compare
 
@@ -288,162 +286,4 @@ class EtlDaily(Workload):
         return {"write_amp": written / self.input_bytes, "space_amp": written / once, **self.files}
 
 
-# ---------------------------------------------------------------------
-# lake_maint: Delta and Iceberg tables over orders
-# ---------------------------------------------------------------------
-
-_FINGERPRINT_SQL = """
-    SELECT o_orderstatus, o_orderpriority, count(*) AS n, sum(o_orderkey) AS sk,
-           sum(o_custkey) AS sc, sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents,
-           sum(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))) AS days
-    FROM ({}) GROUP BY ALL
-"""
-
-
-class LakeMaint(Workload):
-    name = "lake_maint"
-    tables = ("orders",)
-
-    def prepare(self, ctx: Ctx) -> None:
-        lake = os.path.join(ctx.inputs, "lake")
-        self.lake = lake
-        self.update_keys = pq.read_table(os.path.join(lake, "update_keys.parquet"))["o_orderkey"].to_pylist()
-        self.delete_keys = pq.read_table(os.path.join(lake, "delete_keys.parquet"))["o_orderkey"].to_pylist()
-        root = os.path.join(ctx.work, "lake")
-        shutil.rmtree(root, ignore_errors=True)
-        self.d = os.path.join(root, "orders_delta")
-        self.i = os.path.join(root, "orders_iceberg")
-        self.input_bytes = 0
-
-    def _in(self, ctx: Ctx, name: str):
-        path = os.path.join(self.lake, f"{name}.parquet")
-        self.input_bytes += os.path.getsize(path)
-        return ctx.spark.read.parquet(path)
-
-    def _fingerprints(self, ctx: Ctx, state_sql: str) -> str | None:
-        """Per (status, priority): row count and key, customer, cent and
-        day sums, for both tables in one Spark job, against DuckDB's."""
-        want_cols, want = ctx.oracle.query(_FINGERPRINT_SQL.format(state_sql))
-        both = None
-        for fmt, df in (("delta", delta.read_delta(ctx.spark, self.d)),
-                        ("iceberg", iceberg.read_iceberg(ctx.spark, self.i))):
-            g = df.groupBy("o_orderstatus", "o_orderpriority").agg(
-                F.expr("count(1)").alias("n"), F.expr("sum(o_orderkey)").alias("sk"),
-                F.expr("sum(o_custkey)").alias("sc"),
-                F.expr("sum(CAST(round(o_totalprice * 100) AS BIGINT))").alias("cents"),
-                F.expr("sum(unix_date(CAST(o_orderdate AS DATE)))").alias("days"),
-            ).withColumn("fmt", F.lit(fmt))
-            both = g if both is None else both.unionByName(g)
-        rows = both.collect()
-        for fmt in ("delta", "iceberg"):
-            got = [r[:-1] for r in rows if r["fmt"] == fmt]
-            bad = compare(got, both.columns[:-1], want, want_cols)
-            if bad:
-                return f"{fmt}: {bad}"
-        return None
-
-    def write(self, ctx: Ctx):
-        """Create both tables from orders, then append a small batch."""
-        base = load_table(ctx.spark, ctx.inputs, "orders")
-        self.input_bytes += os.path.getsize(os.path.join(ctx.inputs, "orders.parquet"))
-        batch = self._in(ctx, "append")
-        with ctx.span("delta.write"):
-            delta.write_delta(ctx.spark, self.d, base, mode="overwrite")
-            delta.write_delta(ctx.spark, self.d, batch)
-        with ctx.span("iceberg.write"):
-            iceberg.write_iceberg(ctx.spark, self.i, base)
-            iceberg.write_iceberg(ctx.spark, self.i, batch)
-
-    def update(self, ctx: Ctx):
-        self.input_bytes += os.path.getsize(os.path.join(self.lake, "update_keys.parquet"))
-        hit = F.col("o_orderkey").isin(self.update_keys)
-        with ctx.span("delta.update"):
-            delta.update_delta(
-                ctx.spark, self.d, hit,
-                {"o_orderstatus": F.lit("U"), "o_totalprice": F.col("o_totalprice") + F.lit(1.0)},
-            )
-        with ctx.span("iceberg.merge"):
-            # merge-on-read upsert of the read-modify-written rows
-            src = (
-                iceberg.read_iceberg(ctx.spark, self.i)
-                .filter(hit)
-                .withColumn("o_orderstatus", F.lit("U"))
-                .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
-            )
-            iceberg.merge_iceberg(ctx.spark, self.i, src, ["o_orderkey"])
-
-    def delete(self, ctx: Ctx):
-        keys = self._in(ctx, "delete_keys")
-        with ctx.span("delta.delete"):
-            delta.delete_delta(ctx.spark, self.d, F.col("o_orderkey").isin(self.delete_keys))
-        with ctx.span("iceberg.delete"):
-            iceberg.write_iceberg_equality_deletes(ctx.spark, self.i, keys)
-
-    def live_files(self, ctx: Ctx) -> tuple[int, int]:
-        return (
-            len(delta.read_delta(ctx.spark, self.d).inputFiles()),
-            len(iceberg.iceberg_live_files(self.i)),
-        )
-
-    def check_delete(self, ctx: Ctx, _res) -> str | None:
-        self.before_compact = self.live_files(ctx)
-        return self._fingerprints(ctx, ctx.oracle.orders_after_sql(True, True))
-
-    def compact(self, ctx: Ctx):
-        with ctx.span("delta.optimize"):
-            delta.optimize_delta(ctx.spark, self.d, target_files=1)
-        with ctx.span("iceberg.rewrite"):
-            iceberg.rewrite_iceberg_data_files(ctx.spark, self.i, target_files=1)
-
-    def check_compact(self, ctx: Ctx, _res) -> str | None:
-        before, after = self.before_compact, self.live_files(ctx)
-        if not (after[0] < before[0] and after[1] < before[1]):
-            return f"live files did not drop: before {before}, after {after}"
-        return self._fingerprints(ctx, ctx.oracle.orders_after_sql(True, True))
-
-    def read(self, ctx: Ctx):
-        out = {}
-        for fmt, reader, table in (("delta", delta.read_delta, self.d),
-                                   ("iceberg", iceberg.read_iceberg, self.i)):
-            with ctx.span(f"{fmt}.read"):
-                df = reader(ctx.spark, table).groupBy("o_orderstatus").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"),
-                )
-                out[fmt] = (df.columns, df.collect())
-        return out
-
-    def check_read(self, ctx: Ctx, res) -> str | None:
-        for fmt, (cols, rows) in res.items():
-            bad = ctx.oracle.check(ctx.oracle.status_totals_sql(), rows, cols)
-            if bad:
-                return f"{fmt}: {bad}"
-        return None
-
-    def ops(self) -> list[Op]:
-        def state(updated: bool, deleted: bool):
-            return lambda ctx, r: self._fingerprints(ctx, ctx.oracle.orders_after_sql(updated, deleted))
-
-        return [
-            Op("lake_write", self.write, state(False, False)),
-            Op("lake_update", self.update, state(True, False)),
-            Op("lake_delete", self.delete, self.check_delete),
-            Op("lake_compact", self.compact, self.check_compact),
-            Op("lake_read", self.read, self.check_read, read=True),
-        ]
-
-    def finish(self, ctx: Ctx) -> dict[str, float]:
-        written = _dir_bytes(self.d) + _dir_bytes(self.i)
-        # the checks found both tables equal to DuckDB's final state
-        final = ctx.oracle.con.execute(ctx.oracle.orders_after_sql(True, True)).fetch_arrow_table()
-        once = 2 * _parquet_bytes(final)
-        files = self.live_files(ctx)
-        return {
-            "write_amp": written / self.input_bytes,
-            "space_amp": written / once,
-            "delta.live_files": files[0],
-            "iceberg.live_files": files[1],
-        }
-
-
-WORKLOADS = {w.name: w for w in (EtlDaily(), CURATION, LakeMaint())}
+WORKLOADS = {w.name: w for w in (EtlDaily(), CURATION)}
