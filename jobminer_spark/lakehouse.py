@@ -22,9 +22,11 @@ actually guarantees:
   (Iceberg's manifest-list shape): merges load only intersecting
   shards and carry the rest by reference, so driver-resident
   metadata on the write path is O(touched shards), not O(n_files).
-* **Copy-on-write MERGE** — only data files whose [min_key, max_key]
-  interval intersects the update key range are rewritten; untouched
-  files are carried by reference into the next manifest. At 100 TB
+* **Copy-on-write MERGE** — a data file is rewritten only when one of
+  its rows takes an update or a delete. The batch's key buckets pick
+  the files that can hold a batch key; one per-file count over those
+  files joined with the batch picks the ones that change. Every other
+  file is carried by reference into the next manifest. At 100 TB
   with range-clustered keys this is the difference between rewriting
   gigabytes and rewriting everything.
 * **Snapshot isolation** — a reader resolves its manifest once; the
@@ -39,8 +41,11 @@ Scale shape: the manifest is O(n_files) JSON read on the driver (the
 same cost Delta pays for its log checkpoint); per-file stats come
 from ONE Spark aggregation over the freshly written files' _metadata;
 the merge's fact-side work is bounded by the affected files, and the
-key-existence probe for inserts is an anti-join against the snapshot
-(broadcast when the update batch is small).
+key-existence probe for inserts is an anti-join against the affected
+files' keys (broadcast when they are small), written on a helper thread
+while the per-file counts and the rewrite run. Each write's bucket
+exchange has an explicit width, so its one-file-per-bucket files are
+written by parallel tasks.
 """
 
 from __future__ import annotations
@@ -207,25 +212,63 @@ def _strip_file_scheme(p: str) -> str:
     return p
 
 
+def _discard(files: list[dict], shard_refs: list[dict]) -> None:
+    """Delete an uncommitted merge attempt's artifacts: the rw-/ins-
+    directories its data files live in (``<dir>/kb=N/part-*``) and its
+    new shard files. No manifest references them, and vacuum only
+    sweeps files referenced by the manifests it retires, so anything
+    left here would leak forever."""
+    for d in {os.path.dirname(os.path.dirname(f["path"])) for f in files}:
+        shutil.rmtree(d, ignore_errors=True)
+    for ref in shard_refs:
+        try:
+            os.unlink(ref["path"])
+        except OSError:
+            pass
+
+
 def _write_files(
-    spark: SparkSession, table: str, df: DataFrame, key_col: str, tag: str
+    spark: SparkSession,
+    table: str,
+    df: DataFrame,
+    key_col: str,
+    tag: str,
+    max_buckets: int | None = None,
 ) -> list[dict]:
     """Write ``df`` as range-clustered immutable data files under a
     fresh subdirectory and return their manifest entries (path,
     min/max key stats, row count). One file per key bucket: the
     repartition on the bucket column puts each bucket in exactly one
     task, and partitionBy splits that task's output one file per
-    bucket directory. An EMPTY ``df`` is written like any other (the
-    write is often the job that also materializes caller-observed
-    metrics — see merge_into), produces no parquet parts, and returns
-    an empty entry list with the stray directory removed."""
+    bucket directory. The exchange gets an explicit width —
+    ``spark.sql.shuffle.partitions``, capped by ``max_buckets`` when
+    the caller knows how many buckets the frame can hold — because
+    AQE coalesces a width-less ``repartition("kb")`` of a small frame
+    into ONE task, which then writes every bucket file in turn. An
+    EMPTY ``df`` produces no parquet parts and returns an empty entry
+    list with the stray directory removed; a write that raises leaves
+    no directory behind."""
     sub = os.path.join(table, "data", f"{tag}-{uuid.uuid4().hex[:8]}")
-    (
-        df.withColumn("kb", F.expr(_bucket_expr(key_col)))
-        .repartition("kb")
-        .write.partitionBy("kb")
-        .parquet(sub)
-    )
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if max_buckets is not None:
+        width = max(1, min(width, max_buckets))
+    try:
+        (
+            df.withColumn("kb", F.expr(_bucket_expr(key_col)))
+            .repartition(width, "kb")
+            .write.partitionBy("kb")
+            .parquet(sub)
+        )
+        return _file_entries(spark, sub, key_col)
+    except BaseException:
+        shutil.rmtree(sub, ignore_errors=True)
+        raise
+
+
+def _file_entries(spark: SparkSession, sub: str, key_col: str) -> list[dict]:
+    """Manifest entries for the parquet files freshly written under
+    ``sub`` (sorted by min_key); [] with ``sub`` removed when the
+    write produced no parts."""
     # Driver-side manifest bound (stated, tested in
     # tests/test_lakehouse.py::test_manifest_bound_many_buckets): the
     # manifest holds one ~150-byte entry per live data file, and files
@@ -407,6 +450,23 @@ def read_snapshot(
     return _snapshot_reader(spark, m).parquet(*paths)
 
 
+def _merge_flags(j: DataFrame, matched_condition, matched_delete):
+    """(take_delete, take_update) over a table-join-batch frame ``j``:
+    a matched row is deleted when ``matched_delete`` holds (evaluated
+    first, like SQL MERGE's clause ordering), else takes the update
+    when ``matched_condition`` holds. A NULL condition does not hold,
+    as in SQL. The per-file counts and the rewrite build their flags
+    here, so a file is rewritten exactly when the counts say one of
+    its rows changes."""
+    matched = F.col("__uk").isNotNull()
+    no = F.lit(False)
+    take_delete = (
+        matched & F.coalesce(matched_delete(j), no) if matched_delete else no
+    )
+    take_update = matched & ~take_delete & F.coalesce(matched_condition(j), no)
+    return take_delete, take_update
+
+
 def merge_into(
     spark: SparkSession,
     table: str,
@@ -435,27 +495,41 @@ def merge_into(
     batch to its latest change per key first) — a duplicate key would
     fan out the matched row.
 
-    Only files whose key-bucket set intersects the update batch's
-    distinct buckets are rewritten; inserts are written as their own
-    files. Returns commit stats {version, n_files_rewritten,
-    n_files_carried, n_insert_files, n_updates_applied, n_deletes,
-    n_inserts}. On losing the commit race, re-reads the new snapshot
-    and re-applies (bounded retries) — the standard rebase loop.
+    A data file is rewritten only when one of its rows takes an update
+    or a delete. The batch's distinct key buckets pick the *affected*
+    files (the only ones that can hold a batch key); one aggregate
+    over them joined with the batch counts, per file, the rows that
+    take an update and the rows that take a delete. Files with a
+    non-zero count are rewritten, all others are carried by reference,
+    and inserts are written as their own files. Returns commit stats:
+    ``version``; ``n_files_rewritten``, the new files written in place
+    of the changed ones (one per bucket among them; 0 when deletes
+    emptied them); ``n_files_carried``, every file carried by
+    reference, unchanged affected files included; ``n_insert_files``;
+    ``n_updates_applied`` and ``n_deletes`` from the per-file counts;
+    ``n_inserts``. On losing the commit race, re-reads the new
+    snapshot and re-applies (bounded retries) — the standard rebase
+    loop. An attempt that raises deletes the files it wrote before
+    the error propagates.
     """
     import bisect
+    from concurrent.futures import ThreadPoolExecutor
 
-    # The update batch is read by THREE independent consumers per
-    # attempt (the bucket collect, the rewrite join's build side, and
-    # the insert anti-join probe), and each re-evaluation re-runs the
-    # caller's whole update pipeline (often multiple scans/joins of
-    # source tables). A LAZY localCheckpoint materializes the batch
-    # once inside the first consuming job (the bucket collect) and the
-    # other consumers read the persisted rows — the r20 loop-fold
-    # discipline (guide §5: reuse × recompute-cost). Update batches
-    # are bounded (a merge ships a batch, not a table), so persisting
-    # them is the standard pre-fan-out stage at any scale; rebase
-    # retries re-read the same persisted batch, which is also the
-    # determinism the retry loop wants.
+    from pyspark import inheritable_thread_target
+
+    # The update batch is read by several independent consumers per
+    # attempt (the bucket collect, the per-file counts, the rewrite
+    # join's build side, the insert anti-join), and each
+    # re-evaluation re-runs the caller's whole update pipeline (often
+    # multiple scans/joins of source tables). A LAZY localCheckpoint
+    # materializes the batch once inside the first consuming job (the
+    # bucket collect) and the other consumers read the persisted rows
+    # — the r20 loop-fold discipline (guide §5: reuse ×
+    # recompute-cost). Update batches are bounded (a merge ships a
+    # batch, not a table), so persisting them is the standard
+    # pre-fan-out stage at any scale; rebase retries re-read the same
+    # persisted batch, which is also the determinism the retry loop
+    # wants.
     updates = updates.localCheckpoint(eager=False)
 
     # File pruning key: the update batch's DISTINCT key buckets, not
@@ -515,149 +589,158 @@ def merge_into(
             F.col(key).alias("__uk"),
             *[F.col(c).alias(f"__u_{c}") for c in upd_cols if c != key],
         )
-        new_files: list[dict] = []
-        n_updates_applied = 0
-        n_deletes = 0
-        rewrite_fut = None
-        obs = None
-        if affected:
-            from pyspark.sql import Observation
-
-            old = _snapshot_reader(spark, m).parquet(
-                *[f["path"] for f in affected]
-            )
-            if table_cols is None:
-                table_cols = old.columns
-            j = old.join(u, old[key] == u["__uk"], "left")
-            matched = F.col("__uk").isNotNull()
-            take_delete = (
-                (matched & matched_delete(j)) if matched_delete else F.lit(False)
-            )
-            take_update = matched & ~take_delete & matched_condition(j)
-            # Update/delete tallies ride the REWRITE WRITE JOB itself
-            # (Observation over the pre-filter join) instead of a
-            # separate agg action — the join is the merge's expensive
-            # half, and a standalone count evaluated it twice. A
-            # matched-delete can empty the affected files entirely;
-            # _write_files handles the empty frame (no parts → no
-            # manifest entries) so the write is also the one
-            # guaranteed action the metrics need. Fresh Observation
-            # per rebase attempt: metrics pin at first use.
-            obs = Observation()
-            j = j.observe(
-                obs,
-                F.count(F.when(take_update, 1)).alias("nu"),
-                F.count(F.when(take_delete, 1)).alias("nd"),
-            )
-            rewritten = j.filter(~take_delete).select(
-                *[
-                    F.col(c)
-                    if c == key
-                    else F.when(take_update, F.col(f"__u_{c}"))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    for c in table_cols
-                ]
-            )
-            # Submitted, not awaited: the insert write below is an
-            # independent job (see its comment); metrics are read from
-            # `obs` after the future resolves. obs.get note (applies
-            # there): an EMPTY rewrite (all affected rows matched-
-            # deleted) prunes the CollectMetrics node via AQE's
-            # empty-relation propagation, so the fallback derives
-            # nu/nd from the affected files' row stats instead.
-            from concurrent.futures import ThreadPoolExecutor
-
-            _pool = ThreadPoolExecutor(max_workers=1)
-            rewrite_fut = _pool.submit(
-                _write_files, spark, table, rewritten, key, "rw"
-            )
-            _pool.shutdown(wait=False)
-
-        # Key-existence probe for inserts: a key's bucket is
-        # key // KEY_BUCKET (floor semantics on BOTH engines —
-        # _bucket_expr), and every file entry records true
-        # [min_key, max_key], so a file can hold a batch key ONLY if
-        # its bucket range intersects the batch's buckets — i.e. only
-        # the AFFECTED files. Probing those instead of the whole
-        # snapshot turns the anti-join's scan from O(table) into
-        # O(touched files), and needs no shard loads beyond the ones
-        # the rewrite already paid for.
-        cand = (
+        inserts = (
             updates.filter(insert_condition(updates))
             if insert_condition
             else updates
         )
         if affected:
-            # `old` already reads exactly the affected files — reuse
-            # its relation instead of building a second reader over
-            # the same paths (one frame build per merge saved).
-            inserts = cand.join(old.select(key), key, "left_anti")
-        else:
-            inserts = cand  # no existing file can contain these keys
+            reader = _snapshot_reader(spark, m)
+            old = reader.parquet(*[f["path"] for f in affected])
+            if table_cols is None:
+                table_cols = old.columns
+            # Key-existence probe for inserts: a key's bucket is
+            # key // KEY_BUCKET (floor semantics on BOTH engines —
+            # _bucket_expr), and every file entry records true
+            # [min_key, max_key], so a file can hold a batch key ONLY
+            # if its bucket range intersects the batch's buckets — i.e.
+            # only the AFFECTED files. Probing those instead of the
+            # whole snapshot turns the anti-join's scan from O(table)
+            # into O(touched files).
+            inserts = inserts.join(old.select(key), key, "left_anti")
         if table_cols is not None:
             inserts = inserts.select(*table_cols)
-        # The insert count is the sum of the written files' row stats —
-        # a separate .count() would evaluate the anti-join a second
-        # time just to decide whether to write; writing unconditionally
-        # (empty-safe) costs the same single evaluation either way.
-        #
-        # The rewrite write above and this insert write are INDEPENDENT
-        # jobs: copy-on-write never mutates the affected files the
-        # anti-join probes, and neither write reads the other's output.
-        # Overlap them on a two-thread pool (guide §2.6: actions are
-        # only sequential because the driver calls them sequentially)
-        # so the insert job back-fills executors the rewrite's write
-        # tail leaves idle — the merge's wall clock becomes
-        # max(rewrite, insert) instead of their sum. The rewrite
-        # branch was already submitted above as `rewrite_fut`.
-        insert_files = _write_files(spark, table, inserts, key, "ins")
-        n_inserts = sum(f["n_rows"] for f in insert_files)
-        if rewrite_fut is not None:
-            new_files = rewrite_fut.result()
-            if new_files:
-                got = obs.get  # the write was the materializing action
-                n_updates_applied, n_deletes = got["nu"], got["nd"]
-            else:
-                # Empty rewrite ⇒ every affected row was matched-deleted
-                # (see the Observation note above for why obs.get is
-                # unusable on an empty write).
-                n_updates_applied = 0
-                n_deletes = sum(f["n_rows"] for f in affected)
 
-        inline, new_shard_refs = _split_files(
-            table, carried + new_files + insert_files
+        # The insert write is INDEPENDENT of the per-file counts and
+        # of the rewrite: copy-on-write never mutates the affected
+        # files the anti-join probes, and neither write reads the
+        # other's output. It runs on a helper thread (guide §2.6:
+        # actions are only sequential because the driver calls them
+        # sequentially) while this thread counts and rewrites, so the
+        # merge's wall clock is max(insert, counts + rewrite) instead
+        # of their sum. The helper keeps the caller's job group and
+        # other local properties. The insert count is the sum of the
+        # written files' row stats: writing unconditionally
+        # (empty-safe) evaluates the anti-join once.
+        _pool = ThreadPoolExecutor(max_workers=1)
+        insert_fut = _pool.submit(
+            inheritable_thread_target(spark)(_write_files),
+            spark,
+            table,
+            inserts,
+            key,
+            "ins",
+            max_buckets=len(kbs),
         )
-        manifest = {
-            "version": base_v + 1,
-            "parent": base_v,
-            "key_col": key,
-            "columns": table_cols,
-            "files": inline,
-        }
-        if m.get("schema"):
-            manifest["schema"] = m["schema"]
-        if carried_refs or new_shard_refs:
-            manifest["file_shards"] = carried_refs + new_shard_refs
+        _pool.shutdown(wait=False)
+
+        new_files: list[dict] = []
+        insert_files: list[dict] = []
+        new_shard_refs: list[dict] = []
+        n_updates_applied = 0
+        n_deletes = 0
         try:
+            try:
+                changed = []
+                if affected:
+                    # Per-file change counts: ONE aggregate over the
+                    # affected files joined (inner) with the batch,
+                    # grouped by file. Only files where some row takes
+                    # an update or a delete are rewritten; an
+                    # insert-only batch, or one whose matched rows all
+                    # keep their values, rewrites nothing.
+                    fp = old.withColumn("__fp", F.col("_metadata.file_path"))
+                    j = fp.join(u, fp[key] == u["__uk"])
+                    take_delete, take_update = _merge_flags(
+                        j, matched_condition, matched_delete
+                    )
+                    counts = {
+                        os.path.realpath(_strip_file_scheme(r["__fp"])): (
+                            r["nu"],
+                            r["nd"],
+                        )
+                        for r in j.groupBy("__fp")
+                        .agg(
+                            F.count(F.when(take_update, 1)).alias("nu"),
+                            F.count(F.when(take_delete, 1)).alias("nd"),
+                        )
+                        .collect()
+                    }
+                    by_path = {
+                        os.path.realpath(_strip_file_scheme(f["path"])): f
+                        for f in affected
+                    }
+                    if not counts.keys() <= by_path.keys():
+                        # a changed file matching no entry would be
+                        # carried with its old rows: refuse rather than
+                        # lose the batch's changes
+                        raise RuntimeError(
+                            f"merge_into: scanned files "
+                            f"{sorted(counts.keys() - by_path.keys())} "
+                            f"are not in manifest v{base_v} of {table}"
+                        )
+                    for p, f in by_path.items():
+                        nu, nd = counts.get(p, (0, 0))
+                        n_updates_applied += nu
+                        n_deletes += nd
+                        (changed if nu or nd else carried).append(f)
+                if changed:
+                    old = reader.parquet(*[f["path"] for f in changed])
+                    j = old.join(u, old[key] == u["__uk"], "left")
+                    take_delete, take_update = _merge_flags(
+                        j, matched_condition, matched_delete
+                    )
+                    rewritten = j.filter(~take_delete).select(
+                        *[
+                            F.col(c)
+                            if c == key
+                            else F.when(take_update, F.col(f"__u_{c}"))
+                            .otherwise(F.col(c))
+                            .alias(c)
+                            for c in table_cols
+                        ]
+                    )
+                    new_files = _write_files(
+                        spark,
+                        table,
+                        rewritten,
+                        key,
+                        "rw",
+                        max_buckets=len(
+                            {f["min_key"] // KEY_BUCKET for f in changed}
+                        ),
+                    )
+            finally:
+                # Await the insert on every path, so its files can be
+                # discarded; its own error surfaces only when this
+                # thread's work succeeded.
+                if insert_fut.exception() is None:
+                    insert_files = insert_fut.result()
+            insert_files = insert_fut.result()
+
+            inline, new_shard_refs = _split_files(
+                table, carried + new_files + insert_files
+            )
+            manifest = {
+                "version": base_v + 1,
+                "parent": base_v,
+                "key_col": key,
+                "columns": table_cols,
+                "files": inline,
+            }
+            if m.get("schema"):
+                manifest["schema"] = m["schema"]
+            if carried_refs or new_shard_refs:
+                manifest["file_shards"] = carried_refs + new_shard_refs
             _commit(table, manifest)
-        except CommitConflict:
-            # Rebase: this attempt's freshly written rw-/ins- files
-            # and shard files are referenced by NO manifest (the
-            # winner's isn't ours) and would otherwise leak forever —
-            # vacuum only sweeps files referenced by the manifests it
-            # retires. Delete the attempt's artifacts before
-            # re-applying. Carried shard refs belong to the base
-            # version and stay.
-            for f in new_files + insert_files:
-                d = os.path.dirname(os.path.dirname(f["path"]))
-                shutil.rmtree(d, ignore_errors=True)
-            for ref in new_shard_refs:
-                try:
-                    os.unlink(ref["path"])
-                except OSError:
-                    pass
-            continue  # re-read the new latest and re-apply
+        except BaseException as e:
+            # No manifest references this attempt's rw-/ins- files
+            # and shard files (on a conflict the winner's isn't ours).
+            # Carried shard refs belong to the base version and stay.
+            _discard(new_files + insert_files, new_shard_refs)
+            if isinstance(e, CommitConflict):
+                continue  # rebase: re-read the new latest and re-apply
+            raise
         return {
             "version": base_v + 1,
             "n_files_rewritten": len(new_files),
@@ -666,7 +749,7 @@ def merge_into(
             "n_insert_files": len(insert_files),
             "n_updates_applied": n_updates_applied,
             "n_deletes": n_deletes,
-            "n_inserts": n_inserts,
+            "n_inserts": sum(f["n_rows"] for f in insert_files),
         }
     raise CommitConflict(f"gave up after {max_retries} rebases on {table}")
 

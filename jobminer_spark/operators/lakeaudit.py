@@ -93,11 +93,18 @@ def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
     # snapshot (guide §2.6).
     from concurrent.futures import ThreadPoolExecutor as _TPE
 
+    from pyspark import inheritable_thread_target
+
+    # helper threads keep the caller's job group (and other local
+    # properties), so their jobs are attributed to this query
+    _inherit = inheritable_thread_target(spark)
     _r1_pool = _TPE(max_workers=1)
     r1_fut = _r1_pool.submit(
-        lambda: v1.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("price_q").alias("ck")
-        ).first()
+        _inherit(
+            lambda: v1.agg(
+                F.count(F.lit(1)).alias("n"), F.sum("price_q").alias("ck")
+            ).first()
+        )
     )
     _r1_pool.shutdown(wait=False)
 
@@ -127,16 +134,16 @@ def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
     # reads the same immutable v2 and commits v3) without changing a
     # single value — guide §2.6 job overlap, same as the post-merge
     # read-back pool below.
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
     _r2_pool = _TPE(max_workers=1)
     r2_fut = _r2_pool.submit(
-        lambda: v2.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("price_q").alias("ck"),
-            F.count(F.when(F.col("o_orderstatus") == "X", 1)).alias("nx"),
-            F.count(F.when(F.col("o_orderstatus") == "N", 1)).alias("nn"),
-        ).first()
+        _inherit(
+            lambda: v2.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("price_q").alias("ck"),
+                F.count(F.when(F.col("o_orderstatus") == "X", 1)).alias("nx"),
+                F.count(F.when(F.col("o_orderstatus") == "N", 1)).alias("nn"),
+            ).first()
+        )
     )
     _r2_pool.shutdown(wait=False)
 
@@ -238,10 +245,10 @@ def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
             for r in feed.collect()
         ]
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        r3_f, tt_f, feed_f = _pool.submit(_r3), _pool.submit(_tt), _pool.submit(_feed)
+    with _TPE(max_workers=3) as _pool:
+        r3_f, tt_f, feed_f = (
+            _pool.submit(_inherit(f)) for f in (_r3, _tt, _feed)
+        )
         r3, tt, change_rows = r3_f.result(), tt_f.result(), feed_f.result()
 
     result = {

@@ -264,10 +264,14 @@ def attribution_removal_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap distinct back-fills the window job's straggler tail.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # the helper threads keep the caller's job group
+    _inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        edges_f = _pool.submit(edges.collect)
+        edges_f = _pool.submit(_inherit(edges.collect))
         chan_f = _pool.submit(
-            lambda: ev.select("event_type").distinct().collect()
+            _inherit(lambda: ev.select("event_type").distinct().collect())
         )
         rows, chan_rows = edges_f.result(), chan_f.result()
     c: dict[str, dict[str, int]] = {}

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
 from unittest import mock
 
 import pytest
@@ -32,6 +33,24 @@ def _df(spark, n=20000, status="O"):
         F.lit(status).alias("status"),
         (F.col("id") * 10).alias("v"),
     )
+
+
+def _rewrite_and_insert_batch(spark):
+    """Changes a row of bucket 0 (a rewrite) and adds a far key (an
+    insert) in a table made with ``_df(spark, n=1000)``."""
+    return spark.createDataFrame(
+        [(3, "X", -1), (5_000_000, "N", 7)], "k long, status string, v long"
+    )
+
+
+@contextmanager
+def _job_group(sc, group):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
 
 
 def test_create_and_read_roundtrip(spark, table_dir):
@@ -82,9 +101,15 @@ def test_matched_condition_false_keeps_old_row(spark, table_dir):
     )
     stats = lh.merge_into(spark, table_dir, upd, lambda j: j["status"] == "O")
     # every key matched but the condition held for none: no updates,
-    # no inserts, still a new (noop-rewrite) version
+    # no inserts, and no file rewritten — the new version carries
+    # every file of v1 by reference
     assert stats["n_updates_applied"] == 0
     assert stats["n_inserts"] == 0
+    assert stats["n_files_rewritten"] == 0
+    assert stats["n_files_carried"] == len(lh._read_manifest(table_dir, 1)["files"])
+    assert lh._read_manifest(table_dir, 2)["files"] == lh._read_manifest(
+        table_dir, 1
+    )["files"]
     snap = lh.read_snapshot(spark, table_dir)
     assert snap.filter(F.col("status") == "X").count() == 0
     assert snap.count() == 1000
@@ -114,6 +139,74 @@ def test_file_pruning_rewrites_only_intersecting_buckets(spark, table_dir):
     assert stats["n_files_carried"] == 4
     assert stats["n_insert_files"] == 1
     assert lh.read_snapshot(spark, table_dir).count() == 20003
+
+
+def test_only_files_with_a_changed_row_are_rewritten(spark, table_dir):
+    """The batch touches two bucket files but changes a row in only
+    one: the other file is carried by reference, unread by the
+    rewrite, and its matched row keeps its values."""
+    lh.create_table(spark, table_dir, _df(spark, n=2 * lh.KEY_BUCKET), "k")
+    b1 = lh.KEY_BUCKET + 5
+    upd = spark.createDataFrame(
+        [(5, "X", -1), (b1, "O", -1), (3 * lh.KEY_BUCKET, "N", 7)],
+        "k long, status string, v long",
+    )
+    # a matched row takes the batch row only when its status changes
+    stats = lh.merge_into(
+        spark, table_dir, upd, lambda j: j["status"] != F.col("__u_status")
+    )
+    assert stats["n_files_rewritten"] == 1
+    assert stats["n_files_carried"] == 1
+    assert stats["n_insert_files"] == 1
+    assert stats["n_updates_applied"] == 1
+    assert stats["n_deletes"] == 0
+    assert stats["n_inserts"] == 1
+    v1_files = lh._read_manifest(table_dir, 1)["files"]
+    v2_files = lh._read_manifest(table_dir, 2)["files"]
+    assert v1_files[1] in v2_files  # bucket 1's file, carried as is
+    assert v1_files[0] not in v2_files
+    snap = lh.read_snapshot(spark, table_dir)
+    assert snap.count() == 2 * lh.KEY_BUCKET + 1
+    rows = {
+        r["k"]: (r["status"], r["v"])
+        for r in snap.filter(F.col("k").isin(5, b1, 3 * lh.KEY_BUCKET)).collect()
+    }
+    assert rows == {5: ("X", -1), b1: ("O", b1 * 10), 3 * lh.KEY_BUCKET: ("N", 7)}
+    assert snap.filter(F.col("v") != F.col("k") * 10).count() == 2
+
+
+def test_create_writes_one_file_per_bucket_from_parallel_tasks(spark, table_dir):
+    """Bucket files are written by several tasks, not funnelled through
+    the one task AQE would coalesce a small repartition into — and
+    still exactly one file per bucket."""
+    n_buckets = 64
+    # one input partition: only the write stage can run several tasks
+    wide = spark.range(0, n_buckets, 1, numPartitions=1).select(
+        (F.col("id") * lh.KEY_BUCKET).alias("k"),
+        F.lit("O").alias("status"),
+        F.col("id").alias("v"),
+    )
+    sc = spark.sparkContext
+    old_width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        with _job_group(sc, "lakehouse-create-width"):
+            lh.create_table(spark, table_dir, wide, "k")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_width)
+    tracker = sc.statusTracker()
+    stage_ids = [
+        sid
+        for jid in tracker.getJobIdsForGroup("lakehouse-create-width")
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert max(tracker.getStageInfo(sid).numTasks for sid in stage_ids) > 1
+    files = lh._read_manifest(table_dir, 1)["files"]
+    assert len(files) == n_buckets
+    assert sorted(f["min_key"] // lh.KEY_BUCKET for f in files) == list(
+        range(n_buckets)
+    )
+    assert all(f["min_key"] // lh.KEY_BUCKET == f["max_key"] // lh.KEY_BUCKET for f in files)
 
 
 def test_time_travel_snapshot_isolation(spark, table_dir):
@@ -204,6 +297,56 @@ def test_matched_delete_empties_every_affected_file(spark, table_dir):
     assert snap.agg(F.min("k")).first()[0] == lh.KEY_BUCKET
     m = lh._read_manifest(table_dir, 2)
     assert all(f["n_rows"] > 0 for f in m["files"])
+
+
+@pytest.mark.parametrize("failing", ["ins", "rw"])
+def test_failed_write_removes_the_other_writes_files(spark, table_dir, failing):
+    """The insert is written on a helper thread while the rewrite runs.
+    When either write raises, the merge must wait for the other one,
+    delete the files it wrote (no manifest will reference them) and
+    re-raise the error; no version is committed."""
+    import threading
+
+    lh.create_table(spark, table_dir, _df(spark, n=1000), "k")
+    real_write = lh._write_files
+    other_done = threading.Event()
+
+    def failing_write(*args, **kwargs):
+        if args[4] == failing:
+            # fail only once the other write has written its files, so
+            # a write left running cannot hide a leak from the check
+            other_done.wait(120)
+            raise RuntimeError(f"injected {failing} failure")
+        try:
+            return real_write(*args, **kwargs)
+        finally:
+            other_done.set()
+
+    with mock.patch.object(lh, "_write_files", side_effect=failing_write):
+        with pytest.raises(RuntimeError, match=f"injected {failing} failure"):
+            lh.merge_into(spark, table_dir, _rewrite_and_insert_batch(spark), lambda j: F.lit(True))
+    assert other_done.is_set()  # the other write did run
+    assert lh.latest_version(table_dir) == 1
+    data = os.path.join(table_dir, "data")
+    assert [d for d in os.listdir(data) if d.startswith(("rw-", "ins-"))] == []
+    assert lh.read_snapshot(spark, table_dir).filter(F.col("status") == "X").count() == 0
+
+
+def test_merge_helper_thread_keeps_the_callers_job_group(spark, table_dir):
+    """Jobs the merge starts on its helper thread (the insert write)
+    belong to the caller's job group, like the ones it starts on the
+    calling thread."""
+    lh.create_table(spark, table_dir, _df(spark, n=1000), "k")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    with _job_group(sc, "lakehouse-merge-group"):
+        stats = lh.merge_into(
+            spark, table_dir, _rewrite_and_insert_batch(spark), lambda j: F.lit(True)
+        )
+    assert stats["n_files_rewritten"] == 1 and stats["n_inserts"] == 1
+    assert tracker.getJobIdsForGroup("lakehouse-merge-group")
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
 
 
 def _data_files_on_disk(table_dir):
