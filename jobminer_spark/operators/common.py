@@ -131,12 +131,7 @@ def bucket_sql(key_sql: str, n_buckets: int = 100) -> str:
     )
 
 
-def word_shingles(
-    docs,
-    n: int = 3,
-    max_df: int | None = None,
-    broadcast_hot: bool = True,
-):
+def word_shingles(docs, n: int = 3, max_df: int | None = None):
     """(doc_id, shingle) distinct word n-grams via array slicing —
     pure built-ins, stays in whole-stage codegen.
 
@@ -148,9 +143,7 @@ def word_shingles(
     the shingle set once, and a non-broadcast anti-join would shuffle
     it a second time (measured ~15% slower end-to-end at sf0.1). An
     over-limit hot set fails loudly (Spark's broadcast size error), not
-    silently wrong; for adversarial corpora where that bound is real,
-    pass ``broadcast_hot=False`` to take the shuffle anti-join
-    instead."""
+    silently wrong."""
     sh = ngram_rows_arrow(
         # spread_scan (r20): a single-row-group input would serialize
         # shingle generation, and a keyed repartition here is
@@ -169,9 +162,7 @@ def word_shingles(
             .filter(F.col("df") > max_df)
             .select("shingle")
         )
-        sh = sh.join(
-            F.broadcast(hot) if broadcast_hot else hot, "shingle", "left_anti"
-        )
+        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
     return sh
 
 
@@ -369,16 +360,15 @@ def ngram_rows_arrow(
     return src.mapInArrow(_gen, out_schema)
 
 
-def posting_pairs_arrow(idx, list_col: str = "ds", with_sizes: bool = True):
-    """(doc_a, doc_b) candidate-pair rows + per-posting size markers
-    (doc_a, NULL) from an inverted index of per-shingle doc-id arrays —
-    the vectorized Arrow twin of the in-row C(df,2) struct transform
-    (interpreted lambdas, no codegen). Pair multiset and marker
-    multiset are identical: for each list, every (ds[i], ds[j]) with
-    i < j plus one (ds[i], NULL) per element, exactly what
-    ``flatten(transform(...slice...))`` + the size-marker transform
-    emit. Requires a bigint element type (callers with non-integer doc
-    ids keep the expression path)."""
+def posting_pairs_arrow(idx, list_col: str = "ds"):
+    """(doc_a, doc_b) candidate-pair rows from an inverted index of
+    per-shingle doc-id arrays — the vectorized Arrow twin of the
+    in-row C(df,2) struct transform (interpreted lambdas, no codegen).
+    The pair multiset is identical: for each list, every
+    (ds[i], ds[j]) with i < j, exactly what
+    ``flatten(transform(...slice...))`` emits. Requires a bigint
+    element type (callers with non-integer doc ids keep the
+    expression path)."""
 
     def _gen(batches):
         import numpy as np
@@ -394,12 +384,7 @@ def posting_pairs_arrow(idx, list_col: str = "ds", with_sizes: bool = True):
                 zero_copy_only=False
             ).astype(np.int64)
             starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            if with_sizes:
-                out_a = [vals]
-                out_b = [np.zeros(len(vals), dtype=np.int64)]
-                null_mask = [np.ones(len(vals), dtype=bool)]
-            else:
-                out_a, out_b, null_mask = [], [], []
+            out_a, out_b = [], []
             for L in np.unique(lens):
                 if L < 2:
                     continue
@@ -408,14 +393,11 @@ def posting_pairs_arrow(idx, list_col: str = "ds", with_sizes: bool = True):
                 iu, ju = np.triu_indices(int(L), k=1)
                 out_a.append(mat[:, iu].ravel())
                 out_b.append(mat[:, ju].ravel())
-                null_mask.append(np.zeros(rows.size * iu.size, dtype=bool))
             if not out_a:
                 continue
-            a = np.concatenate(out_a)
-            b = np.concatenate(out_b)
-            mk = np.concatenate(null_mask)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(a), pa.array(b, mask=mk)], names=["doc_a", "doc_b"]
+                [pa.array(np.concatenate(out_a)), pa.array(np.concatenate(out_b))],
+                names=["doc_a", "doc_b"],
             )
 
     return idx.select(list_col).mapInArrow(_gen, "doc_a bigint, doc_b bigint")

@@ -17,6 +17,8 @@ Scale notes baked into each operator:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -304,7 +306,7 @@ def pair_counts_from_doclists(idx: DataFrame) -> DataFrame:
     self-join of the posting lists. Shared by the batch dedup path and
     the incremental-admission probe (increment.py)."""
     return (
-        _posting_pairs_arrow(idx.filter(F.size("ds") >= 2), "ds", with_sizes=False)
+        _posting_pairs_arrow(idx.filter(F.size("ds") >= 2), "ds")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
@@ -510,9 +512,8 @@ def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     hot-set anti-join in a single aggregation); one JVM md5 per
     DISTINCT shingle (index row) lifts to all K components via the
     affine family. A fully-fused mapInArrow variant (per-task dedup +
-    hashlib md5 + numpy affine mins, byte-identical signatures —
-    scripts/r20_verify_minhash_fused.py) was shipped mid-r20 and then
-    MEASURED OUT under this sandbox's degraded CPU conditions: its
+    hashlib md5 + numpy affine mins, byte-identical signatures) was
+    shipped mid-r20 and then MEASURED OUT under this sandbox's degraded CPU conditions: its
     per-distinct-shingle Python-level md5 loop (~1M hashlib calls at
     sf0.1, the one piece numpy cannot vectorize) lost 1.2–2× to the
     codegen'd JVM md5 across every interleaved A/B leg (JVM 4.3 s vs
@@ -1046,39 +1047,47 @@ def neardup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs: every near-dup doc labeled with its cluster's minimum
     doc_id (the canonical survivor).
 
-    Min-label propagation, all DataFrame ops: each round pushes the
-    current label across edges and takes the per-node min; converges
-    in O(graph diameter) rounds (driver checks a changed-count
-    action). Per-round `localCheckpoint` cuts the lineage so round N
-    doesn't replay rounds 1..N-1. Near-dup graphs are overwhelmingly
-    tiny cliques, so diameter — and the round count — stays small at
-    any corpus size; a 100 TB corpus would swap the loop body for the
-    large-star/small-star variant of the same primitive, not a
-    different algorithm. The oracle computes the same fixpoint as a
-    recursive-CTE transitive closure (tractable at oracle scale
-    only).
+    All DataFrame ops (see :func:`connected_components`): near-dup
+    graphs are overwhelmingly tiny cliques, so the first driver action
+    usually settles every label, and adversarial long chains still
+    converge in O(log² n) rounds. The oracle computes the same
+    fixpoint as a recursive-CTE transitive closure (tractable at
+    oracle scale only).
     """
     docs = load_table(spark, sf_dir, "documents")
-    edges = _neardup_edges(docs)
-    return connected_components_propagation(edges)
+    return connected_components(_neardup_edges(docs))
 
 
-def connected_components_propagation(
-    edges: DataFrame,
-    max_rounds: int = 20,
-    rounds_out: list[int] | None = None,
-    require_converged: bool = False,
+def _round_cap(n_nodes: int) -> int:
+    """Rounds allowed before :func:`connected_components` gives up:
+    ⌈log₂(n+1)⌉² + 1, the O(log² n) bound of its later rounds with
+    one round to spare."""
+    return math.ceil(math.log2(n_nodes + 1)) ** 2 + 1
+
+
+def connected_components(
+    edges: DataFrame, rounds_out: list[int] | None = None
 ) -> DataFrame:
-    """Min-label propagation over (doc_a, doc_b) edges; returns
-    (doc_id, component). O(diameter) rounds — the clique-shaped
-    near-dup default; see connected_components_star for the
-    adversarial-diameter variant. ``rounds_out``, when given, receives
-    the number of executed rounds (the scale claim is testable, not
-    prose — see test_cc_adversarial_chain_round_counts). With
-    ``require_converged`` the cap is a hard contract: hitting
-    max_rounds without a zero-change round raises instead of silently
-    returning partial labels — callers that make keep/drop decisions
-    from the labels must not act on an unconverged fixpoint."""
+    """Connected components over (doc_a, doc_b) edges in either
+    orientation; returns (doc_id, component) for every node that
+    appears in ``edges``, component = the component's minimum id.
+
+    Round 1 is a min-label propagation round and rides the first
+    driver action, so clique-shaped graphs (the common near-dup shape)
+    finish in one action. Every later round is parent-connect +
+    shortcut (Liu & Tarjan, "Simple Concurrent Labeling Algorithms for
+    Connected Components", SOSA 2019 — public algorithm): each edge
+    (v, w) offers label(w) to both v and label(v), then every node
+    takes its label's label. Parent-connect moves labels across whole
+    trees at once, so rounds stay O(log² n) whatever the component's
+    diameter; dropping it (min-propagation + shortcut alone) leaves a
+    permuted-id chain unconverged after 64 rounds.
+
+    Hitting ⌈log₂(n+1)⌉² + 1 rounds (n = node count) without a
+    zero-change round raises: callers make keep/drop and train/test
+    decisions from the labels and must never see a partial fixpoint.
+    ``rounds_out``, when given, receives the number of executed
+    rounds."""
     bidir = (
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
@@ -1101,8 +1110,9 @@ def connected_components_propagation(
         F.min(F.least(F.col("src"), F.col("dst"))).alias("component")
     ).localCheckpoint(eager=False)
 
-    # Convergence via the label-sum invariant: a round only ever
-    # LOWERS labels (per-node min over neighbors), so the decimal sum
+    # Convergence via the label-sum invariant: every round only ever
+    # LOWERS labels (each is a min over offers that include the old
+    # label; a label's label is never above it), so the decimal sum
     # strictly decreases until the fixpoint and equality <=> no label
     # changed. One bounded aggregate per round instead of the
     # join+filter+count diff (one fewer shuffle per round on the hot
@@ -1117,22 +1127,21 @@ def connected_components_propagation(
         # A NULL sum over a NON-empty frame can only mean decimal(38,0)
         # overflow under non-ANSI arithmetic: two NULL rounds would
         # compare None == None and declare convergence spuriously —
-        # silently satisfying even require_converged=True, which
-        # keep/drop admission relies on. 38 digits hold the sum of 1e19
-        # max-bigint labels, so this is unreachable for any real
-        # corpus; raise rather than guess. An EMPTY frame (no edges at
-        # all) sums to an honest 0 — the label keyset is fixed across
-        # rounds, so 0 == 0 correctly reports the trivial fixpoint.
+        # a partial fixpoint that keep/drop admission would act on.
+        # 38 digits hold the sum of 1e19 max-bigint labels, so this is
+        # unreachable for any real corpus; raise rather than guess. An
+        # EMPTY frame (no edges at all) sums to an honest 0 — the label
+        # keyset is fixed across rounds, so 0 == 0 correctly reports
+        # the trivial fixpoint.
         if s is None:
             if n == 0:
                 return 0
             raise ArithmeticError(
-                "label-sum convergence check overflowed decimal(38,0); "
-                "use connected_components_star for this graph"
+                "label-sum convergence check overflowed decimal(38,0)"
             )
         return s
 
-    def _round(cur: DataFrame) -> DataFrame:
+    def _propagate(cur: DataFrame) -> DataFrame:
         prop = bidir.join(
             cur, bidir.src == cur.doc_id
         ).select(F.col("dst").alias("doc_id"), "component")
@@ -1144,15 +1153,40 @@ def connected_components_propagation(
             .localCheckpoint(eager=False)
         )
 
+    def _connect_shortcut(cur: DataFrame) -> DataFrame:
+        # only edges with label(w) < label(v) can lower either target
+        e = (
+            bidir.join(cur.toDF("src", "lv"), "src")
+            .join(cur.toDF("dst", "lw"), "dst")
+            .filter(F.col("lw") < F.col("lv"))
+        )
+        # checkpointed before the shortcut self-joins it: a self-join
+        # over the union would re-instance the checkpointed ``cur``
+        # under it, whose carried constraints Spark then fails to map
+        # (NoSuchElementException in Union constraint propagation)
+        connected = (
+            cur.unionByName(e.select("src", "lw").toDF("doc_id", "component"))
+            .unionByName(e.select("lv", "lw").toDF("doc_id", "component"))
+            .groupBy("doc_id")
+            .agg(F.min("component").alias("component"))
+            .localCheckpoint(eager=False)
+        )
+        # every label is a node of its own component (it arrived over
+        # edges), so the inner join keeps every node
+        parent = connected.toDF("component", "grand")
+        return (
+            connected.join(parent, "component")
+            .select("doc_id", F.col("grand").alias("component"))
+            .localCheckpoint(eager=False)
+        )
+
     # Fused first action (r20): the init label-sum and round 1's
     # label-sum ride ONE driver action — a 1×1 crossJoin of the two
     # bounded aggregates — so the loop costs one job per round instead
     # of an extra stand-alone init job. Both lazy checkpoints (labels,
     # round 1's frame) materialize inside this same job in dependency
-    # order, exactly as they would across two actions; round counting
-    # is unchanged (round 1 always ran — only its sum's retrieval is
-    # fused).
-    new_labels = _round(labels)
+    # order, exactly as they would across two actions.
+    new_labels = _propagate(labels)
     row = (
         _sum_df(labels)
         .crossJoin(
@@ -1166,42 +1200,25 @@ def connected_components_propagation(
     new_sum = _check(row["s1"], row["n1"])
     labels = new_labels
     n_rounds = 1
-    converged = new_sum == prev_sum
-    prev_sum = new_sum
-    while not converged and n_rounds < max_rounds:
-        new_labels = _round(labels)
-        r = _sum_df(new_labels).first()
-        new_sum = _check(r["s"], r["n"])
-        labels = new_labels
+    cap = _round_cap(row["n"])
+    while new_sum != prev_sum:
+        if n_rounds >= cap:
+            raise RuntimeError(
+                f"connected components did not converge in {cap} rounds "
+                f"over {row['n']} nodes"
+            )
+        labels = _connect_shortcut(labels)
+        r = _sum_df(labels).first()
+        prev_sum, new_sum = new_sum, _check(r["s"], r["n"])
         n_rounds += 1
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
     if rounds_out is not None:
         rounds_out.append(n_rounds)
-    if require_converged and not converged:
-        raise RuntimeError(
-            f"label propagation did not converge in {max_rounds} rounds "
-            "(graph diameter exceeds the cap); raise max_rounds or use "
-            "connected_components_star"
-        )
     return labels
-
-
-# ---------------------------------------------------------------------------
-# Large-star / small-star connected components: the O(log² n)-round
-# variant of the same primitive (Kiveris et al., "Connected Components
-# in MapReduce and Beyond", SoCC'14 — public algorithm). Min-label
-# propagation above runs O(component diameter) rounds, which an
-# adversarial chain of pairwise-similar documents can blow up; the
-# star contractions converge logarithmically regardless of diameter.
-# ---------------------------------------------------------------------------
 
 
 def _neardup_edges(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b) candidate edges with trigram Jaccard >= 0.8 —
-    the shared edge builder for both CC variants."""
+    the shared edge builder of every near-dup clustering."""
     return _exact_jaccard_pairs(docs, 0.8).select("doc_a", "doc_b")
 
 
@@ -1325,124 +1342,6 @@ def neardup_edges_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_edges_prefix(docs, 0.8)
 
 
-def connected_components_star(
-    edges: DataFrame,
-    max_rounds: int = 30,
-    rounds_out: list[int] | None = None,
-    require_converged: bool = False,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contractions. `edges` is (src, dst) in either orientation; returns
-    (doc_id, component) with component = the component's min node id.
-
-    Each round is two window-aggregate passes (one shuffle each):
-
-    * large-star — per node u, every LARGER neighbor v re-links to
-      m = min(N(u) ∪ {u});
-    * small-star — edges oriented big→small; per node u, every smaller
-      neighbor AND u itself re-link to m.
-
-    Both preserve connectivity and monotonically contract toward star
-    graphs rooted at component minima; rounds needed are O(log² n) in
-    the worst case (vs O(diameter) for label propagation), making this
-    the 100 TB path for adversarial component shapes. Per-round
-    `localCheckpoint` cuts lineage exactly like the propagation loop.
-    Only nodes that appear in `edges` are labeled (same contract as
-    the propagation variant)."""
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_e = e.count()
-    n_rounds = 0
-    done = False
-    for _ in range(max_rounds):
-        # large-star over the undirected neighborhoods
-        nbrs = e.select("u", "v").unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        wu = W.partitionBy("u")
-        large = (
-            nbrs.withColumn("m", F.least(F.min("v").over(wu), F.col("u")))
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        # small-star over the big→small-oriented large-star output
-        small_base = large.withColumn(
-            "m", F.least(F.min("v").over(W.partitionBy("u")), F.col("u"))
-        )
-        new_e = (
-            small_base.select(F.col("v").alias("n"), "m")
-            .unionByName(small_base.select(F.col("u").alias("n"), "m"))
-            .filter(F.col("n") != F.col("m"))
-            .select(F.col("n").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # equal cardinality + one-sided containment ⇒ set equality
-        # (counts come nearly free off the checkpointed blocks)
-        n_new = new_e.count()
-        converged = (
-            n_new == n_e and new_e.exceptAll(e).limit(1).count() == 0
-        )
-        e, n_e = new_e, n_new
-        n_rounds += 1
-        if converged:
-            done = True
-            break
-    if rounds_out is not None:
-        rounds_out.append(n_rounds)
-    if require_converged and not done:
-        raise RuntimeError(
-            f"star contraction did not converge in {max_rounds} rounds; "
-            "raise max_rounds (bound is O(log² n))"
-        )
-    # fixpoint is a star forest: u→min edges, plus the roots themselves
-    return (
-        e.select(F.col("u").alias("doc_id"), F.col("v").alias("component"))
-        .unionByName(
-            e.select(F.col("v").alias("doc_id"), F.col("v").alias("component"))
-        )
-        .groupBy("doc_id")
-        .agg(F.min("component").alias("component"))
-    )
-
-
-@query(
-    "neardup_cc_star",
-    oracle=f"""
-    WITH RECURSIVE {_CC_EDGES_CTE},
-    reach(src, dst) AS (
-      SELECT src, dst FROM bidir
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN bidir e ON r.dst = e.src
-    )
-    SELECT doc_id, MIN(m) AS component
-    FROM (
-      SELECT src AS doc_id, dst AS m FROM reach
-      UNION ALL
-      SELECT DISTINCT src, src FROM bidir
-    )
-    GROUP BY doc_id
-    """,
-)
-def neardup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering contract as neardup_connected_components (same
-    edges, same recursive-CTE oracle), computed with the star
-    contractions — proving the logarithmic-round variant produces the
-    identical fixpoint on the fixture graph."""
-    docs = load_table(spark, sf_dir, "documents")
-    edges = _neardup_edges(docs).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    return connected_components_star(edges)
-
-
 @query(
     "neardup_dedup_survivors",
     oracle=f"""
@@ -1474,8 +1373,8 @@ def neardup_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak), the standard heuristic for near-dup clusters where the
     longest variant usually subsumes the others.
 
-    Composition of the oracle-checked pieces: CC labels from the
-    propagation loop, then ONE aggregation per component
+    Composition of the oracle-checked pieces: CC labels from
+    connected_components, then ONE aggregation per component
     (max_by over a lexicographic struct — no second shuffle beyond the
     component key; integer comparisons, so survivor choice is
     tiebreak-deterministic cross-engine)."""

@@ -1,7 +1,7 @@
 """Integer-exact PageRank over the near-duplicate candidate graph
 (Page/Brin/Motwani/Winograd, "The PageRank Citation Ranking", 1999 —
-public paper): a third iterative-graph primitive beside min-label
-propagation and star contraction, and a principled survivor picker —
+public paper): a second iterative-graph primitive beside connected
+components, and a principled survivor picker —
 inside a duplicate cluster the most CENTRAL document (the one most
 other variants point at) is often the better canonical than min-id or
 longest-text.

@@ -18,8 +18,8 @@ widest tree level); the ancestor-closure loop materializes
 O(n · depth) narrow pairs — the standard closure cost, logarithmic
 rounds. For hierarchies deep enough that per-level rounds hurt
 (linked-list shaped), pointer doubling halves the remaining depth per
-round (the cc_star trick); the fixture tree is shallow, so plain BFS
-is the honest minimal plan. Per-round ``localCheckpoint`` cuts the
+round (the shortcut step of connected components); the fixture tree
+is shallow, so plain BFS is the honest minimal plan. Per-round ``localCheckpoint`` cuts the
 iterative lineage exactly as the Lloyd and MMR loops do.
 """
 
@@ -191,7 +191,7 @@ def hierarchy_chain_depths_doubling(spark: SparkSession, sf_dir: str) -> DataFra
     node, the (ancestor-reached, steps-walked) pair and self-joins
     it each round so the reached distance doubles: convergence in
     exactly ⌈log₂ depth⌉ rounds, each one keyed equi-join (the
-    cc_star discipline). The MEASURED round count is returned as
+    connected-components discipline). The MEASURED round count is returned as
     ``n_rounds`` and the oracle pins it to the closed form
     bit_length(max_depth - 1) — the round-count pin is part of the
     cross-engine contract, not a prose claim.

@@ -7,8 +7,9 @@ we already kept?" — the asymmetric version of the near-dup pipeline
 key equality to content similarity). Semantics here:
 
 * build trigram-Jaccard >= 0.8 near-dup components over the union
-  (dedupe._neardup_edges + star contraction with a hard convergence
-  check — the same oracle-pinned primitives);
+  (dedupe._neardup_edges + dedupe.connected_components, which raises
+  rather than return unconverged labels — the same oracle-pinned
+  primitives);
 * a component containing ANY existing document admits NO incoming
   members (they are all transitive near-dups of kept content);
 * an incoming-only component admits exactly its minimum doc_id
@@ -45,8 +46,7 @@ from jobminer_spark.operators.dedupe import (
     _SHINGLES_CTE,
     SHINGLE_MAX_DF,
     _neardup_edges,
-    connected_components_propagation,
-    connected_components_star,
+    connected_components,
 )
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
@@ -59,20 +59,11 @@ def admit_incoming(
     the component rules in the module docstring. ``docs`` needs
     (doc_id, text); ``is_existing`` is any boolean column over it.
 
-    Components come from the star-contraction variant with a HARD
-    convergence requirement: admission is a keep/drop decision, and
-    acting on an unconverged label set would admit transitive
-    near-dups of existing content (a near-dup chain longer than the
-    round cap would split). Star converges in O(log² n) rounds
-    regardless of chain length, so the cap is never the binding
-    constraint in practice — and if it ever is, this raises instead
-    of silently over-admitting."""
-    edges = _neardup_edges(docs)
-    comps = connected_components_star(
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        max_rounds=60,
-        require_converged=True,
-    )
+    Admission is a keep/drop decision, and acting on an unconverged
+    label set would admit transitive near-dups of existing content;
+    connected_components converges in O(log² n) rounds regardless of
+    chain length and raises instead of returning partial labels."""
+    comps = connected_components(_neardup_edges(docs))
     labeled = (
         docs.select("doc_id", is_existing.alias("is_existing"))
         .join(comps, "doc_id", "left")
@@ -135,7 +126,7 @@ def incremental_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     """Admission decision for the simulated ingest batch: the oracle
     recomputes the same components via the recursive-CTE transitive
     closure and applies the same component rules, so any drift in the
-    edge set, the propagation fixpoint, or the admission filter turns
+    edge set, the components fixpoint, or the admission filter turns
     the row red."""
     docs = load_table(spark, sf_dir, "documents")
     return admit_incoming(docs, F.col("doc_id") % 3 == 0)
@@ -244,7 +235,7 @@ def survivors_with_containment(docs: DataFrame, t: float = _CONTAIN_T) -> DataFr
     Plan: containment edges are a projection over the SAME
     inverted-index pair counts the Jaccard edges come from (one
     full-data shuffle total — Spark recomputes the branch, see
-    _jaccard_pair_counts' buffer note), then one CC propagation and
+    _jaccard_pair_counts' buffer note), then one CC fixpoint and
     one max_by rollup per component. No new shuffle class vs the
     plain survivor pipeline."""
     jac = _neardup_edges(docs)
@@ -252,18 +243,10 @@ def survivors_with_containment(docs: DataFrame, t: float = _CONTAIN_T) -> DataFr
         F.col("contained_doc").alias("doc_a"),
         F.col("container_doc").alias("doc_b"),
     )
-    edges = jac.unionByName(cont)
-    # Star contraction with a HARD convergence requirement, not the
-    # propagation default: survivor selection is a keep/drop decision,
-    # and containment edges specifically build CHAIN-shaped components
-    # (d1 ⊂ d2 ⊂ d3 — successive revisions), the diameter shape that
-    # blows past propagation's round cap and would silently split one
-    # component into several kept "survivors".
-    comps = connected_components_star(
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        max_rounds=60,
-        require_converged=True,
-    )
+    # containment edges build CHAIN-shaped components (d1 ⊂ d2 ⊂ d3 —
+    # successive revisions); connected_components' rounds do not grow
+    # with the chain's length
+    comps = connected_components(jac.unionByName(cont))
     j = comps.join(docs.select("doc_id", "n_chars"), "doc_id")
     return j.groupBy("component").agg(
         F.max_by(
@@ -308,7 +291,7 @@ def neardup_survivors_with_containment(spark: SparkSession, sf_dir: str) -> Data
     oracle's recursive-CTE fixpoint runs over the UNION edge set
     (Jaccard ∪ containment, both recomputed independently from the
     shingle index), so a drift in either edge family, the union, the
-    propagation, or the survivor pick turns this row red."""
+    components, or the survivor pick turns this row red."""
     docs = load_table(spark, sf_dir, "documents")
     return survivors_with_containment(docs)
 
@@ -487,11 +470,7 @@ def admit_incoming_incremental(
         .select("doc_a", "doc_b")
     )
 
-    comps = connected_components_star(
-        bedges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        max_rounds=60,
-        require_converged=True,
-    )
+    comps = connected_components(bedges)
     labeled = (
         batch.select("doc_id")
         .join(comps, "doc_id", "left")

@@ -88,9 +88,10 @@ def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
 
     # v1's stats read an immutable committed snapshot — like the v2
     # stats below it overlaps the next phase (all of MERGE #1) on a
-    # one-thread pool and is awaited before the result dict is built;
-    # every job still runs strictly after the commit that defines its
-    # snapshot (guide §2.6).
+    # helper thread; every job still runs strictly after the commit
+    # that defines its snapshot (guide §2.6). Leaving the pool's block
+    # awaits both read-backs on every way out, so a merge that raises
+    # leaves no job of this query's group running behind it.
     from concurrent.futures import ThreadPoolExecutor as _TPE
 
     from pyspark import inheritable_thread_target
@@ -98,82 +99,81 @@ def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
     # helper threads keep the caller's job group (and other local
     # properties), so their jobs are attributed to this query
     _inherit = inheritable_thread_target(spark)
-    _r1_pool = _TPE(max_workers=1)
-    r1_fut = _r1_pool.submit(
-        _inherit(
-            lambda: v1.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("price_q").alias("ck")
-            ).first()
+    with _TPE(max_workers=2) as _readbacks:
+        r1_fut = _readbacks.submit(
+            _inherit(
+                lambda: v1.agg(
+                    F.count(F.lit(1)).alias("n"), F.sum("price_q").alias("ck")
+                ).first()
+            )
         )
-    )
-    _r1_pool.shutdown(wait=False)
 
-    # MERGE #1: conditional status transition + re-keyed inserts
-    transitions = base.filter(F.col("o_orderkey") < _UPD_MAX).select(
-        "o_orderkey",
-        "o_custkey",
-        F.lit("X").alias("o_orderstatus"),
-        "price_q",
-    )
-    inserts = base.filter(F.col("o_orderkey") % _INS_MOD == 0).select(
-        (F.col("o_orderkey") + _INS_OFFSET).alias("o_orderkey"),
-        "o_custkey",
-        F.lit("N").alias("o_orderstatus"),
-        "price_q",
-    )
-    m1 = merge_into(
-        spark,
-        table,
-        transitions.unionByName(inserts),
-        lambda j: j["o_orderstatus"] == "O",
-    )
-    v2 = read_snapshot(spark, table, 2)
-
-    # v2's stats read an immutable committed snapshot: it can overlap
-    # the conflict provocation (pure filesystem) and MERGE #2 (which
-    # reads the same immutable v2 and commits v3) without changing a
-    # single value — guide §2.6 job overlap, same as the post-merge
-    # read-back pool below.
-    _r2_pool = _TPE(max_workers=1)
-    r2_fut = _r2_pool.submit(
-        _inherit(
-            lambda: v2.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("price_q").alias("ck"),
-                F.count(F.when(F.col("o_orderstatus") == "X", 1)).alias("nx"),
-                F.count(F.when(F.col("o_orderstatus") == "N", 1)).alias("nn"),
-            ).first()
-        )
-    )
-    _r2_pool.shutdown(wait=False)
-
-    # provoke a commit conflict: a manifest prepared against v1 tries
-    # to publish version 2 AFTER merge #1 won it — the exclusive
-    # create must refuse (snapshot-isolation's write-side half)
-    n_conflicts = 0
-    try:
-        _commit(table, {"version": 2, "parent": 1, "key_col": "o_orderkey", "files": []})
-    except CommitConflict:
-        n_conflicts = 1
-
-    # MERGE #2: unconditional price bump on [512, 1024). The latest
-    # snapshot here IS v2 (merge #1 committed it; the conflicting
-    # commit above must fail), so reuse the already-built v2 frame
-    # instead of paying a second read_snapshot frame build — same
-    # immutable manifest, same file list.
-    bump = (
-        v2
-        .filter(
-            (F.col("o_orderkey") >= _BUMP_LO) & (F.col("o_orderkey") < _BUMP_HI)
-        )
-        .select(
+        # MERGE #1: conditional status transition + re-keyed inserts
+        transitions = base.filter(F.col("o_orderkey") < _UPD_MAX).select(
             "o_orderkey",
             "o_custkey",
-            "o_orderstatus",
-            (F.col("price_q") + 1).alias("price_q"),
+            F.lit("X").alias("o_orderstatus"),
+            "price_q",
         )
-    )
-    m2 = merge_into(spark, table, bump, lambda j: F.lit(True))
+        inserts = base.filter(F.col("o_orderkey") % _INS_MOD == 0).select(
+            (F.col("o_orderkey") + _INS_OFFSET).alias("o_orderkey"),
+            "o_custkey",
+            F.lit("N").alias("o_orderstatus"),
+            "price_q",
+        )
+        m1 = merge_into(
+            spark,
+            table,
+            transitions.unionByName(inserts),
+            lambda j: j["o_orderstatus"] == "O",
+        )
+        v2 = read_snapshot(spark, table, 2)
+
+        # v2's stats read an immutable committed snapshot: it can overlap
+        # the conflict provocation (pure filesystem) and MERGE #2 (which
+        # reads the same immutable v2 and commits v3) without changing a
+        # single value — guide §2.6 job overlap, same as the post-merge
+        # read-back pool below.
+        r2_fut = _readbacks.submit(
+            _inherit(
+                lambda: v2.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum("price_q").alias("ck"),
+                    F.count(F.when(F.col("o_orderstatus") == "X", 1)).alias("nx"),
+                    F.count(F.when(F.col("o_orderstatus") == "N", 1)).alias("nn"),
+                ).first()
+            )
+        )
+
+        # provoke a commit conflict: a manifest prepared against v1 tries
+        # to publish version 2 AFTER merge #1 won it — the exclusive
+        # create must refuse (snapshot-isolation's write-side half)
+        n_conflicts = 0
+        try:
+            _commit(
+                table, {"version": 2, "parent": 1, "key_col": "o_orderkey", "files": []}
+            )
+        except CommitConflict:
+            n_conflicts = 1
+
+        # MERGE #2: unconditional price bump on [512, 1024). The latest
+        # snapshot here IS v2 (merge #1 committed it; the conflicting
+        # commit above must fail), so reuse the already-built v2 frame
+        # instead of paying a second read_snapshot frame build — same
+        # immutable manifest, same file list.
+        bump = (
+            v2
+            .filter(
+                (F.col("o_orderkey") >= _BUMP_LO) & (F.col("o_orderkey") < _BUMP_HI)
+            )
+            .select(
+                "o_orderkey",
+                "o_custkey",
+                "o_orderstatus",
+                (F.col("price_q") + 1).alias("price_q"),
+            )
+        )
+        m2 = merge_into(spark, table, bump, lambda j: F.lit(True))
     r1 = r1_fut.result()
     r2 = r2_fut.result()
 

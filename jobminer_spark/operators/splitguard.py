@@ -37,7 +37,7 @@ from jobminer_spark.operators.dedupe import (
     _CC_EDGES_CTE,
     _CC_REACH_CTE,
     _neardup_edges,
-    connected_components_propagation,
+    connected_components,
 )
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
@@ -84,9 +84,7 @@ def _grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cache_key in _GROUPED_CACHE:
         return _GROUPED_CACHE[cache_key]
     docs = load_table(spark, sf_dir, "documents")
-    comp = connected_components_propagation(_neardup_edges(docs)).select(
-        "doc_id", "component"
-    )
+    comp = connected_components(_neardup_edges(docs))
     grp = F.coalesce(F.col("component"), F.col("doc_id"))
 
     def split_of(bucket_col):

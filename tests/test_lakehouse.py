@@ -699,3 +699,40 @@ def test_footer_stats_resolve_leaf_by_path_under_nested_column(spark, tmp_path):
     assert min(f["min_key"] for f in files) == 1
     assert max(f["max_key"] for f in files) == 50
     assert sum(f["n_rows"] for f in files) == 50
+
+
+def test_lakeaudit_scenario_awaits_read_backs_when_a_merge_raises(
+    spark, monkeypatch
+):
+    """When MERGE #2 of the lakehouse audit scenario raises, its error
+    reaches the caller, and the v1/v2 read-backs started on helper
+    threads have finished: no job of the caller's group is still
+    running or starts afterwards."""
+    import time
+
+    from jobminer_spark.operators import lakeaudit
+    from tests.conftest import SF_DIR
+
+    class _MergeFailed(Exception):
+        pass
+
+    real_merge = lh.merge_into
+    calls = []
+
+    def failing_second_merge(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise _MergeFailed("merge #2")
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(lh, "merge_into", failing_second_merge)
+    monkeypatch.setattr(lakeaudit, "_SCENARIO_CACHE", {})
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    with _job_group(sc, "lakeaudit-failed-merge"):
+        with pytest.raises(_MergeFailed):
+            lakeaudit._run_scenario(spark, SF_DIR)
+    jobs = set(tracker.getJobIdsForGroup("lakeaudit-failed-merge"))
+    assert not jobs & set(tracker.getActiveJobsIds())
+    time.sleep(2)
+    assert set(tracker.getJobIdsForGroup("lakeaudit-failed-merge")) == jobs

@@ -3,6 +3,10 @@ deterministic fingerprints, pipeline smoke, rows-only queries."""
 
 from __future__ import annotations
 
+import math
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from jobminer_spark import ORACLES, QUERIES, load_all_operators
@@ -62,31 +66,101 @@ def test_explode_groupby_roundtrip(spark):
     ).count() == 0
 
 
-def test_cc_star_handles_long_path_graph(spark):
-    """A 64-node path is the adversarial case for label propagation
-    (round count = diameter); the star contractions must still collapse
-    it to one component rooted at node 0 within the logarithmic round
-    budget."""
-    from jobminer_spark.operators.dedupe import connected_components_star
+def _cc_shapes():
+    """Edge lists that stress a connected-components routine: long
+    chains in every id order, a deep tree, long paths meeting at one
+    hub, a random sparse graph and many disjoint cliques."""
+    n = 256
+    perm = list(range(n))
+    random.Random(7).shuffle(perm)
+    rnd = random.Random(3)
+    paths = []
+    for k in range(8):  # eight 60-node paths hanging off node 0
+        prev = 0
+        for j in range(60):
+            paths.append((prev, 1 + k * 60 + j))
+            prev = 1 + k * 60 + j
+    cliques = [
+        (c * 10 + i, c * 10 + j) for c in range(50) for i in range(6) for j in range(i)
+    ]
+    return {
+        "chain_ascending": [(i, i + 1) for i in range(n - 1)],
+        "chain_descending": [(n - i, n - i - 1) for i in range(n - 1)],
+        "chain_permuted": [(perm[i], perm[i + 1]) for i in range(n - 1)],
+        "binary_tree": [(i, (i - 1) // 2) for i in range(1, 511)],
+        "star_of_paths": paths,
+        "random_sparse": [(rnd.randrange(300), rnd.randrange(300)) for _ in range(280)],
+        "disjoint_cliques": cliques,
+    }
 
-    n = 64
-    edges = spark.range(n - 1).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+
+def _union_find_components(edges):
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _edge_frame(spark, edges):
+    from jobminer_spark.data.skill_dictionary import values_df
+
+    return values_df(spark, edges, ["doc_a", "doc_b"]).select(
+        F.col("doc_a").cast("long"), F.col("doc_b").cast("long")
     )
-    labels = connected_components_star(edges)
-    rows = labels.collect()
-    assert len(rows) == n
-    assert all(r.component == 0 for r in rows)
 
 
-def test_cc_star_multiple_components(spark):
-    """Two disjoint cliques + one isolated edge keep distinct minima."""
-    from jobminer_spark.operators.dedupe import connected_components_star
+@pytest.mark.parametrize("shape", sorted(_cc_shapes()))
+def test_connected_components_matches_union_find(spark, shape):
+    """Every node lands in its component's minimum id, as a union-find
+    says, within the ⌈log₂n⌉² round bound — on the shapes that make
+    plain min-label propagation take O(diameter) rounds (a 256-node
+    chain has diameter 255) as well as on the clique-shaped graphs
+    that settle in the first round."""
+    from jobminer_spark.operators.dedupe import connected_components
 
-    e = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (20, 21)]
-    edges = spark.createDataFrame(e, "src long, dst long")
-    got = {r.doc_id: r.component for r in connected_components_star(edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+    edges = _cc_shapes()[shape]
+    want = _union_find_components(edges)
+    rounds: list[int] = []
+    got = connected_components(_edge_frame(spark, edges), rounds_out=rounds)
+    assert {r.doc_id: r.component for r in got.collect()} == want
+    assert rounds[0] <= math.ceil(math.log2(len(want))) ** 2
+    if shape == "disjoint_cliques":
+        assert rounds[0] == 1
+
+
+def test_connected_components_raises_at_the_round_cap(spark, monkeypatch):
+    """A graph that has not settled when the round cap is reached
+    raises instead of returning partial labels."""
+    from jobminer_spark.operators import dedupe
+
+    monkeypatch.setattr(dedupe, "_round_cap", lambda n_nodes: 2)
+    edges = _cc_shapes()["chain_ascending"]
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        dedupe.connected_components(_edge_frame(spark, edges))
+
+
+def test_neardup_components_join_a_permuted_chain(spark, monkeypatch):
+    """neardup_connected_components puts a 64-node chain of near-dups,
+    in permuted id order, into one component (min-label propagation
+    capped at 20 rounds split it silently)."""
+    from jobminer_spark.operators import dedupe
+
+    perm = list(range(64))
+    random.Random(11).shuffle(perm)
+    chain = _edge_frame(spark, [(perm[i], perm[i + 1]) for i in range(63)])
+    monkeypatch.setattr(dedupe, "_neardup_edges", lambda docs: chain)
+    got = dedupe.neardup_connected_components(spark, SF_DIR).collect()
+    assert len(got) == 64
+    assert {r.component for r in got} == {0}
 
 
 def test_split_assignment_rowwise_stable(spark):
@@ -403,46 +477,6 @@ def test_incremental_admission_component_rules(spark):
         for r in admit_incoming(docs, F.col("doc_id") % 3 == 0).collect()
     }
     assert got == {11: 2, 14: 1}
-
-
-def test_cc_adversarial_chain_round_counts(spark):
-    """Executable version of SCALING.md's connected-components claim:
-    on an adversarial 256-node chain (diameter 255), the
-    large-star/small-star variant converges within the ⌈log₂n⌉²
-    round bound and labels every node correctly, while min-label
-    propagation is still unconverged after 20 rounds (it moves the
-    min label one hop per round — O(diameter), fine for clique-shaped
-    near-dup graphs, wrong tool for chains)."""
-    import math
-
-    import pyspark.sql.functions as F
-
-    from jobminer_spark.operators.dedupe import (
-        connected_components_propagation,
-        connected_components_star,
-    )
-
-    n = 256
-    edges = spark.range(n - 1).select(
-        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
-    )
-
-    star_rounds: list[int] = []
-    star = connected_components_star(
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        rounds_out=star_rounds,
-    )
-    labels = {r.doc_id: r.component for r in star.collect()}
-    assert labels == {i: 0 for i in range(n)}  # one component, min id 0
-    assert star_rounds[0] <= math.ceil(math.log2(n)) ** 2  # = 64; ~6 in practice
-
-    prop_rounds: list[int] = []
-    prop = connected_components_propagation(
-        edges, max_rounds=20, rounds_out=prop_rounds
-    )
-    partial = {r.doc_id: r.component for r in prop.collect()}
-    assert prop_rounds[0] == 20  # hit the cap: O(diameter) on a chain...
-    assert any(c != 0 for c in partial.values())  # ...and still unconverged
 
 
 def test_embedding_sign_bits_knob_shrinks_candidates(spark):
