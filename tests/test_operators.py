@@ -137,6 +137,43 @@ def test_connected_components_matches_union_find(spark, shape):
         assert rounds[0] == 1
 
 
+def test_cc_star_handles_long_path_graph(spark):
+    """A 64-node path built with spark.range is the adversarial case
+    for label propagation (round count = diameter); the routine must
+    still collapse it to one component rooted at node 0 within the
+    logarithmic round budget."""
+    from jobminer_spark.operators.dedupe import connected_components
+
+    n = 64
+    edges = spark.range(n - 1).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    rounds: list[int] = []
+    rows = connected_components(edges, rounds_out=rounds).collect()
+    assert len(rows) == n
+    assert all(r.component == 0 for r in rows)
+    assert rounds[0] <= math.ceil(math.log2(n)) ** 2
+
+
+def test_cc_adversarial_chain_round_counts(spark):
+    """Executable version of SCALING.md's connected-components claim:
+    on an adversarial 256-node chain (diameter 255) the routine labels
+    every node correctly within the ⌈log₂n⌉² round bound, and in fewer
+    than the 20 rounds that left min-label propagation unconverged on
+    the same chain (it moves the min label one hop per round)."""
+    from jobminer_spark.operators.dedupe import connected_components
+
+    n = 256
+    edges = spark.range(n - 1).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    rounds: list[int] = []
+    got = connected_components(edges, rounds_out=rounds)
+    assert {r.doc_id: r.component for r in got.collect()} == {i: 0 for i in range(n)}
+    assert rounds[0] <= math.ceil(math.log2(n)) ** 2  # = 64
+    assert rounds[0] < 20
+
+
 def test_connected_components_raises_at_the_round_cap(spark, monkeypatch):
     """A graph that has not settled when the round cap is reached
     raises instead of returning partial labels."""
