@@ -87,13 +87,13 @@ HEADLINE = [
     "filter_agreement_kappa",
     # r15 additions (VERDICT r14 item 8): the persisted-profile
     # comparison and the lakehouse MERGE. ks_drift_vs_baseline's
-    # profile cache is deliberately KEPT across passes — the query
+    # profile memo is deliberately KEPT across passes — the query
     # recomputes the full comparison plan every pass (no result is
     # cached), so its min-of-passes IS the production per-batch cost:
     # comparison against an already-persisted profile, the
     # O(batch + grid) number worth tracking round-over-round.
     # lakehouse_merge_parity memoizes its whole scenario RESULT per
-    # session, so the per-pass hook below clears that memo and every
+    # session, so the pass loop below forgets that memo and every
     # pass re-runs create_table + both MERGEs for real.
     "ks_drift_vs_baseline",
     "lakehouse_merge_parity",
@@ -132,19 +132,9 @@ HEADLINE = [
 ]
 
 
-def _bust_lakeaudit_scenario() -> None:
-    from jobminer_spark.operators import lakeaudit
-
-    lakeaudit._SCENARIO_CACHE.clear()
-
-
-# Pre-pass hooks: queries whose module memoizes a full scenario result
-# per session would otherwise time a dict hit from pass 2 on.
-_PREPASS = {"lakehouse_merge_parity": _bust_lakeaudit_scenario}
-
-
 def main() -> None:
     from jobminer_spark import QUERIES, load_all_operators
+    from jobminer_spark.operators.common import forget_scenarios
     from jobminer_spark.session import get_spark
 
     load_all_operators()
@@ -178,8 +168,10 @@ def main() -> None:
     for _pass in range(n_passes):
         for name in HEADLINE:
             fn = QUERIES[name]
-            if name in _PREPASS:
-                _PREPASS[name]()
+            if name == "lakehouse_merge_parity":
+                # its memoized scenario result would otherwise time a
+                # dict hit from pass 2 on
+                forget_scenarios("lake")
             t0 = time.perf_counter()
             fn(spark, SF_DIR).collect()
             dt = round(time.perf_counter() - t0, 3)

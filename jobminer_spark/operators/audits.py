@@ -30,6 +30,7 @@ from jobminer_spark.operators.common import (
     KM_K,
     KM_QUANT,
     VEC_NORMS_CTE,
+    scenario,
     trained_cells_cte,
 )
 from jobminer_spark.registry import query
@@ -359,22 +360,23 @@ def stream_sink_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SINK_PARITY_CACHE: dict[tuple[str, str], tuple[int, int, int]] = {}
-
-
 def _sink_parity_scalars(spark: SparkSession, sf_dir: str) -> tuple[int, int, int]:
     """(n_sink_keys, n_duplicates, n_missing) after the double drain.
-    Cached per (session, fixture): the double drain over an immutable
-    fixture is deterministic, and the parity suite + driversim +
-    driver window would otherwise each pay the two full streaming
-    drains again for the identical scalars."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _SINK_PARITY_CACHE:
-        return _SINK_PARITY_CACHE[cache_key]
+    A scenario memo: the double drain over unchanged data is
+    deterministic, and the parity suite + driversim + driver window
+    would otherwise each pay the two full streaming drains again for
+    the identical scalars."""
+    return scenario(
+        spark, sf_dir, "sinkparity",
+        lambda work: _build_sink_parity(spark, sf_dir, work),
+    )
 
+
+def _build_sink_parity(
+    spark: SparkSession, sf_dir: str, work: str
+) -> tuple[int, int, int]:
     import os
     import shutil
-    import tempfile
 
     from jobminer_spark.streaming.stateful import foreach_batch_upsert
     from jobminer_spark.streaming.windows import (
@@ -383,7 +385,6 @@ def _sink_parity_scalars(spark: SparkSession, sf_dir: str) -> tuple[int, int, in
     )
 
     keys = ["user_id", "event_type"]
-    work = tempfile.mkdtemp(prefix="stream_sink_parity_")
     try:
         sink = os.path.join(work, "sink")
         # run 1: normal drain; run 2: fresh checkpoint => every batch
@@ -415,9 +416,7 @@ def _sink_parity_scalars(spark: SparkSession, sf_dir: str) -> tuple[int, int, in
         n_missing = batch_keys.join(sink_df, keys, "left_anti").count()
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    result = (row["k"], row["n"] - row["k"], n_missing)
-    _SINK_PARITY_CACHE[cache_key] = result
-    return result
+    return (row["k"], row["n"] - row["k"], n_missing)
 
 
 @query(
@@ -449,8 +448,8 @@ def stream_stateful_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_events_source,
     )
 
-    # shared drain discipline (windows._DRAIN_CACHE): one stateful
-    # drain per (session, fixture), reused across the parity suite
+    # shared drain discipline (windows._drained_once): one stateful
+    # drain per scenario, reused across the parity suite
     drained = _drained_once(
         "stateful_totals",
         spark,

@@ -37,13 +37,11 @@ the dup-key skip, D finds nothing to delete).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import sweep_stale_dirs
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 
@@ -248,10 +246,13 @@ def cdc_apply_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # merge_into, replayed twice, final state pinned to the batch apply.
 # ---------------------------------------------------------------------------
 
-_STREAM_CDC_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def _run_stream_cdc(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "cdc", lambda work: _build_stream_cdc(spark, sf_dir, work)
+    )
+
+
+def _build_stream_cdc(spark: SparkSession, sf_dir: str, work: str) -> dict:
     from jobminer_spark.lakehouse import (
         create_table,
         merge_into,
@@ -259,16 +260,6 @@ def _run_stream_cdc(spark: SparkSession, sf_dir: str) -> dict:
     )
     from jobminer_spark.streaming.windows import streaming_events_source
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _STREAM_CDC_CACHE:
-        return _STREAM_CDC_CACHE[cache_key]
-
-    app = spark.sparkContext.applicationId
-    root = tempfile.gettempdir()
-    sweep_stale_dirs(root, "jm_cdc_", keep_token=f"jm_cdc_{app}_")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    work = os.path.join(root, f"jm_cdc_{app}_{sf_tag}")
-    shutil.rmtree(work, ignore_errors=True)
     table = os.path.join(work, "table")
 
     create_table(spark, table, cdc_base(spark, sf_dir), "key")
@@ -338,13 +329,11 @@ def _run_stream_cdc(spark: SparkSession, sf_dir: str) -> dict:
     drain("ck_run2")
     s2 = state()
 
-    result = {
+    return {
         "n_final": s2[0],
         "balance_checksum": s2[1],
         "replay_idempotent": 1 if s1 == s2 else 0,
     }
-    _STREAM_CDC_CACHE[cache_key] = result
-    return result
 
 
 @query(

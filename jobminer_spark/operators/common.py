@@ -693,43 +693,37 @@ def dec12_to_double_sql(expr: str) -> str:
     )
 
 
-def source_fingerprint(sf_dir: str, table: str = "events") -> str:
-    """Cheap change-detection for one fixture table under ``sf_dir``:
-    (name, size, mtime_ns) of its parquet file — or of every entry
-    when it is a directory — digested. Folded into scenario/profile
-    cache keys (ADVICE r14, generalized in r15): if a test rewrites
-    the data under the same path within one Spark session, a stale
-    cached scenario must not be silently reused. Pure os.stat — no
-    Spark job, no file reads."""
+def source_fingerprint(sf_dir: str) -> str:
+    """Cheap change-detection for the data under ``sf_dir``: (name,
+    size, mtime_ns) of every ``*.parquet`` entry — and of every file
+    inside one that is a directory — digested. A rewrite of any table
+    under the same path changes it. Pure os.stat — no Spark job, no
+    file reads."""
     import hashlib
     import os
 
-    path = os.path.join(sf_dir, f"{table}.parquet")
     parts: list[str] = []
     try:
-        if os.path.isdir(path):
-            for name in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, name))
-                parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-        else:
-            st = os.stat(path)
-            parts.append(f"{st.st_size}:{st.st_mtime_ns}")
+        for name in sorted(os.listdir(sf_dir)):
+            if not name.endswith(".parquet"):
+                continue
+            path = os.path.join(sf_dir, name)
+            subs = sorted(os.listdir(path)) if os.path.isdir(path) else [""]
+            for sub in subs:
+                st = os.stat(os.path.join(path, sub) if sub else path)
+                parts.append(f"{name}/{sub}:{st.st_size}:{st.st_mtime_ns}")
     except OSError:
         parts.append("missing")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 
 def scenario_workdir(spark, sf_dir: str, prefix: str, fingerprint: str) -> str:
-    """Fresh scratch root for a one-build-per-(session, sf_dir, data)
-    audit scenario — the shared dance every format/maintenance audit
-    module used to copy (review r16 folded seven copies): sweep other
+    """Fresh scratch root for one scenario build: sweep other
     sessions' stale roots (age-gated), digest the FULL sf_dir path +
     data fingerprint into the dir name (two alike-named fixture dirs,
-    or a rewritten dataset under the same path, can never collide on
-    one root — ADVICE r14's stale-cache rule), then clear any previous
-    build of this exact root. Callers own their memo dict; the memo
-    key is (applicationId, sf_dir, fingerprint) so a data rewrite gets
-    a fresh entry AND a fresh root."""
+    or a rewritten dataset under the same path, never share a root),
+    then clear any previous build of this exact root. The directory
+    itself is not created."""
     import hashlib
     import os
     import shutil
@@ -745,3 +739,37 @@ def scenario_workdir(spark, sf_dir: str, prefix: str, fingerprint: str) -> str:
     work = os.path.join(tmp, f"{prefix}{app}_{sf_tag}_{digest}")
     shutil.rmtree(work, ignore_errors=True)
     return work
+
+
+# Every scenario an audit query builds once per session: a lakehouse,
+# a Delta/Iceberg table, a streaming drain, an index. Keyed by
+# (applicationId, abspath(sf_dir), source_fingerprint(sf_dir), name),
+# so a new session, another directory or rewritten data under the
+# same path each get a fresh build — a stored result is reused only
+# while the data it was built from is unchanged.
+_SCENARIO_CACHE: dict[tuple[str, str, str, str], object] = {}
+
+
+def scenario(spark, sf_dir: str, name: str, build):
+    """Run ``build(work)`` once per (session, sf_dir, data state, name)
+    and return its stored value. ``work`` is a fresh scratch root from
+    :func:`scenario_workdir` (prefix ``jm_<name>_``) that the build may
+    create and fill; it lives as long as the stored value needs it. A
+    build that raises stores nothing. Call it from the thread that runs
+    the query: two threads building one scenario at once would share
+    its work dir."""
+    import os
+
+    fp = source_fingerprint(sf_dir)
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), fp, name)
+    if key not in _SCENARIO_CACHE:
+        work = scenario_workdir(spark, sf_dir, f"jm_{name}_", fp)
+        _SCENARIO_CACHE[key] = build(work)
+    return _SCENARIO_CACHE[key]
+
+
+def forget_scenarios(name: str | None = None) -> None:
+    """Drop the stored scenarios called ``name`` (every one when None),
+    so the next :func:`scenario` call builds again."""
+    for key in [k for k in _SCENARIO_CACHE if name in (None, k[3])]:
+        del _SCENARIO_CACHE[key]

@@ -1011,35 +1011,35 @@ _CC_EDGES_CTE = f"""
     )
 """
 
-# The transitive-closure + min-label spelling shared by every
-# CC-family oracle (three queries here + splitguard's two): ONE
-# constant so a future fix to the closure cannot silently diverge the
-# split assignment's clustering from the attested components.
+# The transitive closure (reach) + min-label (comp) spelling shared by
+# every CC-family oracle over a ``bidir(src, dst)`` CTE: the two
+# queries here, splitguard's two and increment's four. ONE constant
+# so a future fix to the closure cannot silently diverge the split
+# assignment's or the admission's clustering from the attested
+# components.
 _CC_REACH_CTE = """\
     reach(src, dst) AS (
       SELECT src, dst FROM bidir
       UNION
       SELECT r.src, e.dst FROM reach r JOIN bidir e ON r.dst = e.src
+    ),
+    comp AS (
+      SELECT doc_id, MIN(m) AS component
+      FROM (
+        SELECT src AS doc_id, dst AS m FROM reach
+        UNION ALL
+        SELECT DISTINCT src, src FROM bidir
+      )
+      GROUP BY doc_id
     )"""
-
 
 
 @query(
     "neardup_connected_components",
     oracle=f"""
     WITH RECURSIVE {_CC_EDGES_CTE},
-    reach(src, dst) AS (
-      SELECT src, dst FROM bidir
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN bidir e ON r.dst = e.src
-    )
-    SELECT doc_id, MIN(m) AS component
-    FROM (
-      SELECT src AS doc_id, dst AS m FROM reach
-      UNION ALL
-      SELECT DISTINCT src, src FROM bidir
-    )
-    GROUP BY doc_id
+{_CC_REACH_CTE}
+    SELECT doc_id, component FROM comp
     """,
 )
 def neardup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1347,15 +1347,6 @@ def neardup_edges_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_CC_EDGES_CTE},
 {_CC_REACH_CTE},
-    comp AS (
-      SELECT doc_id, MIN(m) AS component
-      FROM (
-        SELECT src AS doc_id, dst AS m FROM reach
-        UNION ALL
-        SELECT DISTINCT src, src FROM bidir
-      )
-      GROUP BY doc_id
-    ),
     ranked AS (
       SELECT c.component, c.doc_id,
              ROW_NUMBER() OVER (PARTITION BY c.component

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import scenario_workdir, source_fingerprint
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 from jobminer_spark.sources.delta import (
@@ -42,7 +42,6 @@ from jobminer_spark.sources.delta import (
     write_delta,
 )
 
-_SCENARIO_CACHE: dict[tuple[str, str, str], dict] = {}
 
 _ROWS_CTE = """
     rows AS (
@@ -62,15 +61,12 @@ def _rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scenario(spark: SparkSession, sf_dir: str) -> dict:
-    # data fingerprint in the key AND the root digest (ADVICE r14's
-    # stale-cache rule, applied to every r15 scenario cache): a
-    # rewritten dataset under the same path resolves to a fresh root
-    # and never overwrites one an older cache entry still points at
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_delta_", fp)
+    return scenario(
+        spark, sf_dir, "delta", lambda work: _build_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     rows = _rows(spark, sf_dir)
 
     main = os.path.join(work, "main")
@@ -142,7 +138,6 @@ def _scenario(spark: SparkSession, sf_dir: str) -> dict:
             delta_domain_metadata(ict) == {"ownership": '{"team": "ml"}'}
         ),
     }
-    _SCENARIO_CACHE[cache_key] = result
     return result
 
 
@@ -267,35 +262,34 @@ def delta_checkpoint_replay_audit(
     )
 
 
-_OPT_CACHE: dict[tuple[str, str, str], dict] = {}
 
 
 def _opt_scenario(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "dopt", lambda work: _build_opt_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_opt_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     """A 6-append Delta table OPTIMIZEd to 2 files, under its OWN
     swept root — the main scenario's work dir is rmtree'd on rebuild,
-    so sharing it would leave this cache dangling (review r15), and
+    so sharing it would leave this memo dangling (review r15), and
     the main tables' version counts are pinned by other audits and
     must not grow."""
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _OPT_CACHE:
-        return _OPT_CACHE[cache_key]
     from jobminer_spark.sources.delta import optimize_delta
 
-    work = scenario_workdir(spark, sf_dir, "jm_dopt_", fp)
     table = os.path.join(work, "opt")
     rows = _rows(spark, sf_dir)
     for b in range(6):
         write_delta(spark, table, rows.filter(F.col("event_id") % 6 == b))
     pre_version = delta_latest_version(table)
     v, n_before, n_after = optimize_delta(spark, table, target_files=2)
-    _OPT_CACHE[cache_key] = {
+    return {
         "table": table,
         "pre_version": pre_version,
         "n_before": n_before,
         "n_after": n_after,
     }
-    return _OPT_CACHE[cache_key]
 
 
 @query(
@@ -340,21 +334,21 @@ def delta_optimize_compaction_audit(
     )
 
 
-_CLONE_CACHE: dict[tuple[str, str, str], dict] = {}
 
 
 def _clone_scenario(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "dclone", lambda work: _build_clone_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_clone_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     """SHALLOW CLONE lifecycle (r19): a partitioned two-commit source,
     a zero-copy clone, then divergence on BOTH sides — a DV delete +
     an append on the clone, an append on the source — so the audit can
     pin that the two tables share bytes but not state."""
     from jobminer_spark.sources.delta import clone_delta, delete_delta
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _CLONE_CACHE:
-        return _CLONE_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_dclone_", fp)
     rows = _rows(spark, sf_dir)
     src = os.path.join(work, "src")
     dst = os.path.join(work, "dst")
@@ -394,14 +388,19 @@ def _clone_scenario(spark: SparkSession, sf_dir: str) -> dict:
         partition_by=["event_type"],
     )
     result = {"src": src, "dst": dst, "zero_copy_ok": zero_copy_ok}
-    _CLONE_CACHE[cache_key] = result
     return result
 
 
-_CONVERT_CACHE: dict[tuple[str, str, str], dict] = {}
 
 
 def _convert_scenario(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "dconv",
+        lambda work: _build_convert_scenario(spark, sf_dir, work),
+    )
+
+
+def _build_convert_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     """CONVERT TO DELTA lifecycle (late r19): events written as a
     plain Hive-partitioned parquet directory by Spark's own writer,
     converted in place, then mutated through the Delta surface — a DV
@@ -412,11 +411,6 @@ def _convert_scenario(spark: SparkSession, sf_dir: str) -> dict:
         delete_delta,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _CONVERT_CACHE:
-        return _CONVERT_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_dconv_", fp)
     rows = _rows(spark, sf_dir)
     conv = os.path.join(work, "conv")
     rows.write.partitionBy("event_type").parquet(conv)
@@ -426,7 +420,6 @@ def _convert_scenario(spark: SparkSession, sf_dir: str) -> dict:
     converted_ok = int(n_files > 0 and total_bytes > 0)
     delete_delta(spark, conv, "event_type = 'error'")
     result = {"conv": conv, "converted_ok": converted_ok}
-    _CONVERT_CACHE[cache_key] = result
     return result
 
 
@@ -620,12 +613,7 @@ def delta_row_tracking_audit(
 
     from jobminer_spark.sources.delta import read_delta_row_ids
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "rowtrack",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_rt_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "rt")
         for m in range(3):
@@ -633,8 +621,9 @@ def delta_row_tracking_audit(
                 spark, t, rows.filter(F.col("event_id") % 3 == m),
                 configuration={"delta.enableRowTracking": "true"},
             )
-        _SCENARIO_CACHE[cache_key] = {"rt": t}
-    t = _SCENARIO_CACHE[cache_key]["rt"]
+        return {"rt": t}
+
+    t = scenario(spark, sf_dir, "rt", _build)["rt"]
     got = read_delta_row_ids(spark, t)
     return got.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -681,12 +670,7 @@ def delta_schema_evolution_audit(
 
     from jobminer_spark.sources.delta import _replay_full
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "evolve",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_dse_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "evolve")
         write_delta(
@@ -722,10 +706,11 @@ def delta_schema_evolution_audit(
                 for f in flds
             )
         )
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "evolve": t, "mapped_ok": mapped_ok,
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "dse", _build)
     got = read_delta(spark, s["evolve"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),
@@ -779,12 +764,7 @@ def delta_uniform_iceberg_audit(
         write_uniform_iceberg_metadata,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "uniform",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_uni_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "uni")
         write_delta(
@@ -807,8 +787,9 @@ def delta_uniform_iceberg_audit(
             and props.get("delta.universalFormat.source") == "delta"
             and props.get("delta.universalFormat.deltaVersion") == "1"
         )
-        _SCENARIO_CACHE[cache_key] = {"uni": t, "parity": parity}
-    s = _SCENARIO_CACHE[cache_key]
+        return {"uni": t, "parity": parity}
+
+    s = scenario(spark, sf_dir, "uni", _build)
     full = read_iceberg(spark, s["uni"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),
@@ -859,12 +840,7 @@ def delta_symlink_manifest_audit(
         generate_symlink_manifest,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "symlink",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_syml_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "symlink")
         # two commits + an overwrite so the manifest must track the
@@ -898,12 +874,13 @@ def delta_symlink_manifest_audit(
         live = {
             _os.path.abspath(_os.path.join(t, rel)) for rel in adds
         }
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "listed": sorted(listed),
             "n_manifests": len(paths),
             "inventory_ok": int(set(listed) == live),
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "syml", _build)
     got = spark.read.parquet(*s["listed"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),
@@ -943,12 +920,7 @@ def iceberg_delta_export_parity(
     from jobminer_spark.sources.iceberg import read_iceberg, write_iceberg
     from jobminer_spark.sources.uniform import export_iceberg_to_delta
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "revuni",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_revuni_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         ice = _os.path.join(work, "ice")
         dl = _os.path.join(work, "dl")
@@ -985,10 +957,11 @@ def iceberg_delta_export_parity(
                 for p in adds
             )
         )
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "dl": dl, "parity": parity, "zero_copy": zero_copy,
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "revuni", _build)
     got = read_delta(spark, s["dl"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),

@@ -55,10 +55,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import (
-    scenario_workdir,
-    source_fingerprint,
-)
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 from jobminer_spark.sources.delta import (
@@ -73,7 +70,6 @@ from jobminer_spark.sources.roaring import (
     z85_encode,
 )
 
-_SCENARIO_CACHE: dict[tuple[str, str, str], dict] = {}
 
 _ROWS_CTE = """
     rows AS (
@@ -122,13 +118,14 @@ def _stage_plain_parquet(
 
 
 def _scenario(spark: SparkSession, sf_dir: str) -> dict:
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[cache_key]
+    return scenario(
+        spark, sf_dir, "dv", lambda work: _build_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     import pyarrow.parquet as papq
 
-    work = scenario_workdir(spark, sf_dir, "jm_dv_", fp)
     rows = _rows(spark, sf_dir)
 
     # ---- deletion-vector table (foreign v3 shape) ----
@@ -460,7 +457,6 @@ def _scenario(spark: SparkSession, sf_dir: str) -> dict:
         "mord_n_updated": n_updated,
         "mord_files_unchanged": int(n_files_before == n_files_after),
     }
-    _SCENARIO_CACHE[cache_key] = result
     return result
 
 
@@ -823,12 +819,7 @@ def delta_constraints_identity_audit(
     system's DDL-prep + dedup'd insert path (pracuj_scraper.py
     create/insert) never evaluates table-side constraints — this is
     the lakehouse-native upgrade of that write path."""
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "constid",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_cid_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = os.path.join(work, "constid")
         # the foreign table: schema + features only, zero data files
@@ -961,11 +952,12 @@ def delta_constraints_identity_audit(
             int(md["delta.identity.highWaterMark"])
             == 100 + 10 * (n - 1)
         )
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "t": t, "wm_ok": wm_ok, "refused": refused,
             "genbad": genbad,
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "cid", _build)
     got = read_delta(spark, s["t"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),

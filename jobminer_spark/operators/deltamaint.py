@@ -34,10 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import (
-    scenario_workdir,
-    source_fingerprint,
-)
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 from jobminer_spark.sources.delta import (
@@ -47,7 +44,6 @@ from jobminer_spark.sources.delta import (
     write_delta,
 )
 
-_SCENARIO_CACHE: dict[tuple[str, str, str], dict] = {}
 
 _ROWS_CTE = """
     rows AS (
@@ -84,12 +80,12 @@ def _build_partitioned(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 
 def _scenario(spark: SparkSession, sf_dir: str) -> dict:
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_dmaint_", fp)
+    return scenario(
+        spark, sf_dir, "dmaint", lambda work: _build_scenario(spark, sf_dir, work)
+    )
 
+
+def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     opt = os.path.join(work, "opt")
     _build_partitioned(spark, sf_dir, opt)
     pre_version = _N_APPENDS - 1
@@ -123,7 +119,6 @@ def _scenario(spark: SparkSession, sf_dir: str) -> dict:
         "survivors_stable": survivors_pre == survivors_post,
         "rerun_clean": rerun == ([], 0),
     }
-    _SCENARIO_CACHE[cache_key] = result
     return result
 
 

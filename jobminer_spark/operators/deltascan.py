@@ -32,10 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import (
-    scenario_workdir,
-    source_fingerprint,
-)
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 from jobminer_spark.sources.delta import (
@@ -47,7 +44,6 @@ from jobminer_spark.sources.delta import (
     write_delta,
 )
 
-_SCENARIO_CACHE: dict[tuple[str, str, str], dict] = {}
 
 _N_BUCKETS = 8
 
@@ -72,11 +68,12 @@ def _rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scenario(spark: SparkSession, sf_dir: str) -> dict:
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_dscan_", fp)
+    return scenario(
+        spark, sf_dir, "dscan", lambda work: _build_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     rows = _rows(spark, sf_dir)
 
     # RANGE-CLUSTERED table: commit i holds event_id ∈ [i·W, (i+1)·W),
@@ -205,7 +202,6 @@ def _scenario(spark: SparkSession, sf_dir: str) -> dict:
         "n_opt_outputs": n_after,
         "n_versions": delta_latest_version(chg) + 1,
     }
-    _SCENARIO_CACHE[cache_key] = result
     return result
 
 
@@ -443,12 +439,7 @@ def delta_liquid_clustering_audit(
         delta_latest_version,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "liquid",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_liq_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         zrows = rows.select(
             (F.col("event_id") % 16).alias("a"),
@@ -484,14 +475,15 @@ def delta_liquid_clustering_audit(
             <= set(proto.get("writerFeatures") or [])
             and pre == pre_total == 4
         )
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "table": t,
             "flt": flt,
             "registry_ok": registry_ok,
             "improved": int(pruned < total),
             "quarter": int(pruned * 4 <= total),
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "liq", _build)
     got = (
         read_delta(spark, s["table"], stats_filters=s["flt"])
         .where(F.col("a").between(0, 3) & F.col("b").between(0, 3))

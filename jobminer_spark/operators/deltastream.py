@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import scenario_workdir, source_fingerprint
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 from jobminer_spark.sources.delta import (
@@ -47,8 +47,6 @@ from jobminer_spark.sources.delta import (
     write_delta,
 )
 
-_SINK_CACHE: dict[tuple[str, str, str], dict] = {}
-_EXPORT_CACHE: dict[tuple[str, str, str], dict] = {}
 
 _SINK_APP_ID = "jm-delta-stream-sink"
 
@@ -63,14 +61,14 @@ def _rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_stream_sink(spark: SparkSession, sf_dir: str) -> dict:
-    # fingerprint-keyed (ADVICE r14's stale-cache rule)
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _SINK_CACHE:
-        return _SINK_CACHE[cache_key]
+    return scenario(
+        spark, sf_dir, "dsink", lambda work: _build_run_stream_sink(spark, sf_dir, work)
+    )
+
+
+def _build_run_stream_sink(spark: SparkSession, sf_dir: str, work: str) -> dict:
     from jobminer_spark.streaming.windows import pinned_drain_shuffle
 
-    work = scenario_workdir(spark, sf_dir, "jm_dsink_", fp)
     spool = os.path.join(work, "spool")
     table = os.path.join(work, "delta_table")
 
@@ -124,7 +122,6 @@ def _run_stream_sink(spark: SparkSession, sf_dir: str) -> dict:
         "replay_idempotent": 1 if s1 == s2 else 0,
         "n_replayed_skips": len(skipped),
     }
-    _SINK_CACHE[cache_key] = result
     return result
 
 
@@ -223,15 +220,14 @@ def export_lakehouse_snapshot_to_delta(
 
 
 def _run_export(spark: SparkSession, sf_dir: str) -> dict:
-    # fingerprint-keyed on ORDERS — the table this scenario derives
-    # from (the events fingerprint would miss an orders rewrite)
-    fp = source_fingerprint(sf_dir, "orders")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _EXPORT_CACHE:
-        return _EXPORT_CACHE[cache_key]
+    return scenario(
+        spark, sf_dir, "dexp", lambda work: _build_run_export(spark, sf_dir, work)
+    )
+
+
+def _build_run_export(spark: SparkSession, sf_dir: str, work: str) -> dict:
     from jobminer_spark.lakehouse import create_table, merge_into
 
-    work = scenario_workdir(spark, sf_dir, "jm_dexp_", fp)
     lake = os.path.join(work, "lake")
     delta = os.path.join(work, "delta_export")
 
@@ -249,8 +245,7 @@ def _run_export(spark: SparkSession, sf_dir: str) -> dict:
         spark, lake, updates, matched_condition=lambda j: F.lit(True)
     )
     export_lakehouse_snapshot_to_delta(spark, lake, delta)
-    _EXPORT_CACHE[cache_key] = {"lake": lake, "delta": delta}
-    return _EXPORT_CACHE[cache_key]
+    return {"lake": lake, "delta": delta}
 
 
 @query(

@@ -42,75 +42,28 @@ as drift.py: cum·n stays in int64 through ~3e9 rows per side.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import jobminer_spark.operators.drift  # noqa: F401  (registers the shared oracle)
-from jobminer_spark.operators.common import sweep_stale_dirs
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.operators.rfm import _distributed_prefix
 from jobminer_spark.registry import ORACLES, query
 from jobminer_spark.sources import load_table
 
-# root dir per (session, sf, data fingerprint), built once — the
-# "yesterday ran the profile job" premise; dead sessions' dirs are
-# swept like jm_lake_
-_PROFILE_CACHE: dict[tuple[str, str, str], str] = {}
-
-
-def _data_fingerprint(sf_dir: str) -> str:
-    """Cheap change-detection for the events source under ``sf_dir``
-    (ADVICE r14) — the shared operators.common.source_fingerprint,
-    kept under this name because tests and sibling modules key the
-    profile caches through it."""
-    from jobminer_spark.operators.common import source_fingerprint
-
-    return source_fingerprint(sf_dir, "events")
-
-
-def _cached_root(spark: SparkSession, sf_dir: str) -> str | None:
-    """The profile root the CURRENT data state of ``sf_dir`` resolves
-    to, or None if not yet built — the one sanctioned way for tests to
-    reach the cache (the key shape is an implementation detail)."""
-    return _PROFILE_CACHE.get(
-        (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            _data_fingerprint(sf_dir),
-        )
+def _fixture_profile(spark: SparkSession, sf_dir: str) -> str:
+    """Root of the first-half baseline profile, built once per
+    scenario — the "yesterday ran the profile job" premise."""
+    return scenario(
+        spark, sf_dir, "driftbase",
+        lambda root: _build_fixture_profile(spark, sf_dir, root),
     )
 
 
-def _build_fixture_profile(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per session+sf+data-state) the first-half baseline
-    profile."""
-    cache_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint(sf_dir),
-    )
-    if cache_key in _PROFILE_CACHE:
-        return _PROFILE_CACHE[cache_key]
-    app = spark.sparkContext.applicationId
-    tmp = tempfile.gettempdir()
-    sweep_stale_dirs(tmp, "jm_driftbase_", keep_token=f"jm_driftbase_{app}_")
-    # Tag carries a full-path digest, not just the basename: the cache
-    # key is the full sf_dir, so two dirs sharing a basename (two
-    # tmp_path fixtures named alike) must not collide on one root —
-    # a basename-only tag would let the second build overwrite the
-    # first's profile while both cache entries kept pointing at it.
-    # The data fingerprint rides along so a rewritten dataset under
-    # the same path gets its own root (never overwriting a profile an
-    # older cache entry still points at).
-    digest = hashlib.md5(
-        (os.path.abspath(sf_dir) + "#" + cache_key[2]).encode()
-    ).hexdigest()[:10]
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tmp, f"jm_driftbase_{app}_{sf_tag}_{digest}")
-
+def _build_fixture_profile(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """Build the first-half baseline profile under ``root``."""
     ev = load_table(spark, sf_dir, "events").select(
         F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
         F.floor(F.col("value") * 100.0).cast("long").alias("vq"),
@@ -159,7 +112,6 @@ def _build_fixture_profile(spark: SparkSession, sf_dir: str) -> str:
         F.lit(int(n1)).cast("long").alias("n1"),
         F.lit(int(n1_all)).cast("long").alias("n1_all"),
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(root, "meta"))
-    _PROFILE_CACHE[cache_key] = root
     return root
 
 
@@ -232,7 +184,7 @@ def ks_drift_vs_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py). ``mid`` is read from the profile's one-row
     meta (bounded scalar) and inlined so the batch filter is a
     literal predicate."""
-    root = _build_fixture_profile(spark, sf_dir)
+    root = _fixture_profile(spark, sf_dir)
     batch_counts = (
         _batch_events(spark, sf_dir, root)
         .filter(F.col("has_v"))
@@ -324,7 +276,7 @@ def tvd_drift_vs_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     event, null values included, exactly like tvd_drift_event_types;
     types new in the batch and types that vanished both register
     through the full-outer grid union."""
-    root = _build_fixture_profile(spark, sf_dir)
+    root = _fixture_profile(spark, sf_dir)
     batch_type_counts = (
         _batch_events(spark, sf_dir, root)
         .groupBy("event_type")
@@ -498,7 +450,7 @@ def psi_drift_vs_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment derives the exact-integer recipe and its bounds). The
     comparison plan scans the batch events once plus the profile
     parquet; the baseline's raw rows are never rescanned."""
-    root = _build_fixture_profile(spark, sf_dir)
+    root = _fixture_profile(spark, sf_dir)
     batch_counts = (
         _batch_events(spark, sf_dir, root)
         .filter(F.col("has_v"))
@@ -525,8 +477,6 @@ def psi_drift_vs_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # walk oldest-first so a crash mid-vacuum leaves a re-vacuumable
 # store (the r13 GC-ordering rule).
 
-_HISTORY_CACHE: dict[tuple[str, str, str], str] = {}
-_HISTORY_VACUUMED: dict[str, int] = {}
 _HISTORY_DAYS = 3  # persisted baseline days; quarter 3 is the batch
 PROFILE_RETENTION_KEEP = 2
 
@@ -537,29 +487,21 @@ def _day_expr(us_col: str, lo: int, span: int) -> str:
     return f"(({us_col} - {lo}) * 4) div {span}"
 
 
-def _build_profile_history(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per session+sf+data-state) the date-keyed profile
-    store: day0/ day1/ day2/ each holding grid/ types/ meta/, plus
-    bounds/ with the (lo, span) the day split derives from. One events
+def _profile_history(spark: SparkSession, sf_dir: str) -> str:
+    """Root of the date-keyed profile store, built once per scenario."""
+    return scenario(
+        spark, sf_dir, "drifthist",
+        lambda root: _build_profile_history(spark, sf_dir, root),
+    )
+
+
+def _build_profile_history(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """Build under ``root`` the date-keyed profile store: day0/ day1/
+    day2/ each holding grid/ types/ meta/, plus bounds/ with the
+    (lo, span) the day split derives from. One events
     scan per day job — in production each day's job ran on that day;
     here they amortize into the fixture build exactly like
     _build_fixture_profile."""
-    cache_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint(sf_dir),
-    )
-    if cache_key in _HISTORY_CACHE:
-        return _HISTORY_CACHE[cache_key]
-    app = spark.sparkContext.applicationId
-    tmp = tempfile.gettempdir()
-    sweep_stale_dirs(tmp, "jm_drifthist_", keep_token=f"jm_drifthist_{app}_")
-    digest = hashlib.md5(
-        (os.path.abspath(sf_dir) + "#" + cache_key[2]).encode()
-    ).hexdigest()[:10]
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tmp, f"jm_drifthist_{app}_{sf_tag}_{digest}")
-
     ev = load_table(spark, sf_dir, "events").select(
         F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
         F.floor(F.col("value") * 100.0).cast("long").alias("vq"),
@@ -623,7 +565,6 @@ def _build_profile_history(spark: SparkSession, sf_dir: str) -> str:
         F.lit(int(lo)).cast("long").alias("lo"),
         F.lit(int(span)).cast("long").alias("span"),
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(root, "bounds"))
-    _HISTORY_CACHE[cache_key] = root
     return root
 
 
@@ -718,7 +659,7 @@ def profile_history_day_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     The comparison plan reads the batch events once plus day 1's grid
     parquet; no other day and no baseline raw rows are touched —
     compare_batch_to_profile is reused unchanged against the day dir."""
-    root = _build_profile_history(spark, sf_dir)
+    root = _profile_history(spark, sf_dir)
     b = spark.read.parquet(os.path.join(root, "bounds")).first()
     # bounded scalar; inlined so the batch filter is a literal
     # predicate (in production: the partition-pruning bound)
@@ -778,10 +719,10 @@ def profile_history_retention_audit(
     unlink count (cached at first vacuum — later calls are no-ops on
     an already-retained store), pinned against the oracle's expected
     1."""
-    root = _build_profile_history(spark, sf_dir)
-    if root not in _HISTORY_VACUUMED:
-        _HISTORY_VACUUMED[root] = vacuum_profile_history(root)
-    removed = _HISTORY_VACUUMED[root]
+    root = _profile_history(spark, sf_dir)
+    removed = scenario(
+        spark, sf_dir, "drifthistvac", lambda _work: vacuum_profile_history(root)
+    )
     days = sorted(
         int(d[3:])
         for d in os.listdir(root)
@@ -820,10 +761,14 @@ def profile_history_retention_audit(
 # against the persisted profile as it arrives.
 # ---------------------------------------------------------------------------
 
-_STREAM_DRIFT_CACHE: dict[tuple[str, str, str], dict] = {}
-
-
 def _run_stream_drift(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "sdrift",
+        lambda work: _build_stream_drift(spark, sf_dir, work),
+    )
+
+
+def _build_stream_drift(spark: SparkSession, sf_dir: str, work: str) -> dict:
     """Spool the batch-side events into 3 parquet files, stream them
     back one file per trigger (maxFilesPerTrigger=1 → exactly 3
     micro-batches), and in each foreachBatch: (a) run the batch
@@ -836,27 +781,9 @@ def _run_stream_drift(spark: SparkSession, sf_dir: str) -> dict:
     The parity result is the accumulated state's comparison, which is
     batching-invariant: counts commute, so any drain schedule must
     reproduce the direct two-sample KS bit-for-bit."""
-    import shutil
-
     from jobminer_spark.streaming.windows import pinned_drain_shuffle
 
-    cache_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _data_fingerprint(sf_dir),
-    )
-    if cache_key in _STREAM_DRIFT_CACHE:
-        return _STREAM_DRIFT_CACHE[cache_key]
-    root = _build_fixture_profile(spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    tmp = tempfile.gettempdir()
-    sweep_stale_dirs(tmp, "jm_sdrift_", keep_token=f"jm_sdrift_{app}_")
-    digest = hashlib.md5(
-        (os.path.abspath(sf_dir) + "#" + cache_key[2]).encode()
-    ).hexdigest()[:10]
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    work = os.path.join(tmp, f"jm_sdrift_{app}_{sf_tag}_{digest}")
-    shutil.rmtree(work, ignore_errors=True)
+    root = _fixture_profile(spark, sf_dir)
     spool = os.path.join(work, "spool")
 
     # Spool the batch side as 3 files — the "3 daily drops" fixture.
@@ -867,7 +794,7 @@ def _run_stream_drift(spark: SparkSession, sf_dir: str) -> dict:
     ).repartition(3).write.mode("overwrite").parquet(spool)
 
     monitor_rows_seen = [0]  # count only — keeping the rows would
-    # pin them (and the closure) in the cache for the session
+    # pin them (and the closure) in the memo for the session
 
     def monitor_batch(bdf: DataFrame, bid: int) -> None:
         sp = bdf.sparkSession
@@ -926,9 +853,7 @@ def _run_stream_drift(spark: SparkSession, sf_dir: str) -> dict:
         )
         .first()
     )
-    result = {"row": final.asDict(), "n_batches": len(dirs)}
-    _STREAM_DRIFT_CACHE[cache_key] = result
-    return result
+    return {"row": final.asDict(), "n_batches": len(dirs)}
 
 
 @query(
@@ -1188,7 +1113,7 @@ def drift_alert_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons run against the same persisted profile (one build,
     plan shape unchanged); thresholds are stated integer constants so
     the row is exact cross-engine."""
-    root = _build_fixture_profile(spark, sf_dir)
+    root = _fixture_profile(spark, sf_dir)
     batch = _batch_events(spark, sf_dir, root)
     vcounts = (
         batch.filter(F.col("has_v"))

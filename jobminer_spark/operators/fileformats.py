@@ -31,14 +31,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import (
-    scenario_workdir,
-    source_fingerprint,
-)
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 
-_SCENARIO_CACHE: dict[tuple[str, str, str], dict] = {}
 
 # The shared derivation, in both dialects: a quantized value column
 # (nullable, exercised by the null-count checks) and a TRICKY string
@@ -70,11 +66,12 @@ def _rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scenario(spark: SparkSession, sf_dir: str) -> dict:
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_ff_", fp)
+    return scenario(
+        spark, sf_dir, "ff", lambda work: _build_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     rows = _rows(spark, sf_dir)
 
     orc_dir = os.path.join(work, "orc")
@@ -109,7 +106,6 @@ def _scenario(spark: SparkSession, sf_dir: str) -> dict:
     )
 
     result = {"orc": orc_dir, "csv": csv_dir, "jsonl": json_dir}
-    _SCENARIO_CACHE[cache_key] = result
     return result
 
 

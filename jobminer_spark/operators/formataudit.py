@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import scenario_workdir, source_fingerprint
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 from jobminer_spark.sources.avro import read_avro, write_avro_dataset
@@ -37,7 +37,6 @@ from jobminer_spark.sources.iceberg import (
     write_iceberg,
 )
 
-_SCENARIO_CACHE: dict[tuple[str, str, str], dict] = {}
 
 _ROWS_CTE = """
     rows AS (
@@ -57,13 +56,12 @@ def _rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scenario(spark: SparkSession, sf_dir: str) -> dict:
-    # fingerprint-keyed (ADVICE r14's stale-cache rule): a rewritten
-    # dataset under the same path gets a fresh root and fresh results
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_fmt_", fp)
+    return scenario(
+        spark, sf_dir, "fmt", lambda work: _build_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     rows = _rows(spark, sf_dir)
 
     avro_dir = os.path.join(work, "avro_ds")
@@ -80,7 +78,6 @@ def _scenario(spark: SparkSession, sf_dir: str) -> dict:
         "s1": s1,
         "s2": s2,
     }
-    _SCENARIO_CACHE[cache_key] = result
     return result
 
 

@@ -33,10 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import (
-    scenario_workdir,
-    source_fingerprint,
-)
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 from jobminer_spark.sources.iceberg import (
@@ -46,7 +43,6 @@ from jobminer_spark.sources.iceberg import (
     write_iceberg_deletes,
 )
 
-_SCENARIO_CACHE: dict[tuple[str, str, str], dict] = {}
 
 _US_DAY = 86_400_000_000
 
@@ -73,14 +69,15 @@ def _rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scenario(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "icedel", lambda work: _build_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     import os
     import shutil
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_icedel_", fp)
     rows = _rows(spark, sf_dir)
     table = os.path.join(work, "ice")
     # two appends cover multi-manifest state; the third lands AFTER
@@ -598,7 +595,7 @@ def _scenario(spark: SparkSession, sf_dir: str) -> dict:
             if e["data_file"].get("sort_order_id") != 1:
                 so_stamped = 0
 
-    _SCENARIO_CACHE[cache_key] = {
+    return {
         "v3dv": v3_table,
         "sorted": so_table,
         "so_recorded": so_recorded,
@@ -623,7 +620,6 @@ def _scenario(spark: SparkSession, sf_dir: str) -> dict:
         ),
         "first_gone": first_gone,
     }
-    return _SCENARIO_CACHE[cache_key]
 
 
 @query(
@@ -664,10 +660,16 @@ def iceberg_position_delete_audit(
     )
 
 
-_RB_CACHE: dict[tuple[str, str, str], dict] = {}
 
 
 def _rollback_scenario(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "icerb",
+        lambda work: _build_rollback_scenario(spark, sf_dir, work),
+    )
+
+
+def _build_rollback_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     """Rollback + orphan-file lifecycle (late r19): a two-append
     table, two PLANTED orphans (the residue shape of a crashed
     writer — one data file, one manifest avro, neither referenced by
@@ -680,11 +682,6 @@ def _rollback_scenario(spark: SparkSession, sf_dir: str) -> dict:
         rollback_iceberg,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if cache_key in _RB_CACHE:
-        return _RB_CACHE[cache_key]
-    work = scenario_workdir(spark, sf_dir, "jm_icerb_", fp)
     rows = _rows(spark, sf_dir)
     rb = os.path.join(work, "rb")
     write_iceberg(spark, rb, rows.filter(F.col("event_id") % 2 == 0))
@@ -714,7 +711,6 @@ def _rollback_scenario(spark: SparkSession, sf_dir: str) -> dict:
         "age_gate_ok": age_gate_ok,
         "orphans_exact": orphans_exact,
     }
-    _RB_CACHE[cache_key] = result
     return result
 
 
@@ -1211,12 +1207,7 @@ def iceberg_v3_dv_write_audit(
 
     import os as _os
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "dvwrite",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icedvw_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "dvw")
         write_iceberg(spark, t, rows.filter(F.col("event_id") % 2 == 0))
@@ -1245,12 +1236,13 @@ def iceberg_v3_dv_write_audit(
         refs = [
             r["referenced_file"] for r in dels if r.get("puffin")
         ]
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "table": t,
             "fv": iceberg_metadata(t).get("format-version"),
             "single": int(bool(refs) and len(refs) == len(set(refs))),
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "icedvw", _build)
     return read_iceberg(spark, s["table"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),
@@ -1300,12 +1292,7 @@ def iceberg_merge_upsert_audit(
         merge_iceberg,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "merge",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icemrg_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "merge")
         write_iceberg(
@@ -1320,11 +1307,12 @@ def iceberg_merge_upsert_audit(
             ),
             ["event_id"],
         )
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "table": t,
             "n_snaps": len(iceberg_snapshots(t)),
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "icemrg", _build)
     return read_iceberg(spark, s["table"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),
@@ -1431,12 +1419,7 @@ def iceberg_rewrite_data_files_audit(
         write_iceberg_deletes,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "binpack",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icebp_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "binpack")
         for i in range(6):
@@ -1460,13 +1443,14 @@ def iceberg_rewrite_data_files_audit(
         )
         _sid, _n = rewrite_iceberg_data_files(spark, t, target_files=2)
         _d, dl, _eq = _snapshot_files(t)
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "table": t,
             "files_before": n_before,
             "at_target": int(len(iceberg_live_files(t)) <= 2),
             "deletes_pruned": int(not dl),
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "icebp", _build)
     return read_iceberg(spark, s["table"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),
@@ -1514,12 +1498,7 @@ def iceberg_v3_default_values_audit(
         iceberg_metadata,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "v3defaults",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icedf_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "v3defaults")
         write_iceberg(
@@ -1538,12 +1517,13 @@ def iceberg_v3_default_values_audit(
             by_name.exceptAll(by_fid).isEmpty()
             and by_fid.exceptAll(by_name).isEmpty()
         )
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "table": t,
             "fv": iceberg_metadata(t)["format-version"],
             "parity": parity,
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "icedf", _build)
     return read_iceberg(spark, s["table"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),
@@ -1590,12 +1570,7 @@ def iceberg_v3_row_lineage_audit(
 
     from jobminer_spark.sources.iceberg import read_iceberg_row_ids
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "rowlineage",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icerl_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "lineage")
         for m in range(3):
@@ -1603,8 +1578,9 @@ def iceberg_v3_row_lineage_audit(
                 spark, t, rows.filter(F.col("event_id") % 3 == m),
                 row_lineage=(m == 0),
             )
-        _SCENARIO_CACHE[cache_key] = {"lineage": t}
-    t = _SCENARIO_CACHE[cache_key]["lineage"]
+        return {"lineage": t}
+
+    t = scenario(spark, sf_dir, "icerl", _build)["lineage"]
     got = read_iceberg_row_ids(spark, t)
     return got.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -1654,12 +1630,7 @@ def iceberg_schema_evolution_audit(
         rename_iceberg_column,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "evolve",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icevo_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "evolve")
         write_iceberg(
@@ -1689,13 +1660,14 @@ def iceberg_schema_evolution_audit(
         # column exactly on the pre-rename files
         by_name = read_iceberg(spark, t)
         n_null = by_name.where(F.col("quantum").isNull()).count()
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "evolve": t,
             "fid": fid,
             "ncols": len(cur["fields"]),
             "nulls_old": int(n_null == n_even),
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "icevo", _build)
     got = read_iceberg(spark, s["evolve"], resolve="field-id").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("quantum").cast("long").alias("ck"),
@@ -1742,12 +1714,7 @@ def iceberg_spec_evolution_audit(
         iceberg_metadata,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "specevo",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icespe_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "specevo")
         write_iceberg(
@@ -1772,10 +1739,11 @@ def iceberg_spec_evolution_audit(
             == [0, 1]
             and 0 < len(pruned.inputFiles()) < len(full.inputFiles())
         )
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "specevo": t, "evolution_ok": evolution_ok,
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "icespe", _build)
     full = read_iceberg(spark, s["specevo"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("val_q").cast("long").alias("ck"),
@@ -1833,12 +1801,7 @@ def stream_iceberg_sink_exactly_once(
     )
     from jobminer_spark.streaming.windows import pinned_drain_shuffle
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "icesink",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icesink_", fp)
+    def _build(work: str) -> dict:
         spool = _os.path.join(work, "spool")
         table = _os.path.join(work, "ice_sink")
         app = "jm-iceberg-stream-sink"
@@ -1892,14 +1855,15 @@ def stream_iceberg_sink_exactly_once(
         s1 = state()
         drain("ck_run2")  # full re-delivery, fresh checkpoint
         s2 = state()
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "n_snapshots": s2[0],
             "n_rows": s2[1],
             "checksum": s2[2],
             "replay_idempotent": int(s1 == s2),
             "n_replayed_skips": len(skipped),
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "icesink", _build)
     return spark.range(1).select(
         F.lit(s["n_snapshots"]).cast("long").alias("n_snapshots"),
         F.lit(s["n_rows"]).cast("long").alias("n_rows"),
@@ -1945,12 +1909,7 @@ def iceberg_refs_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         set_iceberg_ref,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "refs",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icerefs_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "refs")
         write_iceberg(
@@ -1971,8 +1930,9 @@ def iceberg_refs_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             == meta["current-snapshot-id"]
             and n_exp == 1
         )
-        _SCENARIO_CACHE[cache_key] = {"refs": t, "refs_ok": refs_ok}
-    s = _SCENARIO_CACHE[cache_key]
+        return {"refs": t, "refs_ok": refs_ok}
+
+    s = scenario(spark, sf_dir, "icerefs", _build)
     tag = read_iceberg(spark, s["refs"], ref="v1.0").agg(
         F.count(F.lit(1)).cast("long").alias("n_tag"),
         F.sum("val_q").cast("long").alias("ck_tag"),
@@ -2036,12 +1996,7 @@ def iceberg_wap_branch_audit(
         set_iceberg_ref,
     )
 
-    fp = source_fingerprint(sf_dir, "events")
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir, fp, "wap",
-    )
-    if cache_key not in _SCENARIO_CACHE:
-        work = scenario_workdir(spark, sf_dir, "jm_icewap_", fp)
+    def _build(work: str) -> dict:
         rows = _rows(spark, sf_dir)
         t = _os.path.join(work, "wap")
         write_iceberg(
@@ -2096,7 +2051,7 @@ def iceberg_wap_branch_audit(
             branch="audit",
         )
         fast_forward_iceberg(t2, "main", "audit")
-        _SCENARIO_CACHE[cache_key] = {
+        return {
             "t": t,
             "t2": t2,
             "staged_n": int(staged_main["n"]),
@@ -2104,7 +2059,8 @@ def iceberg_wap_branch_audit(
             "isolated": isolated,
             "ff_guard": ff_guard,
         }
-    s = _SCENARIO_CACHE[cache_key]
+
+    s = scenario(spark, sf_dir, "icewap", _build)
     branch = read_iceberg(spark, s["t"], ref="audit").agg(
         F.count(F.lit(1)).cast("long").alias("n_branch"),
         F.sum("val_q").cast("long").alias("ck_branch"),

@@ -25,14 +25,10 @@ stream_sink_parity caching discipline (operators/audits.py).
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import sweep_stale_dirs
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 
@@ -53,10 +49,13 @@ def _base_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCENARIO_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "lake", lambda work: _build_scenario(spark, sf_dir, work)
+    )
+
+
+def _build_scenario(spark: SparkSession, sf_dir: str, table: str) -> dict:
     from jobminer_spark.lakehouse import (
         CommitConflict,
         _commit,
@@ -65,18 +64,6 @@ def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
         merge_into,
         read_snapshot,
     )
-
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[cache_key]
-
-    # one fixed dir per (session, sf); dead sessions' dirs are swept
-    app = spark.sparkContext.applicationId
-    root = tempfile.gettempdir()
-    sweep_stale_dirs(root, "jm_lake_", keep_token=f"jm_lake_{app}_")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    table = os.path.join(root, f"jm_lake_{app}_{sf_tag}")
-    shutil.rmtree(table, ignore_errors=True)
 
     # base feeds the create write AND both MERGE #1 update branches
     # (transitions + inserts): a lazy localCheckpoint materializes it
@@ -252,6 +239,7 @@ def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
         r3, tt, change_rows = r3_f.result(), tt_f.result(), feed_f.result()
 
     result = {
+        "table": table,
         "n_rows_v1": r1["n"],
         "checksum_v1": r1["ck"],
         "n_files_v1": None,  # filled below
@@ -274,7 +262,6 @@ def _run_scenario(spark: SparkSession, sf_dir: str) -> dict:
     # _manifest_files resolves shard refs too, so the count stays
     # correct even if the manifest split ever engages at this scale
     result["n_files_v1"] = len(_manifest_files(_read_manifest(table, 1)))
-    _SCENARIO_CACHE[cache_key] = result
     return result
 
 
@@ -416,9 +403,6 @@ def lakehouse_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(s["change_rows"], schema)
 
 
-_VACUUM_CACHE: dict[tuple[str, str], dict] = {}
-
-
 @query(
     "lakehouse_vacuum_audit",
     oracle=f"""
@@ -450,12 +434,9 @@ def lakehouse_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalars were captured pre-vacuum)."""
     from jobminer_spark.lakehouse import read_snapshot, vacuum
 
-    s = _run_scenario(spark, sf_dir)  # ensures table exists at v3
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key not in _VACUUM_CACHE:
-        app = spark.sparkContext.applicationId
-        sf_tag = os.path.basename(os.path.normpath(sf_dir))
-        table = os.path.join(tempfile.gettempdir(), f"jm_lake_{app}_{sf_tag}")
+    table = _run_scenario(spark, sf_dir)["table"]  # the table at v3
+
+    def _build(_work: str) -> dict:
         v = vacuum(table, keep_last=1)
         after = read_snapshot(spark, table).agg(
             F.count(F.lit(1)).alias("n"), F.sum("price_q").alias("ck")
@@ -465,15 +446,15 @@ def lakehouse_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             v1_readable = 1
         except Exception:  # noqa: BLE001 — any failure = not readable
             v1_readable = 0
-        _VACUUM_CACHE[cache_key] = {
+        return {
             "n_manifests_removed": v["n_manifests_removed"],
             "n_files_removed": v["n_files_removed"],
             "n_rows_after": after["n"],
             "checksum_after": after["ck"],
             "v1_still_readable": v1_readable,
         }
-    c = _VACUUM_CACHE[cache_key]
-    del s  # scenario scalars unused here; the call pins ordering
+
+    c = scenario(spark, sf_dir, "lakevac", _build)
     return _scalars_df(
         spark,
         [
@@ -530,10 +511,16 @@ def lakehouse_concurrency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NEG_CAP = 2048  # negative-key scenario input bound (~2k rows)
 _NEG_UPD = 512   # updates touch keys in (-_NEG_UPD, 0]
 
-_NEG_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def _run_negative_key_scenario(spark: SparkSession, sf_dir: str) -> dict:
+    return scenario(
+        spark, sf_dir, "lakeneg",
+        lambda work: _build_negative_key_scenario(spark, sf_dir, work),
+    )
+
+
+def _build_negative_key_scenario(
+    spark: SparkSession, sf_dir: str, table: str
+) -> dict:
     """ADVICE r12 floor-bucket fix, attested cross-engine: a table
     whose keys are NEGATED order keys spans buckets -1 and 0 —
     exactly the boundary where Spark's truncating `div` used to place
@@ -545,17 +532,6 @@ def _run_negative_key_scenario(spark: SparkSession, sf_dir: str) -> dict:
     Before the fix this scenario yields n_updates_applied = 0 and
     n_dup_keys > 0 — a red driver row, not a silent corruption."""
     from jobminer_spark.lakehouse import create_table, merge_into, read_snapshot
-
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _NEG_CACHE:
-        return _NEG_CACHE[cache_key]
-
-    app = spark.sparkContext.applicationId
-    root = tempfile.gettempdir()
-    sweep_stale_dirs(root, "jm_lakeneg_", keep_token=f"jm_lakeneg_{app}_")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    table = os.path.join(root, f"jm_lakeneg_{app}_{sf_tag}")
-    shutil.rmtree(table, ignore_errors=True)
 
     base = (
         load_table(spark, sf_dir, "orders")
@@ -593,7 +569,7 @@ def _run_negative_key_scenario(spark: SparkSession, sf_dir: str) -> dict:
         .filter(F.col("c") > 1)
         .count()
     )
-    result = {
+    return {
         "n_rows_v2": r["n"],
         "n_status_x": r["nx"],
         "checksum_v2": r["ck"],
@@ -601,8 +577,6 @@ def _run_negative_key_scenario(spark: SparkSession, sf_dir: str) -> dict:
         "n_inserts": m["n_inserts"],
         "n_dup_keys": n_dup,
     }
-    _NEG_CACHE[cache_key] = result
-    return result
 
 
 @query(

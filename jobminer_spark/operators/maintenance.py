@@ -27,12 +27,11 @@ that partition's size regardless of table size.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
 
@@ -53,44 +52,13 @@ def _events_slim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tmp(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Fixed path per (session, sf, stage): ``mode("overwrite")``
-    then REUSES the directory on every re-run, so repeated sweeps
-    leave at most one copy per live session instead of accumulating
-    a fresh uuid-suffixed directory per query execution (the r9
-    review's /tmp-leak finding). applicationId keeps concurrent
-    Spark sessions from racing on one path; on first use in a session
-    the directories of DEAD sessions are swept away (r9 ADVICE: the
-    per-session keying bounded within-session growth but let every
-    NEW session strand four full events-projection copies)."""
-    app = spark.sparkContext.applicationId
-    _sweep_stale_dirs(app)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        tempfile.gettempdir(), f"jm_maint_{app}_{sf_tag}_{name}"
-    )
-
-
-_SWEPT_FOR_APP: set[str] = set()
-
-
-def _sweep_stale_dirs(live_app: str) -> None:
-    """Delete jm_maint_* directories left by other (dead) sessions.
-    Runs once per session. A CONCURRENT live session's dirs are
-    unprotectable without a registry, but the overwrite-mode writes
-    mean the worst case is that session re-writing its stage — the
-    steady state on a shared host is bounded at one session's four
-    directories instead of growing forever."""
-    if live_app in _SWEPT_FOR_APP:
-        return
-    _SWEPT_FOR_APP.add(live_app)
-    root = tempfile.gettempdir()
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    for d in entries:
-        if d.startswith("jm_maint_") and f"jm_maint_{live_app}_" not in d:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    """Fixed path per (scenario, stage): ``mode("overwrite")`` then
+    REUSES the directory on every re-run, so repeated sweeps leave at
+    most one copy per live session instead of accumulating a fresh
+    uuid-suffixed directory per query execution. The root is a
+    scenario work dir, so dead sessions' roots are swept (age-gated)
+    when it is first made."""
+    return os.path.join(scenario(spark, sf_dir, "maint", lambda work: work), name)
 
 
 def _n_files(df: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jobminer_spark.operators.common import bucket_sql, hash_bucket
+from jobminer_spark.operators.common import bucket_sql, hash_bucket, scenario
 from jobminer_spark.operators.dedupe import (
     _CC_EDGES_CTE,
     _CC_REACH_CTE,
@@ -49,15 +49,6 @@ _SPLIT_CASE = "CASE WHEN {b} < 8 THEN 'train' WHEN {b} < 9 THEN 'val' ELSE 'test
 _GROUPED_CTE = f"""
     {_CC_EDGES_CTE},
 {_CC_REACH_CTE},
-    comp AS (
-      SELECT doc_id, MIN(m) AS component
-      FROM (
-        SELECT src AS doc_id, dst AS m FROM reach
-        UNION ALL
-        SELECT DISTINCT src, src FROM bidir
-      )
-      GROUP BY doc_id
-    ),
     grouped AS (
       SELECT d.doc_id,
              CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
@@ -71,18 +62,17 @@ _GROUPED_CTE = f"""
 """
 
 
-_GROUPED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both registered queries consume the same clustering+assignment;
-    # cache the checkpointed frame per (session, fixture) so the
-    # iterative CC fixpoint runs once (the scenario-cache discipline
-    # of audits/lakeaudit). localCheckpoint also cuts the CC loop's
-    # lineage out of downstream plans.
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _GROUPED_CACHE:
-        return _GROUPED_CACHE[cache_key]
+    # the checkpointed frame is a scenario memo so the iterative CC
+    # fixpoint runs once per data state. localCheckpoint also cuts the
+    # CC loop's lineage out of downstream plans.
+    return scenario(
+        spark, sf_dir, "grouped", lambda _work: _build_grouped(spark, sf_dir)
+    )
+
+
+def _build_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     comp = connected_components(_neardup_edges(docs))
     grp = F.coalesce(F.col("component"), F.col("doc_id"))
@@ -96,7 +86,7 @@ def _grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cluster labels cover graph members only — broadcast-size after
     # dedup; the left join never shuffles the full corpus twice
-    out = (
+    return (
         docs.join(F.broadcast(comp), "doc_id", "left")
         .select(
             "doc_id",
@@ -109,8 +99,6 @@ def _grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    _GROUPED_CACHE[cache_key] = out
-    return out
 
 
 @query(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jobminer_spark.operators.common import scenario
 from jobminer_spark.operators.dedupe import SHINGLE_MAX_DF
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
@@ -237,20 +238,21 @@ def stream_admission_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_ADMIT_CACHE: dict[tuple[str, str], tuple[int, int, int, int, int]] = {}
-
-
 def _stream_admission_scalars(
     spark: SparkSession, sf_dir: str
 ) -> tuple[int, int, int, int, int]:
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _STREAM_ADMIT_CACHE:
-        return _STREAM_ADMIT_CACHE[cache_key]
+    return scenario(
+        spark, sf_dir, "streamadmit",
+        lambda work: _build_stream_admission(spark, sf_dir, work),
+    )
 
+
+def _build_stream_admission(
+    spark: SparkSession, sf_dir: str, work: str
+) -> tuple[int, int, int, int, int]:
     import glob
     import os
     import shutil
-    import tempfile
 
     from jobminer_spark.operators.increment import build_corpus_shingle_index
 
@@ -259,7 +261,6 @@ def _stream_admission_scalars(
     b1 = docs.filter((F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 2 == 1))
     b2 = docs.filter((F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 2 == 0))
 
-    work = tempfile.mkdtemp(prefix="stream_admission_")
     try:
         # two single-file drops with staggered mtimes: the file stream
         # source orders by timestamp, maxFilesPerTrigger=1 makes each
@@ -295,8 +296,6 @@ def _stream_admission_scalars(
         n_batches = len(per)
         a1, m1 = per.get(0, (0, 0))
         a2, m2 = per.get(1, (0, 0))
-        result = (n_batches, a1, a2, int(m1), int(m2))
+        return (n_batches, a1, a2, int(m1), int(m2))
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    _STREAM_ADMIT_CACHE[cache_key] = result
-    return result

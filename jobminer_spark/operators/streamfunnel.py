@@ -7,7 +7,7 @@ This extends the streaming≡batch parity suite (tumbling / sliding /
 session / interval / stateful totals / sink replay / admission) with
 sequence matching — the one streaming semantics class none of the
 built-in windows express. The drain reuses the shared single-batch
-discipline (`maxFilesPerTrigger` pin + `_DRAIN_CACHE`) that the
+discipline (`maxFilesPerTrigger` pin + the drain memo) that the
 session-window escape taught in round 7: a bounded fixture must drain
 in one micro-batch so no environment-dependent file ordering can
 reorder the state machine's input.

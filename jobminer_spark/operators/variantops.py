@@ -107,10 +107,18 @@ def variant_extraction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCENARIO_CACHE: dict[tuple[str, str, str], dict] = {}
-
-
 def _delta_variant_scenario(spark: SparkSession, sf_dir: str) -> dict:
+    from jobminer_spark.operators.common import scenario
+
+    return scenario(
+        spark, sf_dir, "variant",
+        lambda work: _build_delta_variant_scenario(spark, sf_dir, work),
+    )
+
+
+def _build_delta_variant_scenario(
+    spark: SparkSession, sf_dir: str, work: str
+) -> dict:
     """One-build-per-(session, sf_dir, data) Delta table whose ``v``
     column is a real Spark VARIANT (r18: the variantType feature
     graduated from the rejection matrix) — created through write_delta
@@ -119,17 +127,8 @@ def _delta_variant_scenario(spark: SparkSession, sf_dir: str) -> dict:
     variant writer."""
     import os
 
-    from jobminer_spark.operators.common import (
-        scenario_workdir,
-        source_fingerprint,
-    )
     from jobminer_spark.sources.delta import write_delta
 
-    fp = source_fingerprint(sf_dir, "events")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if key in _SCENARIO_CACHE:
-        return _SCENARIO_CACHE[key]
-    work = scenario_workdir(spark, sf_dir, "jm_variant_", fp)
     table = os.path.join(work, "vtab")
     e = load_table(spark, sf_dir, "events")
     docs = e.select(
@@ -144,7 +143,7 @@ def _delta_variant_scenario(spark: SparkSession, sf_dir: str) -> dict:
     _a, _r, _m, _t, proto = _replay_full(
         table, delta_latest_version(table)
     )
-    _SCENARIO_CACHE[key] = {
+    return {
         "table": table,
         "feature_listed": int(
             proto.get("minReaderVersion") == 3
@@ -152,7 +151,6 @@ def _delta_variant_scenario(spark: SparkSession, sf_dir: str) -> dict:
             and "variantType" in (proto.get("writerFeatures") or [])
         ),
     }
-    return _SCENARIO_CACHE[key]
 
 
 @query(

@@ -240,17 +240,15 @@ def _run_to_memory(
     return spark.table(name), n_batches
 
 
-# One drained micro-batch log per (session, fixture, operator): the
-# parity audits and the streaming tests all replay the SAME bounded
-# fixture stream, and an availableNow drain of an immutable fixture is
-# deterministic — re-draining it buys nothing but wall-clock (the r6
-# verdict flagged the audits re-draining the source). The memory table
-# lives for the session's lifetime, so handing back the cached frame
-# is exact, not approximate. Keyed by applicationId so a fresh session
-# (new process or restarted JVM) always re-drains for real. Values are
-# (DataFrame, n_data_micro_batches) so the parity audits can expose
-# the drain's batch count as an oracle-pinned column.
-_DRAIN_CACHE: dict[tuple[str, str, str, str], tuple[DataFrame, int]] = {}
+# One drained micro-batch log per (scenario, operator): the parity
+# audits and the streaming tests all replay the SAME bounded fixture
+# stream, and an availableNow drain of unchanged data is deterministic
+# — re-draining it buys nothing but wall-clock (the r6 verdict flagged
+# the audits re-draining the source). The memory table lives for the
+# session's lifetime, so handing back the stored frame is exact, not
+# approximate. Values are (DataFrame, n_data_micro_batches) so the
+# parity audits can expose the drain's batch count as an
+# oracle-pinned column.
 
 
 def _drained_once(
@@ -275,14 +273,16 @@ def _drained_with_batches(
     params: str = "",
 ) -> tuple[DataFrame, int]:
     """``params`` must encode any build-closure option that changes
-    the drained result (feed size, page size, gap, delay): the cache
+    the drained result (feed size, page size, gap, delay): the memo
     key cannot see inside the closure, and two same-kind drains with
     different options would otherwise silently alias (r9 review
     finding)."""
-    key = (spark.sparkContext.applicationId, sf_dir, kind, params)
-    if key not in _DRAIN_CACHE:
-        _DRAIN_CACHE[key] = _run_to_memory(build(), spark, output_mode)
-    return _DRAIN_CACHE[key]
+    from jobminer_spark.operators.common import scenario
+
+    return scenario(
+        spark, sf_dir, f"drain_{kind}{params and '_' + params}",
+        lambda _work: _run_to_memory(build(), spark, output_mode),
+    )
 
 
 def run_streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

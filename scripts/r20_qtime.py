@@ -24,8 +24,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     passes = int(sys.argv[1]) if sys.argv[1].isdigit() else 5
     names = sys.argv[2:] if sys.argv[1].isdigit() else sys.argv[1:]
-    from bench import _PREPASS
     from jobminer_spark import QUERIES, load_all_operators
+    from jobminer_spark.operators.common import forget_scenarios
     from jobminer_spark.session import get_spark
     from jobminer_spark.sources.parquet import FIXTURE_TABLES, load_table
 
@@ -43,8 +43,8 @@ def main() -> None:
     for _pass in range(passes):
         for name in names:
             fn = QUERIES[name]
-            if name in _PREPASS:
-                _PREPASS[name]()
+            if name == "lakehouse_merge_parity":
+                forget_scenarios("lake")  # as bench.py: time a build
             spark.sparkContext.setJobDescription(f"qtime:{name}")
             t0 = time.perf_counter()
             fn(spark, SF_DIR).collect()

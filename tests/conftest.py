@@ -14,6 +14,17 @@ FIXTURE_TABLES = (
 ).split()
 
 
+def stored_scenario(spark, sf_dir: str, name: str):
+    """The value the scenario memo holds for ``name`` over the current
+    data under ``sf_dir``; fails when it was never built."""
+    from jobminer_spark.operators.common import scenario
+
+    def _not_built(_work):
+        raise AssertionError(f"scenario {name!r} was not built for {sf_dir}")
+
+    return scenario(spark, sf_dir, name, _not_built)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from jobminer_spark.session import get_spark

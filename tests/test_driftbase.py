@@ -6,10 +6,9 @@ from __future__ import annotations
 
 import os
 
-from jobminer_spark.operators import driftbase
 from jobminer_spark.operators.drift import ks_drift_event_values
 from jobminer_spark.operators.driftbase import ks_drift_vs_baseline
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, stored_scenario
 
 
 def test_baseline_path_equals_direct_two_sample(spark):
@@ -26,11 +25,11 @@ def test_profile_is_built_once_and_reused(spark):
     """The second call must hit the session cache — the grid parquet's
     mtime is untouched and the cache key resolves to the same root."""
     ks_drift_vs_baseline(spark, SF_DIR).collect()
-    root = driftbase._cached_root(spark, SF_DIR)
+    root = stored_scenario(spark, SF_DIR, "driftbase")
     grid_dir = os.path.join(root, "grid")
     mtime = os.path.getmtime(grid_dir)
     ks_drift_vs_baseline(spark, SF_DIR).collect()
-    assert driftbase._cached_root(spark, SF_DIR) == root
+    assert stored_scenario(spark, SF_DIR, "driftbase") == root
     assert os.path.getmtime(grid_dir) == mtime
 
 
@@ -42,7 +41,7 @@ def test_profile_totals_match_grid(spark):
     from jobminer_spark.sources import load_table
 
     ks_drift_vs_baseline(spark, SF_DIR).collect()  # ensure built
-    root = driftbase._cached_root(spark, SF_DIR)
+    root = stored_scenario(spark, SF_DIR, "driftbase")
     (meta,) = spark.read.parquet(os.path.join(root, "meta")).collect()
     gsum = (
         spark.read.parquet(os.path.join(root, "grid"))
@@ -81,7 +80,7 @@ def test_profile_serves_both_monitors_from_one_build(spark):
     )
 
     ks_drift_vs_baseline(spark, SF_DIR).collect()
-    root = driftbase._cached_root(spark, SF_DIR)
+    root = stored_scenario(spark, SF_DIR, "driftbase")
     mtimes = {
         d: os.path.getmtime(os.path.join(root, d))
         for d in ("grid", "types", "meta")
@@ -166,8 +165,8 @@ def test_profile_roots_distinct_for_same_basename_dirs(spark, tmp_path):
     (ra,) = ks_drift_vs_baseline(spark, str(da)).collect()
     (rb,) = ks_drift_vs_baseline(spark, str(db)).collect()
     roots = {
-        driftbase._cached_root(spark, str(da)),
-        driftbase._cached_root(spark, str(db)),
+        stored_scenario(spark, str(da), "driftbase"),
+        stored_scenario(spark, str(db), "driftbase"),
     }
     assert len(roots) == 2
     # and the first dir's cached result is still ITS data, not b's
@@ -195,12 +194,12 @@ def test_profile_cache_invalidates_when_data_changes_under_same_path(
         tmp_path, [(i, i * h, 1, "A", 1.0 * i) for i in range(1, 7)]
     )
     (r1,) = ks_drift_vs_baseline(spark, sf).collect()
-    root1 = driftbase._cached_root(spark, sf)
+    root1 = stored_scenario(spark, sf, "driftbase")
     _write_events_adversarial(
         tmp_path, [(i, i * h, 1, "A", 2.0 * i) for i in range(1, 11)]
     )
     (r2,) = ks_drift_vs_baseline(spark, sf).collect()
-    root2 = driftbase._cached_root(spark, sf)
+    root2 = stored_scenario(spark, sf, "driftbase")
     assert root1 != root2
     assert r2["n1"] + r2["n2"] == 10
     (d,) = ks_drift_event_values(spark, sf).collect()
@@ -344,7 +343,6 @@ def test_history_retention_keeps_newest_and_is_idempotent(spark):
     """The retention audit vacuums to the newest 2 day profiles (day0
     deleted, days 1-2 kept, n_days_removed = 1) and is a no-op when
     re-run — same rows, day0 still gone, nothing else deleted."""
-    from jobminer_spark.operators import driftbase as db
     from jobminer_spark.operators.driftbase import (
         profile_history_retention_audit,
     )
@@ -359,13 +357,7 @@ def test_history_retention_keeps_newest_and_is_idempotent(spark):
     assert [d["day"] for d in rows1] == [1, 2]
     assert all(d["n_days_removed"] == 1 for d in rows1)
     assert all(d["n1_all"] > 0 for d in rows1)
-    root = db._HISTORY_CACHE[
-        (
-            spark.sparkContext.applicationId,
-            SF_DIR,
-            db._data_fingerprint(SF_DIR),
-        )
-    ]
+    root = stored_scenario(spark, SF_DIR, "drifthist")
     assert not os.path.isdir(os.path.join(root, "day0"))
     assert os.path.isdir(os.path.join(root, "day1"))
     rows2 = sorted(
@@ -399,7 +391,6 @@ def test_stream_drift_parity_matches_direct_twin_and_batch_count(spark):
     two-sample KS cell-for-cell, the drain must split into exactly 3
     micro-batches (3 spool files, one per trigger), and each batch
     must have produced its own monitor row."""
-    from jobminer_spark.operators import driftbase as db
     from jobminer_spark.operators.drift import ks_drift_event_values
     from jobminer_spark.operators.driftbase import stream_drift_profile_parity
 
@@ -408,13 +399,7 @@ def test_stream_drift_parity_matches_direct_twin_and_batch_count(spark):
     assert a["n_micro_batches"] == 3
     for k in ("n1", "n2", "n_value_buckets", "max_scaled_gap", "ks_permille"):
         assert a[k] == b[k], (k, a[k], b[k])
-    s = db._STREAM_DRIFT_CACHE[
-        (
-            spark.sparkContext.applicationId,
-            SF_DIR,
-            db._data_fingerprint(SF_DIR),
-        )
-    ]
+    s = stored_scenario(spark, SF_DIR, "sdrift")
     assert s["n_batches"] == 3
 
 

@@ -711,6 +711,7 @@ def test_lakeaudit_scenario_awaits_read_backs_when_a_merge_raises(
     import time
 
     from jobminer_spark.operators import lakeaudit
+    from jobminer_spark.operators.common import forget_scenarios
     from tests.conftest import SF_DIR
 
     class _MergeFailed(Exception):
@@ -726,7 +727,7 @@ def test_lakeaudit_scenario_awaits_read_backs_when_a_merge_raises(
         return real_merge(*args, **kwargs)
 
     monkeypatch.setattr(lh, "merge_into", failing_second_merge)
-    monkeypatch.setattr(lakeaudit, "_SCENARIO_CACHE", {})
+    forget_scenarios("lake")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     with _job_group(sc, "lakeaudit-failed-merge"):

@@ -103,11 +103,11 @@ def test_split_is_stable_under_corpus_subset(spark):
     OTHER docs are present, as long as its near-dup group is intact —
     recompute on the full corpus twice (plan-order independence) and
     compare assignments."""
-    from jobminer_spark.operators.splitguard import _GROUPED_CACHE
+    from jobminer_spark.operators.common import forget_scenarios
 
-    _GROUPED_CACHE.clear()
+    forget_scenarios("grouped")
     a = {r["doc_id"]: r["split"] for r in _grouped(spark, SF_DIR).collect()}
-    _GROUPED_CACHE.clear()  # force a genuine recompute, not a cache hit
+    forget_scenarios("grouped")  # force a genuine recompute, not a memo hit
     b = {r["doc_id"]: r["split"] for r in _grouped(spark, SF_DIR).collect()}
     assert a == b
 
