@@ -14,9 +14,10 @@ actually guarantees:
   nothing is modified in place.
 * **Atomic manifest commit** — a version is a JSON manifest listing
   its data files (with per-file key min/max stats); publishing
-  version N+1 is a single exclusive-create of ``_manifests/vN+1.json``
-  (``open(..., "x")``) — the same putIfAbsent contract Delta's log
-  relies on; on object stores the equivalent is a conditional PUT.
+  version N+1 is a single put-if-absent create of
+  ``_manifests/vN+1.json`` (``tablefiles.publish_new``) — the same
+  contract Delta's log relies on; on object stores the equivalent is
+  a conditional PUT.
   Past ``MANIFEST_SPLIT_FILES`` entries the file list is split into
   immutable per-key-range shard files referenced from the root
   (Iceberg's manifest-list shape): merges load only intersecting
@@ -57,6 +58,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from jobminer_spark.sources.tablefiles import (
+    footer_minmax,
+    path_key,
+    publish_new,
+)
 
 KEY_BUCKET = 4096  # key-range clustering width for data files
 
@@ -181,35 +188,14 @@ def latest_version(table: str) -> int:
 
 
 def _commit(table: str, manifest: dict) -> None:
-    """Atomically publish a manifest: exclusive create, so exactly one
-    writer wins a version number (putIfAbsent)."""
+    """Atomically publish a manifest: put-if-absent, so exactly one
+    writer wins a version number and readers never see it
+    half-written."""
     path = _manifest_path(table, manifest["version"])
-    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
     try:
-        with open(path, "x") as f:
-            with open(tmp) as t:
-                f.write(t.read())
+        publish_new(path, json.dumps(manifest))
     except FileExistsError as e:
         raise CommitConflict(path) from e
-    finally:
-        os.unlink(tmp)
-
-
-def _strip_file_scheme(p: str) -> str:
-    """``_metadata.file_path`` is a URI — ``file:/tmp/...`` in this
-    Spark build (single-slash form), ``file:///tmp/...`` elsewhere. A
-    naive ``replace("file://", "")`` misses the single-slash form, so
-    every manifest path kept its scheme: Spark reads resolved the URI
-    fine, but ``os.unlink``/``rmtree`` on the scheme-prefixed string
-    silently no-oped (vacuum's swallowed OSError hid it). Parse the
-    URI properly."""
-    from urllib.parse import unquote, urlparse
-
-    if p.startswith("file:"):
-        return unquote(urlparse(p).path)
-    return p
 
 
 def _discard(files: list[dict], shard_refs: list[dict]) -> None:
@@ -300,53 +286,29 @@ def _file_entries(spark: SparkSession, sub: str, key_col: str) -> list[dict]:
         # the files. Sequential footer reads bound this to small file
         # counts; past the threshold the distributed stats job below
         # is the scale path (and past MANIFEST_PAGE_FILES it paginates).
-        import pyarrow.parquet as papq
-
         import pyarrow as pa
 
         def _footer_entry(p: str) -> dict | None:
-            md = papq.ParquetFile(p).metadata
-            schema = md.schema.to_arrow_schema()
-            idx = schema.get_field_index(key_col)
+            md, stats = footer_minmax(p, {key_col})
             # Footer min/max are trusted only for INTEGER keys: the
             # parquet spec allows writers to TRUNCATE binary (string)
             # column statistics, and a truncated max_key would make
             # merge pruning silently skip a file that holds the key.
-            # Non-integer keys take the Spark stats job below, which
-            # computes exact values from the rows.
-            if idx < 0 or not pa.types.is_integer(schema.field(idx).type):
+            # Non-integer keys, and keys without stats, take the Spark
+            # stats job below, which computes exact values from the rows.
+            schema = md.schema.to_arrow_schema()
+            idx = schema.get_field_index(key_col)
+            if (
+                idx < 0
+                or not pa.types.is_integer(schema.field(idx).type)
+                or key_col not in stats
+            ):
                 return None
-            # Row-group column() takes a FLATTENED LEAF index, which
-            # equals the Arrow top-level index only for flat schemas —
-            # a nested (struct/list) column ordered before the key
-            # would silently shift the stats to the wrong leaf (a
-            # top-level key can never BE nested, so path == name).
-            # Resolve the leaf by path instead of reusing the Arrow
-            # index; no match ⇒ fall back to the Spark stats job.
-            leaf_idx = next(
-                (
-                    i
-                    for i in range(md.num_columns)
-                    if md.schema.column(i).path == key_col
-                ),
-                None,
-            )
-            if leaf_idx is None:
-                return None
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(leaf_idx).statistics
-                if st is None or not st.has_min_max:
-                    return None  # stats absent: use the Spark job
-
-                mins.append(st.min)
-                maxs.append(st.max)
-            if not mins:
-                return None
+            lo, hi, _nulls = stats[key_col]
             return {
                 "path": os.path.abspath(p),
-                "min_key": min(mins),
-                "max_key": max(maxs),
+                "min_key": lo,
+                "max_key": hi,
                 "n_rows": md.num_rows,
             }
 
@@ -392,7 +354,7 @@ def _file_entries(spark: SparkSession, sub: str, key_col: str) -> list[dict]:
         stats = stats_df.collect()
     return [
         {
-            "path": _strip_file_scheme(r["fp"]),
+            "path": path_key(r["fp"]),
             "min_key": r["min_key"],
             "max_key": r["max_key"],
             "n_rows": r["n_rows"],
@@ -655,7 +617,7 @@ def merge_into(
                         j, matched_condition, matched_delete
                     )
                     counts = {
-                        os.path.realpath(_strip_file_scheme(r["__fp"])): (
+                        os.path.realpath(path_key(r["__fp"])): (
                             r["nu"],
                             r["nd"],
                         )
@@ -667,7 +629,7 @@ def merge_into(
                         .collect()
                     }
                     by_path = {
-                        os.path.realpath(_strip_file_scheme(f["path"])): f
+                        os.path.realpath(path_key(f["path"])): f
                         for f in affected
                     }
                     if not counts.keys() <= by_path.keys():

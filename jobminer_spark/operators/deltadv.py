@@ -39,8 +39,9 @@ promotes the three read-side features to real support
 Scale shape: DV application is a broadcast anti-join on
 (_metadata.file_path, _metadata.row_index) — shuffle-free, scan
 pushdown intact, falling back to a shuffled anti-join past the
-broadcast cap (sources/delta.py:_DV_BROADCAST_MAX); descriptor decode
-is O(deleted rows) exactly like any engine materializing a bitmap.
+broadcast cap (sources/tablefiles.py:BROADCAST_MAX_ROWS);
+descriptor decode is O(deleted rows) exactly like any engine
+materializing a bitmap.
 Column mapping is a pure plan-time rename (zero runtime cost), and
 multi-part checkpoint replay stays O(active files) driver-side.
 """

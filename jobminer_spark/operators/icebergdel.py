@@ -42,6 +42,7 @@ from jobminer_spark.sources.iceberg import (
     write_iceberg,
     write_iceberg_deletes,
 )
+from jobminer_spark.sources.tablefiles import scan_path
 
 
 _US_DAY = 86_400_000_000
@@ -87,9 +88,7 @@ def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     # positions of the doomed rows, resolved from the live files'
     # own row order — a distributed metadata-column scan, no collect
     scan = spark.read.parquet(*iceberg_live_files(table)).select(
-        F.regexp_replace(
-            F.col("_metadata.file_path"), "^file:/+", "/"
-        ).alias("file_path"),
+        scan_path(F.col("_metadata.file_path")).alias("file_path"),
         F.col("_metadata.row_index").alias("pos"),
         "event_id",
     )
@@ -356,9 +355,7 @@ def _build_scenario(spark: SparkSession, sf_dir: str, work: str) -> dict:
     write_iceberg(spark, rw_table, rows.filter(F.col("event_id") % 3 == 0))
     write_iceberg(spark, rw_table, rows.filter(F.col("event_id") % 3 == 1))
     rw_scan = spark.read.parquet(*iceberg_live_files(rw_table)).select(
-        F.regexp_replace(
-            F.col("_metadata.file_path"), "^file:/+", "/"
-        ).alias("file_path"),
+        scan_path(F.col("_metadata.file_path")).alias("file_path"),
         F.col("_metadata.row_index").alias("pos"),
         "event_id",
     )
@@ -1429,9 +1426,7 @@ def iceberg_rewrite_data_files_audit(
             )
         n_before = len(iceberg_live_files(t))
         scan = spark.read.parquet(*iceberg_live_files(t)).select(
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:/+", "/"
-            ).alias("file_path"),
+            scan_path(F.col("_metadata.file_path")).alias("file_path"),
             F.col("_metadata.row_index").alias("pos"),
             "event_id",
         )

@@ -95,6 +95,16 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jobminer_spark.sources.tablefiles import (
+    footer_minmax,
+    hive_values,
+    join_positions,
+    path_key,
+    publish_new,
+    scan_path,
+    staged_parts,
+)
+
 _LOG_DIR = "_delta_log"
 _CHECKPOINT_INTERVAL = 10
 
@@ -678,7 +688,7 @@ def read_delta_row_ids(
 
     vals = ", ".join(
         "({}, {}, {})".format(
-            _esc(_file_key(_add_abs_path(table, p))),
+            _esc(path_key(_add_abs_path(table, p))),
             int(a["baseRowId"]),
             int(a.get("defaultRowCommitVersion") or 0),
         )
@@ -943,17 +953,14 @@ def _has_dv(add: dict) -> bool:
     return bool(dv) and int(dv.get("cardinality") or 0) > 0
 
 
-# Broadcasting the deleted-position set is the shuffle-free plan; past
-# this many positions fall back to a shuffled anti-join rather than
-# ship an oversized broadcast to every executor. Both gates read the
-# DESCRIPTOR-declared cardinalities, so no decode is needed to choose.
-_DV_BROADCAST_MAX = 2_000_000
 # Decode deleted positions driver-side only below this TOTAL declared
-# cardinality; above it bitmaps are decoded IN EXECUTORS (mapInPandas
-# over the descriptor relation), so a heavily-deleted table — billions
-# of positions at 100 TB — can never materialize a driver-side
-# position list. The driver path exists only to spare tiny tables an
-# extra Spark stage.
+# cardinality (like the anti-join's broadcast gate, the
+# DESCRIPTOR-declared one, so no decode is needed to choose); above
+# it bitmaps are decoded IN EXECUTORS (mapInPandas over the
+# descriptor relation), so a heavily-deleted table — billions of
+# positions at 100 TB — can never materialize a driver-side position
+# list. The driver path exists only to spare tiny tables an extra
+# Spark stage.
 _DV_DRIVER_DECODE_MAX = 4096
 
 
@@ -1043,29 +1050,20 @@ def _dv_relation(
     (file URI, row_index) relation (None when no add carries a DV),
     plus the descriptor-declared position total. Decode runs in
     executors past _DV_DRIVER_DECODE_MAX (see _dv_positions_df); the
-    scan-side filter stays an anti-join on
-    (_metadata.file_path, _metadata.row_index) — broadcast below
-    _DV_BROADCAST_MAX, shuffled above — and the parquet scan keeps its
+    scan-side filter stays tablefiles.join_positions on
+    (_metadata.file_path, _metadata.row_index) — broadcast or shuffled
+    by the declared total — and the parquet scan keeps its
     pushdown (row_index is generated, not read)."""
     descs: list[tuple[str, dict, dict | None]] = []
     total = 0
     for a in adds:
         if _has_dv(a):
-            fp = _file_key(_add_abs_path(table, a["path"]))
+            fp = path_key(_add_abs_path(table, a["path"]))
             descs.append((fp, a["deletionVector"], None))
             total += int(a["deletionVector"].get("cardinality") or 0)
     if not descs:
         return None, 0
     return _dv_positions_df(spark, table, descs, total), total
-
-
-def _file_key(path: str) -> str:
-    """Python-side anti-join key for a data file: the plain absolute
-    path. The Spark side decodes `_metadata.file_path` (a
-    percent-ENCODED file URI — a table dir with a space reports %20)
-    to the same form via _decoded_path_col, so paths with URI-special
-    characters key identically on both sides."""
-    return os.path.abspath(path).replace(os.sep, "/")
 
 
 # add/remove action `path` fields come in two protocol shapes
@@ -1099,20 +1097,6 @@ def _add_abs_path(table: str, p: str) -> str:
     return os.path.join(table, p)
 
 
-def _decoded_path_col(col):
-    """`_metadata.file_path` normalized to a decoded absolute path:
-    scheme stripped, percent-escapes decoded (try_: a non-URI stray
-    value falls back to itself rather than erroring the scan).
-    try_url_decode is form-urlencoded decoding, which would also turn
-    a literal '+' in a path into a space while the Python-side
-    _file_key keeps '+' — silently resurrecting DV-deleted rows on
-    such tables — so '+' is pre-escaped to %2B and only %XX escapes
-    are translated."""
-    stripped = F.regexp_replace(col, "^file:/+", "/")
-    plus_safe = F.regexp_replace(stripped, r"\+", "%2B")
-    return F.coalesce(F.try_url_decode(plus_safe), stripped)
-
-
 def _scan_minus_dvs(
     spark: SparkSession,
     paths: list[str],
@@ -1131,23 +1115,13 @@ def _scan_minus_dvs(
         return df
     keyed = df.withColumns(
         {
-            "__jm_file": _decoded_path_col(F.col("_metadata.file_path")),
+            "__jm_file": scan_path(F.col("_metadata.file_path")),
             "__jm_pos": F.col("_metadata.row_index"),
         }
     )
     if dv_df is None:
         return keyed
-    right = (
-        dv_df
-        if n_dv_positions > _DV_BROADCAST_MAX
-        else F.broadcast(dv_df)
-    )
-    out = keyed.join(
-        right,
-        (keyed["__jm_file"] == right["__jm_dv_file"])
-        & (keyed["__jm_pos"] == right["__jm_dv_pos"]),
-        "left_anti",
-    )
+    out = join_positions(keyed, "__jm_file", "__jm_pos", dv_df, n_dv_positions)
     return out if keep_keys else out.drop("__jm_file", "__jm_pos")
 
 
@@ -2571,61 +2545,33 @@ def _stage_data_files(
     (hidden per the protocol, so readers never see it) — same
     filesystem as the destination, so `os.replace` publication stays
     an atomic rename and never hits cross-device EXDEV the way a
-    /tmp-staged file could."""
-    from urllib.parse import unquote
-
+    /tmp-staged file could. Partition values come from Spark's
+    hive-style stage dirs, decoded (JSON null for null), as the
+    protocol wants the actual values."""
     sub = f"data-{uuid.uuid4().hex[:12]}"
-    tmp = os.path.join(table, f".stage_{sub}")
-    writer = df.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(tmp)
+    stage = os.path.join(table, f".stage_{sub}")
     adds: list[dict] = []
-    for root, _dirs, files in os.walk(tmp):
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            src = os.path.join(root, fname)
-            rel_dir = os.path.relpath(root, tmp)
-            pvals: dict[str, str | None] = {}
-            if rel_dir != ".":
-                for piece in rel_dir.split(os.sep):
-                    k, _, v = piece.partition("=")
-                    # Spark stages hive-style dirs: nulls become the
-                    # __HIVE_DEFAULT_PARTITION__ sentinel and special
-                    # chars are %-escaped — the PROTOCOL wants the
-                    # actual value (JSON null for null), so decode
-                    # here or a null round-trips as the sentinel text
-                    pvals[k] = (
-                        None
-                        if v == "__HIVE_DEFAULT_PARTITION__"
-                        else unquote(v)
-                    )
+    with staged_parts(df, stage, part_cols) as parts:
+        for src, rel_dir, pvals in parts:
             # keep the hive-style partition subdirs in the table path:
             # one Spark task writes SAME-named files into each
             # partition dir, so flattening would collide basenames
             # and silently drop all but one partition's file
-            dest_rel = (
-                os.path.join(sub, rel_dir, fname)
-                if rel_dir != "."
-                else os.path.join(sub, fname)
+            dest_rel = "/".join(
+                p for p in (sub, rel_dir, os.path.basename(src)) if p
             )
-            os.makedirs(
-                os.path.dirname(os.path.join(table, dest_rel)), exist_ok=True
-            )
-            os.replace(src, os.path.join(table, dest_rel))
+            dest = os.path.join(table, dest_rel)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.replace(src, dest)
             adds.append(
                 {
-                    "path": dest_rel.replace(os.sep, "/"),
+                    "path": dest_rel,
                     "partitionValues": pvals,
-                    "size": os.path.getsize(os.path.join(table, dest_rel)),
+                    "size": os.path.getsize(dest),
                     "modificationTime": 0,
                     "dataChange": True,
                 }
             )
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
     adds.sort(key=lambda a: a["path"])
     if len(adds) <= _STATS_FILES_CAP:
         for a in adds:
@@ -2655,11 +2601,12 @@ def _footer_stats_json(path: str) -> str | None:
     does (r19, widened from integer-only for non-numeric Z-ORDER).
     Dates encode ISO-8601, delta-spark's stats encoding, which also
     compares correctly as strings."""
+    import datetime
+
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
     try:
-        md = papq.ParquetFile(path).metadata
+        md, stats = footer_minmax(path)
         schema = md.schema.to_arrow_schema()
     except OSError:
         return None
@@ -2668,37 +2615,20 @@ def _footer_stats_json(path: str) -> str | None:
     nulls: dict[str, int] = {}
 
     def _enc(v):
-        import datetime
-
         return v.isoformat() if isinstance(v, datetime.date) else v
 
-    for i in range(md.num_columns):
-        name = md.schema.column(i).path
+    for name, (lo, hi, n_null) in stats.items():
         arrow_idx = schema.get_field_index(name)
         if arrow_idx < 0:
             continue
         atype = schema.field(arrow_idx).type
-        if not (
+        if (
             pa.types.is_integer(atype)
             or pa.types.is_string(atype)
             or pa.types.is_large_string(atype)
             or pa.types.is_date(atype)
         ):
-            continue
-        col_mins, col_maxs, col_nulls = [], [], 0
-        ok = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(i).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            col_mins.append(_enc(st.min))
-            col_maxs.append(_enc(st.max))
-            col_nulls += st.null_count or 0
-        if ok and col_mins:
-            mins[name] = min(col_mins)
-            maxs[name] = max(col_maxs)
-            nulls[name] = col_nulls
+            mins[name], maxs[name], nulls[name] = _enc(lo), _enc(hi), n_null
     if not mins:
         return None
     return json.dumps(
@@ -2740,8 +2670,9 @@ def _commit_ict(table: str, version: int) -> int | None:
 def _publish_commit(
     table: str, version: int, actions: list[dict], meta: dict | None = None
 ) -> None:
-    """Atomic publish: exclusive-create of `<version>.json` — two
-    racing writers cannot both win the same version.
+    """Atomic publish: put-if-absent of `<version>.json` — two racing
+    writers cannot both win the same version, and a reader never sees
+    it half-written.
 
     When ``meta`` (the table's metaData AS OF this commit) enables
     inCommitTimestamps, a commitInfo action with a MONOTONE
@@ -2766,12 +2697,7 @@ def _publish_commit(
             *actions,
         ]
     payload = "\n".join(json.dumps(a, sort_keys=True) for a in actions)
-    fd = os.open(
-        _commit_file(table, version),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        f.write(payload + "\n")
+    publish_new(_commit_file(table, version), payload + "\n")
 
 
 _TOMBSTONE_RETENTION_MS = 7 * 24 * 3600 * 1000  # delta's default
@@ -3589,53 +3515,26 @@ def _stage_cdc_files(
     layout rule), so a conforming foreign CDF reader — which
     reconstructs partition columns from partitionValues — sees the
     right values instead of NULLs."""
-    import shutil
-    from urllib.parse import unquote
-
     commit = uuid.uuid4().hex[:12]
     os.makedirs(os.path.join(table, "_change_data"), exist_ok=True)
-    scratch = os.path.join(table, f".stage_cdc_{commit}")
-    writer = cdf_df.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(scratch)
+    stage = os.path.join(table, f".stage_cdc_{commit}")
     actions: list[dict] = []
-    i = 0
-    for root, _dirs, files in os.walk(scratch):
-        for fname in sorted(files):
-            if not fname.endswith(".parquet"):
-                continue
-            rel_dir = os.path.relpath(root, scratch)
-            pvals: dict[str, str | None] = {}
-            if rel_dir != ".":
-                for piece in rel_dir.split(os.sep):
-                    k, _, v = piece.partition("=")
-                    # same hive-dir decode rule as _stage_data_files:
-                    # the protocol wants the actual value, JSON null
-                    # for null
-                    pvals[k] = (
-                        None
-                        if v == "__HIVE_DEFAULT_PARTITION__"
-                        else unquote(v)
-                    )
+    with staged_parts(cdf_df, stage, part_cols) as parts:
+        for src, rel_dir, pvals in parts:
             # keep the hive-style subdirs for partitioned stages so
             # same-named task files from different partitions never
             # collide
             rel = (
-                f"_change_data/cdc-{commit}-{i:05d}.parquet"
-                if rel_dir == "."
-                else "/".join(
-                    [
-                        "_change_data",
-                        f"cdc-{commit}",
-                        rel_dir.replace(os.sep, "/"),
-                        fname,
-                    ]
+                "/".join(
+                    ["_change_data", f"cdc-{commit}", rel_dir,
+                     os.path.basename(src)]
                 )
+                if rel_dir
+                else f"_change_data/cdc-{commit}-{len(actions):05d}.parquet"
             )
             dest = os.path.join(table, *rel.split("/"))
             os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(os.path.join(root, fname), dest)
+            os.replace(src, dest)
             if os.path.getsize(dest) == 0:
                 os.unlink(dest)
                 continue
@@ -3649,8 +3548,6 @@ def _stage_cdc_files(
                     }
                 }
             )
-            i += 1
-    shutil.rmtree(scratch, ignore_errors=True)
     return actions
 
 
@@ -3677,7 +3574,7 @@ def _mor_mutation(
         )
         part_cols = meta.get("partitionColumns", [])
         rel_by_uri = {
-            _file_key(_add_abs_path(table, p)): p for p in adds
+            path_key(_add_abs_path(table, p)): p for p in adds
         }
         # one consumer for deletes, up to three more for updates
         # (replacement staging + CDC pre/post images): persist the
@@ -4146,7 +4043,7 @@ def delta_change_feed(
                 old = removes_by_path.pop(a["path"])
                 mor_descs.append(
                     (
-                        _file_key(_add_abs_path(table, a["path"])),
+                        path_key(_add_abs_path(table, a["path"])),
                         a["deletionVector"],
                         old.get("deletionVector")
                         if _has_dv(old)
@@ -4185,23 +4082,14 @@ def delta_change_feed(
             scan = spark.read.schema(full_ddl).parquet(*paths)
             keyed = scan.withColumns(
                 {
-                    "__jm_file": _decoded_path_col(
-                        F.col("_metadata.file_path")
-                    ),
+                    "__jm_file": scan_path(F.col("_metadata.file_path")),
                     "__jm_pos": F.col("_metadata.row_index"),
                 }
             )
-            right = (
-                pos_df
-                if mor_total > _DV_BROADCAST_MAX
-                else F.broadcast(pos_df)
-            )
-            drows = keyed.join(
-                right,
-                (keyed["__jm_file"] == right["__jm_dv_file"])
-                & (keyed["__jm_pos"] == right["__jm_dv_pos"]),
-                "inner",
-            ).drop("__jm_file", "__jm_pos", "__jm_dv_file", "__jm_dv_pos")
+            drows = join_positions(
+                keyed, "__jm_file", "__jm_pos", pos_df, mor_total,
+                how="left_semi",
+            ).drop("__jm_file", "__jm_pos")
             parts.append(
                 drows.withColumn("_change_type", F.lit("delete"))
                 .withColumn("_commit_version", F.lit(v).cast("long"))
@@ -4585,8 +4473,6 @@ def convert_to_delta(
     Scale shape: one directory listing + one footer read per
     stats-capped file, no data reads or movement; the commit is
     O(files) driver descriptors like every commit here."""
-    from urllib.parse import unquote
-
     log = _log_path(table)
     if delta_latest_version(table) >= 0:
         raise FileExistsError(f"already a Delta table: {table}")
@@ -4620,12 +4506,7 @@ def convert_to_delta(
     total_bytes = 0
     for rel in sorted(rels):
         pv: dict[str, str | None] = {}
-        segs = rel.split("/")[:-1]
-        hive = {
-            k: unquote(v)
-            for k, _, v in (s.partition("=") for s in segs)
-            if _
-        }
+        hive = hive_values(rel.rpartition("/")[0])
         if part_names:
             missing = [n for n in part_names if n not in hive]
             if missing:
@@ -4633,14 +4514,7 @@ def convert_to_delta(
                     f"{rel} lacks partition dir(s) {missing} — the "
                     "layout does not match partition_schema"
                 )
-            pv = {
-                n: (
-                    None
-                    if hive[n] == "__HIVE_DEFAULT_PARTITION__"
-                    else hive[n]
-                )
-                for n in part_names
-            }
+            pv = {n: hive[n] for n in part_names}
         elif hive:
             raise ValueError(
                 f"{rel} sits under Hive partition dirs "

@@ -78,6 +78,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jobminer_spark.sources.avro import read_avro_records, write_avro_file
+from jobminer_spark.sources.tablefiles import (
+    BROADCAST_MAX_ROWS,
+    footer_minmax,
+    join_positions,
+    publish_new,
+    scan_path,
+    staged_parts,
+)
 
 _STATUS_DELETED = 2
 
@@ -637,40 +645,23 @@ def _file_bounds(
     manifest's array<{key,value}> payloads. NUMERIC/date/timestamp
     columns only — the parquet spec lets writers truncate binary
     (string) stats, and a truncated max would be an INVALID upper
-    bound that silently drops matching files (the same rule Delta's
-    footer-stats stamper applies). A column missing stats in any row
-    group is omitted (conservative)."""
-    import pyarrow.parquet as papq
-
+    bound that silently drops matching files (Delta's footer stats
+    keep strings, on the argument in its _footer_stats_json). A column
+    missing stats in any row group is omitted (conservative)."""
+    names = {n for n in ids_by_name if types_by_name.get(n) in _BOUND_STRUCT}
     try:
-        md = papq.ParquetFile(path).metadata
+        _md, stats = footer_minmax(path, names)
     except OSError:
         return None, None
     lower: list[dict] = []
     upper: list[dict] = []
-    for i in range(md.num_columns):
-        name = md.schema.column(i).path
-        fid = ids_by_name.get(name)
-        ib_type = types_by_name.get(name)
-        if fid is None or ib_type not in _BOUND_STRUCT:
-            continue
-        mins, maxs = [], []
-        ok = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(i).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            mins.append(st.min)
-            maxs.append(st.max)
-        if not ok or not mins:
-            continue
-        lo = _encode_bound(min(mins), ib_type)
-        hi = _encode_bound(max(maxs), ib_type)
+    for name, (lo, hi, _nulls) in stats.items():
+        ib_type = types_by_name[name]
+        lo, hi = _encode_bound(lo, ib_type), _encode_bound(hi, ib_type)
         if lo is None or hi is None:
             continue
-        lower.append({"key": fid, "value": lo})
-        upper.append({"key": fid, "value": hi})
+        lower.append({"key": ids_by_name[name], "value": lo})
+        upper.append({"key": ids_by_name[name], "value": hi})
     return (lower or None), (upper or None)
 
 
@@ -974,7 +965,7 @@ def _data_scan(
         if with_keys:
             df = df.withColumns(
                 {
-                    "__ib_file": _norm_uri(F.col("_metadata.file_path")),
+                    "__ib_file": scan_path(F.col("_metadata.file_path")),
                     "__ib_row": F.col("_metadata.row_index"),
                 }
             )
@@ -1037,26 +1028,6 @@ def _spark_ddl(meta: dict) -> str:
     return ", ".join(cols)
 
 
-# Position-delete sets small enough to broadcast ride shuffle-free;
-# larger ones fall back to a shuffled anti-join of (path, pos) pairs.
-_DELETE_BROADCAST_MAX = 2_000_000
-
-
-def _norm_uri(col):
-    """file_path values appear as plain absolute paths, `file:/…` or
-    `file:///…` depending on the writer; normalize all three to the
-    bare absolute path — decoding percent-escapes (try_: a stray
-    non-URI value falls back to itself) so Spark's percent-ENCODED
-    `_metadata.file_path` and raw manifest paths key identically.
-    try_url_decode is form-urlencoded decoding, so a literal '+' in a
-    path is pre-escaped to %2B — otherwise the Spark side would map
-    '+' to a space while raw manifest paths keep '+', silently
-    skipping every delete on such tables."""
-    stripped = F.regexp_replace(col, "^file:/+", "/")
-    plus_safe = F.regexp_replace(stripped, r"\+", "%2B")
-    return F.coalesce(F.try_url_decode(plus_safe), stripped)
-
-
 def _schema_field_names_by_id(meta: dict) -> dict[int, str]:
     schema = meta.get("schema")
     if schema is None:
@@ -1109,7 +1080,7 @@ def read_iceberg(
     BOTH kinds. Position deletes: parquet (file_path, pos) relations
     anti-joined against the data scan's generated
     `_metadata.row_index` — broadcast (shuffle-free) under
-    _DELETE_BROADCAST_MAX total delete records, shuffled past it —
+    tablefiles.BROADCAST_MAX_ROWS total delete records, shuffled past it —
     applying to data files with sequence number <= the delete's.
     Equality deletes: parquet relations of the equality columns named
     by the manifest's equality_ids, anti-joined NULL-SAFELY on those
@@ -1255,7 +1226,7 @@ def _apply_row_deletes(
                 spark.read.schema("file_path string, pos long")
                 .parquet(r["path"])
                 .select(
-                    _norm_uri(F.col("file_path")).alias("__ib_fp"),
+                    scan_path(F.col("file_path")).alias("__ib_fp"),
                     F.col("pos").alias("__ib_pos"),
                     F.lit(r["seq"]).alias("__ib_del_seq"),
                 )
@@ -1313,7 +1284,7 @@ def _apply_row_deletes(
                     "__ib_fp string, __ib_pos long, __ib_del_seq long",
                 )
                 .select(
-                    _norm_uri(F.col("__ib_fp")).alias("__ib_fp"),
+                    scan_path(F.col("__ib_fp")).alias("__ib_fp"),
                     "__ib_pos",
                     "__ib_del_seq",
                 )
@@ -1325,7 +1296,7 @@ def _apply_row_deletes(
                 refs = spark.createDataFrame(
                     [(r["referenced_file"],) for r in dv_recs],
                     "__ib_ref string",
-                ).select(_norm_uri(F.col("__ib_ref")).alias("__ib_ref"))
+                ).select(scan_path(F.col("__ib_ref")).alias("__ib_ref"))
                 del_parts = [
                     p.join(
                         F.broadcast(refs),
@@ -1341,23 +1312,15 @@ def _apply_row_deletes(
         eligible = (
             del_df.join(
                 F.broadcast(live),
-                del_df["__ib_fp"] == _norm_uri(F.col("__ib_live_fp")),
+                del_df["__ib_fp"] == scan_path(F.col("__ib_live_fp")),
                 "inner",
             )
             .where(F.col("__ib_del_seq") >= F.col("__ib_data_seq"))
             .select("__ib_fp", "__ib_pos")
         )
-        total = sum(r["record_count"] for r in deletes)
-        right = (
-            F.broadcast(eligible)
-            if total <= _DELETE_BROADCAST_MAX
-            else eligible
-        )
-        keyed = keyed.join(
-            right,
-            (keyed["__ib_file"] == right["__ib_fp"])
-            & (keyed["__ib_row"] == right["__ib_pos"]),
-            "left_anti",
+        keyed = join_positions(
+            keyed, "__ib_file", "__ib_row", eligible,
+            sum(r["record_count"] for r in deletes),
         )
     if eq_deletes:
         names_by_id = _schema_field_names_by_id(meta)
@@ -1376,7 +1339,7 @@ def _apply_row_deletes(
         keyed = keyed.join(
             F.broadcast(
                 live.select(
-                    _norm_uri(F.col("__ib_live_fp")).alias("__ib_lfp"),
+                    scan_path(F.col("__ib_live_fp")).alias("__ib_lfp"),
                     "__ib_data_seq",
                 )
             ),
@@ -1411,7 +1374,7 @@ def _apply_row_deletes(
             total = sum(r["record_count"] for r in group)
             right = (
                 F.broadcast(eq_df)
-                if total <= _DELETE_BROADCAST_MAX
+                if total <= BROADCAST_MAX_ROWS
                 else eq_df
             )
             cond = F.col("__ib_data_seq") < right["__eq_seq"]
@@ -1506,10 +1469,10 @@ def _spec_avro_type(transform: str, src_type: str) -> str:
     return "int"  # bucket / day / month / year / hour
 
 
-def _parse_partition_dir_value(raw: str, avro_type: str):
-    from urllib.parse import unquote
-
-    if raw == "__HIVE_DEFAULT_PARTITION__":
+def _parse_partition_dir_value(raw: str | None, avro_type: str):
+    """A decoded hive partition dir value (None for null) typed by
+    its manifest Avro type."""
+    if raw is None:
         return None
     if avro_type in ("int", "long"):
         return int(raw)
@@ -1521,7 +1484,7 @@ def _parse_partition_dir_value(raw: str, avro_type: str):
         return float(raw)
     if avro_type == "boolean":
         return raw.lower() == "true"
-    return unquote(raw)
+    return raw
 
 
 def _sort_exprs(sort_cols: list[tuple[str, str]]):
@@ -1602,8 +1565,6 @@ def _stage_table_data(
     helper __ibp_* columns carry the computed tuple so partitionBy
     drops ONLY them — table columns all stay in the data files.
     Empty parquet parts are dropped (no zero-row entries)."""
-    import shutil
-
     import pyarrow.parquet as papq
 
     data_dir = os.path.join(table, "data")
@@ -1619,7 +1580,7 @@ def _stage_table_data(
         ]
     )
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    stage = os.path.join(table, f"_stage_{commit}")
+    helpers: dict = {}
     if spec_tuples:
         helpers = {
             f"__ibp_{name}": iceberg_transform_col(
@@ -1627,57 +1588,32 @@ def _stage_table_data(
             )
             for name, transform, src in spec_tuples
         }
-        staged_df = df.withColumns(helpers).repartition(
+        df = df.withColumns(helpers).repartition(
             *[F.col(h) for h in helpers]
         )
-        if sort_cols:
-            # the table sort order clusters WITHIN each file — a
-            # partition-local sort, never a global range exchange.
-            # The helper columns LEAD the sort so the dynamic-
-            # partition writer's required ordering (partition cols
-            # prefix) is already satisfied and it adds no re-sort of
-            # its own (which would destroy the k-order)
-            staged_df = staged_df.sortWithinPartitions(
-                *[F.col(h) for h in helpers], *_sort_exprs(sort_cols)
-            )
-        staged_df.write.mode("overwrite").partitionBy(
-            *helpers
-        ).parquet(stage)
-    else:
-        staged_df = df
-        if sort_cols:
-            staged_df = staged_df.sortWithinPartitions(
-                *_sort_exprs(sort_cols)
-            )
-        staged_df.write.mode("overwrite").parquet(stage)
+    if sort_cols:
+        # the table sort order clusters WITHIN each file — a
+        # partition-local sort, never a global range exchange. The
+        # helper columns LEAD the sort so the dynamic-partition
+        # writer's required ordering (partition cols prefix) is
+        # already satisfied and it adds no re-sort of its own (which
+        # would destroy the k-order)
+        df = df.sortWithinPartitions(
+            *[F.col(h) for h in helpers], *_sort_exprs(sort_cols)
+        )
     data_files: list[dict] = []
-    for root, _dirs, files in sorted(os.walk(stage)):
-        pvals = None
-        if spec_tuples:
-            pieces = dict(
-                p.split("=", 1)
-                for p in os.path.relpath(root, stage).split(os.sep)
-                if "=" in p
-            )
-            if len(pieces) != len(spec_tuples):
-                if any(f.endswith(".parquet") for f in files):
-                    raise ValueError(
-                        f"staged file outside the partition layout: {root}"
-                    )
-                continue
-            pvals = {
-                name: _parse_partition_dir_value(
-                    pieces[f"__ibp_{name}"], part_avro_types[name]
+    stage = os.path.join(table, f"_stage_{commit}")
+    with staged_parts(df, stage, list(helpers)) as parts:
+        for src, _rel, hive in parts:
+            if set(hive) != set(helpers):
+                raise ValueError(
+                    f"staged file outside the partition layout: {src}"
                 )
-                for name, _t, _s in spec_tuples
-            }
-        for fname in sorted(files):
-            if not fname.endswith(".parquet"):
-                continue
             dest = os.path.join(
-                data_dir, f"{commit}-{len(data_files):05d}-{fname}"
+                data_dir,
+                f"{commit}-{len(data_files):05d}-{os.path.basename(src)}",
             )
-            os.replace(os.path.join(root, fname), dest)
+            os.replace(src, dest)
             n_rows = papq.ParquetFile(dest).metadata.num_rows
             if n_rows == 0:
                 os.unlink(dest)
@@ -1701,8 +1637,13 @@ def _stage_table_data(
                 "lower_bounds": lb,
                 "upper_bounds": ub,
             }
-            if pvals is not None:
-                dfile["partition"] = pvals
+            if spec_tuples:
+                dfile["partition"] = {
+                    name: _parse_partition_dir_value(
+                        hive[f"__ibp_{name}"], part_avro_types[name]
+                    )
+                    for name, _t, _s in spec_tuples
+                }
             data_files.append(
                 {
                     "status": 1,  # ADDED
@@ -1713,7 +1654,6 @@ def _stage_table_data(
                     "data_file": dfile,
                 }
             )
-    shutil.rmtree(stage, ignore_errors=True)
     return data_files
 
 
@@ -2171,18 +2111,7 @@ def set_iceberg_ref(
     refs = dict(meta.get("refs") or {})
     refs[name] = {"snapshot-id": sid, "type": ref_type}
     meta["refs"] = refs
-    md = _metadata_dir(table)
-    version = _metadata_version(md)
-    new_version = version + 1
-    fd = os.open(
-        os.path.join(md, f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(meta, f, indent=1)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write(str(new_version))
-    return new_version
+    return _write_metadata(_metadata_dir(table), meta)
 
 
 def drop_iceberg_ref(table: str, name: str) -> int:
@@ -2198,18 +2127,7 @@ def drop_iceberg_ref(table: str, name: str) -> int:
     del refs[name]
     meta = dict(meta)
     meta["refs"] = refs
-    md = _metadata_dir(table)
-    version = _metadata_version(md)
-    new_version = version + 1
-    fd = os.open(
-        os.path.join(md, f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(meta, f, indent=1)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write(str(new_version))
-    return new_version
+    return _write_metadata(_metadata_dir(table), meta)
 
 
 def fast_forward_iceberg(
@@ -2269,17 +2187,7 @@ def fast_forward_iceberg(
     meta["refs"] = refs
     if target == "main":
         meta["current-snapshot-id"] = head
-    md = _metadata_dir(table)
-    version = _metadata_version(md)
-    new_version = version + 1
-    fd = os.open(
-        os.path.join(md, f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(meta, f, indent=1)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write(str(new_version))
+    _write_metadata(_metadata_dir(table), meta)
     return head
 
 
@@ -2370,17 +2278,7 @@ def add_iceberg_column(
     if default is not None and meta.get("format-version", 1) < 3:
         meta["format-version"] = 3
         meta.setdefault("next-row-id", 0)
-    version = _metadata_version(md)
-    new_version = version + 1
-    fd = os.open(
-        os.path.join(md, f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(meta, f, indent=1)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write(str(new_version))
-    return new_version
+    return _write_metadata(md, meta)
 
 
 def _evolve_schema(table: str, mutate) -> int:
@@ -2401,17 +2299,7 @@ def _evolve_schema(table: str, mutate) -> int:
         {"type": "struct", "schema-id": new_sid, "fields": new_fields}
     ]
     meta["current-schema-id"] = new_sid
-    version = _metadata_version(md)
-    new_version = version + 1
-    fd = os.open(
-        os.path.join(md, f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(meta, f, indent=1)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write(str(new_version))
-    return new_version
+    return _write_metadata(md, meta)
 
 
 def evolve_iceberg_partition_spec(
@@ -2479,18 +2367,7 @@ def evolve_iceberg_partition_spec(
     ]
     meta["default-spec-id"] = new_sid
     meta["last-partition-id"] = last_pid + len(fields)
-    md = _metadata_dir(table)
-    version = _metadata_version(md)
-    new_version = version + 1
-    fd = os.open(
-        os.path.join(md, f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(meta, f, indent=1)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write(str(new_version))
-    return new_version
+    return _write_metadata(_metadata_dir(table), meta)
 
 
 def rename_iceberg_column(table: str, old: str, new: str) -> int:
@@ -2613,32 +2490,46 @@ def _metadata_version(md: str) -> int:
     )
 
 
+def _write_metadata(md: str, meta: dict, version: int | None = None) -> int:
+    """Publish ``meta`` as metadata version ``version`` + 1 (the
+    current version when None) and point the version hint at it;
+    returns the new version. The metadata JSON is put-if-absent, so a
+    writer that lost the race to that version gets FileExistsError,
+    and the hint is replaced whole, so a reader never sees either
+    half-written."""
+    new_version = (_metadata_version(md) if version is None else version) + 1
+    publish_new(
+        os.path.join(md, f"v{new_version}.metadata.json"),
+        json.dumps(meta, indent=1),
+    )
+    tmp = os.path.join(md, f".version-hint.{uuid.uuid4().hex[:8]}.tmp")
+    with open(tmp, "w") as f:
+        f.write(str(new_version))
+    os.replace(tmp, os.path.join(md, "version-hint.text"))
+    return new_version
+
+
 def _stage_delete_parquet(
     spark, table: str, df: DataFrame, commit: str, tag: str
 ) -> list[tuple[str, int]]:
     """Write ``df`` via a scratch dir, move the non-empty parts under
     data/ as ``<commit>-<tag>-…``, and return (abs path, row count)
     pairs — the staging walk both delete writers share."""
-    import shutil
-
     import pyarrow.parquet as papq
 
     data_dir = os.path.join(table, "data")
-    stage = os.path.join(table, f"_stage_{commit}")
-    df.write.mode("overwrite").parquet(stage)
     out: list[tuple[str, int]] = []
-    for root, _dirs, files in os.walk(stage):
-        for fname in sorted(files):
-            if not fname.endswith(".parquet"):
-                continue
-            dest = os.path.join(data_dir, f"{commit}-{tag}-{fname}")
-            os.replace(os.path.join(root, fname), dest)
+    with staged_parts(df, os.path.join(table, f"_stage_{commit}")) as parts:
+        for src, _rel, _hive in parts:
+            dest = os.path.join(
+                data_dir, f"{commit}-{tag}-{os.path.basename(src)}"
+            )
+            os.replace(src, dest)
             n = papq.ParquetFile(dest).metadata.num_rows
             if n == 0:
                 os.unlink(dest)  # empty partition: no entry
                 continue
             out.append((os.path.abspath(dest), n))
-    shutil.rmtree(stage, ignore_errors=True)
     if not out:
         raise ValueError("empty delete relation — nothing to commit")
     return out
@@ -3030,10 +2921,10 @@ def write_iceberg_dvs(
 
     live = spark.createDataFrame(
         [(r["path"],) for r in data], "orig string"
-    ).select("orig", _norm_uri(F.col("orig")).alias("__nfp"))
+    ).select("orig", scan_path(F.col("orig")).alias("__nfp"))
     matched = (
         deletes.select(
-            _norm_uri(F.col("file_path").cast("string")).alias(
+            scan_path(F.col("file_path").cast("string")).alias(
                 "__nfp"
             ),
             F.col("pos").cast("long").alias("pos"),
@@ -3062,7 +2953,7 @@ def write_iceberg_dvs(
             spark.read.schema("file_path string, pos long")
             .parquet(r["path"])
             .select(
-                _norm_uri(F.col("file_path")).alias("__nfp"),
+                scan_path(F.col("file_path")).alias("__nfp"),
                 F.col("pos").alias("pos"),
                 F.lit(int(r["seq"])).alias("__dseq"),
             )
@@ -3075,7 +2966,7 @@ def write_iceberg_dvs(
             [(t, int(data_seq[t])) for t in sorted(touched)],
             "orig string, __fseq long",
         ).select(
-            "orig", "__fseq", _norm_uri(F.col("orig")).alias("__nfp")
+            "orig", "__fseq", scan_path(F.col("orig")).alias("__nfp")
         )
         matched = matched.unionByName(
             prior.join(F.broadcast(touched_df), "__nfp")
@@ -3759,13 +3650,13 @@ def rewrite_iceberg_deletes(
             [(r["path"], r["seq"]) for r in data],
             "orig string, seq long",
         ).select(
-            "orig", "seq", _norm_uri(F.col("orig")).alias("__nfp")
+            "orig", "seq", scan_path(F.col("orig")).alias("__nfp")
         )
         del_parts = [
             spark.read.schema("file_path string, pos long")
             .parquet(r["path"])
             .select(
-                _norm_uri(F.col("file_path")).alias("__dfp"),
+                scan_path(F.col("file_path")).alias("__dfp"),
                 F.lit(r["seq"]).alias("__dseq"),
             )
             for r in pq_del_recs
@@ -3921,7 +3812,6 @@ def _publish_metadata(
     (the base it was committed onto — ``parent_snapshot_id`` for
     branch writes, else the prior current snapshot) so fast-forward
     publishing can check real ancestry."""
-    new_version = version + 1
     meta = dict(meta)
     parent = (
         parent_snapshot_id
@@ -3970,15 +3860,7 @@ def _publish_metadata(
         "snapshot-id": snapshot_id, "type": "branch",
     }
     meta["refs"] = refs
-    # exclusive-create publish, like every other commit in this repo
-    fd = os.open(
-        os.path.join(md, f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(meta, f, indent=1)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write(str(new_version))
+    _write_metadata(md, meta, version)
     return snapshot_id
 
 
@@ -4063,20 +3945,10 @@ def expire_iceberg_snapshots(
         dead |= m - keep_manifests
         dead |= f - keep_files
 
-    md = _metadata_dir(table)
-    version = _metadata_version(md)
     new_meta = dict(meta)
     new_meta["snapshots"] = retained
-    new_version = version + 1
     if not dry_run:
-        fd = os.open(
-            os.path.join(md, f"v{new_version}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-        )
-        with os.fdopen(fd, "w") as f:
-            json.dump(new_meta, f, indent=1)
-        with open(os.path.join(md, "version-hint.text"), "w") as f:
-            f.write(str(new_version))
+        _write_metadata(_metadata_dir(table), new_meta)
         for p in sorted(dead):
             try:
                 os.unlink(p)
@@ -4107,23 +3979,12 @@ def rollback_iceberg(table: str, snapshot_id: int) -> int:
             f"unknown snapshot-id {snapshot_id} (expired or never "
             f"existed; known: {sorted(snaps)})"
         )
-    md = _metadata_dir(table)
-    version = _metadata_version(md)
     new_meta = dict(meta)
     new_meta["current-snapshot-id"] = snapshot_id
     refs = dict(new_meta.get("refs") or {})
     refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
     new_meta["refs"] = refs
-    new_version = version + 1
-    fd = os.open(
-        os.path.join(md, f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-    )
-    with os.fdopen(fd, "w") as f:
-        json.dump(new_meta, f, indent=1)
-    with open(os.path.join(md, "version-hint.text"), "w") as f:
-        f.write(str(new_version))
-    return new_version
+    return _write_metadata(_metadata_dir(table), new_meta)
 
 
 # Spark's remove_orphan_files default: protect anything newer than
