@@ -780,19 +780,14 @@ def set_delta_domain_metadata(
     with domainMetadata listed when the table does not carry it yet
     (a WRITER-ONLY feature: the reader version stays put). Returns
     the new version."""
-    while True:
-        current = delta_latest_version(table)
-        if current < 0:
+
+    def _attempt(current, snap):
+        if snap is None:
             raise FileNotFoundError(
                 f"not a Delta table (no _delta_log): {table}"
             )
-        snap = _replay_full(table, current)
-        _a, _r, meta, _t, proto = snap
-        _check_writer_supported(proto, meta, "setDomainMetadata")
-        actions: list[dict] = []
-        up = _feature_upgrade_protocol(proto, set(), {"domainMetadata"})
-        if up is not None:
-            actions.append(up)
+        up = _feature_upgrade_protocol(snap[4], set(), {"domainMetadata"})
+        actions = [] if up is None else [up]
         actions.append(
             {
                 "domainMetadata": {
@@ -802,11 +797,9 @@ def set_delta_domain_metadata(
                 }
             }
         )
-        try:
-            _publish_commit(table, current + 1, actions, meta=meta)
-        except FileExistsError:
-            continue  # lost the race; re-replay and retry
-        return current + 1
+        return actions, [], current + 1
+
+    return _commit_loop(table, "setDomainMetadata", _attempt)
 
 
 def _stats_may_match(add: dict, stats_filters: dict[str, tuple]) -> bool:
@@ -1888,12 +1881,10 @@ def write_delta(
     part_cols = list(partition_by or [])
     os.makedirs(_log_path(table), exist_ok=True)
 
-    while True:
-        current = delta_latest_version(table)
+    def _attempt(current, snap):
+        nonlocal df
         new_version = current + 1
         stage_df, stage_parts = df, part_cols
-        prev_adds = None
-        prev_meta = None
         if current >= 0 and cluster_by:
             raise ValueError(
                 "cluster_by applies at CREATION only — the table's "
@@ -1901,15 +1892,12 @@ def write_delta(
                 "domain; appends inherit them (optimize_delta "
                 "realizes the clustering)"
             )
-        if current >= 0:
-            # Validate BEFORE staging: an append must match the
-            # table's declared schema and partitioning exactly — a
-            # mismatched append would land files the reader then
-            # misreads (all-NULL columns, NULL partition values).
-            # delta-spark rejects both; so do we, loudly (review r15).
-            prev_snap = _replay_full(table, current)
-            prev_adds, _rm, prev_meta, _ptxns, prev_proto = prev_snap
-            _check_writer_supported(prev_proto, prev_meta, mode)
+        # Validate BEFORE staging: an append must match the table's
+        # declared schema and partitioning exactly — a mismatched
+        # append would land files the reader then misreads (all-NULL
+        # columns, NULL partition values). delta-spark rejects both;
+        # so do we, loudly (review r15).
+        prev_adds, _rm, prev_meta, _ptxns, prev_proto = snap or [None] * 5
         id_meta_action = None
         evolved_meta_action = None
         id_cached: list[DataFrame] = []
@@ -2423,22 +2411,7 @@ def write_delta(
                 )
             now_ms = int(time.time() * 1000)
             actions.extend(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        # tombstones keep the old DV descriptor so
-                        # vacuum can retire the .bin with its file
-                        **(
-                            {"deletionVector":
-                             prev_adds[p]["deletionVector"]}
-                            if _has_dv(prev_adds[p])
-                            else {}
-                        ),
-                    }
-                }
-                for p in sorted(prev_adds)
+                _remove_action(prev_adds[p], now_ms) for p in sorted(prev_adds)
             )
         if id_meta_action is not None:
             # the advanced identity high watermark rides the SAME
@@ -2469,7 +2442,7 @@ def write_delta(
 
             hwm = -1
             if current >= 0:
-                dm = prev_snap.domains.get("delta.rowTracking")
+                dm = snap.domains.get("delta.rowTracking")
                 if dm and not dm.get("removed"):
                     hwm = int(
                         json.loads(dm.get("configuration") or "{}").get(
@@ -2513,24 +2486,10 @@ def write_delta(
             actions.append(
                 {"txn": {"appId": txn[0], "version": int(txn[1])}}
             )
-        try:
-            _publish_commit(
-                table, new_version, actions, meta=prev_meta
-            )
-        except FileExistsError:
-            for a in staged:  # lost the race: unstage and retry
-                try:
-                    os.unlink(os.path.join(table, a["path"]))
-                except OSError:
-                    pass
-            continue
-        if (
-            checkpoint_interval > 0
-            and new_version > 0
-            and new_version % checkpoint_interval == 0
-        ):
-            _write_checkpoint_auto(table, new_version)
-        return new_version
+        unstage = [os.path.join(table, a["path"]) for a in staged]
+        return actions, unstage, new_version
+
+    return _commit_loop(table, mode, _attempt, checkpoint_interval)
 
 
 def _stage_data_files(
@@ -2698,6 +2657,69 @@ def _publish_commit(
         ]
     payload = "\n".join(json.dumps(a, sort_keys=True) for a in actions)
     publish_new(_commit_file(table, version), payload + "\n")
+
+
+def _commit_loop(
+    table: str,
+    operation: str,
+    attempt,
+    checkpoint_interval: int = _CHECKPOINT_INTERVAL,
+):
+    """The optimistic commit every writer of a version after 0 runs
+    (lakehouse._commit's discipline, which IS Delta's commit protocol).
+    Each pass replays the latest version (None before the table
+    exists), refuses a table this writer may not write, and asks
+    ``attempt(current, snap)`` for (actions, staged paths, result);
+    actions None commits nothing. It publishes version current + 1; a
+    writer that loses that race unlinks what the attempt staged and
+    passes again over the new state. A published version on the
+    checkpoint interval is checkpointed: log compaction is per version,
+    not per writer, or interleaved writers grow the replay tail toward
+    2× the interval. Returns the attempt's result."""
+    while True:
+        current = delta_latest_version(table)
+        snap = _replay_full(table, current) if current >= 0 else None
+        if snap is not None:
+            _check_writer_supported(snap[4], snap[2], operation)
+        actions, staged, result = attempt(current, snap)
+        if actions is None:
+            return result
+        version = current + 1
+        try:
+            _publish_commit(
+                table, version, actions, meta=None if snap is None else snap[2]
+            )
+        except FileExistsError:
+            for p in staged:
+                try:
+                    os.unlink(p)
+                except OSError:
+                    pass
+            continue
+        if (
+            checkpoint_interval > 0
+            and version > 0
+            and version % checkpoint_interval == 0
+        ):
+            _write_checkpoint_auto(table, version)
+        return result
+
+
+def _remove_action(add: dict, now_ms: int, data_change: bool = True) -> dict:
+    """The tombstone of ``add``. It keeps the add's deletion-vector
+    descriptor, so vacuum can retire the ``.bin`` with its file."""
+    return {
+        "remove": {
+            "path": add["path"],
+            "deletionTimestamp": now_ms,
+            "dataChange": data_change,
+            **(
+                {"deletionVector": add["deletionVector"]}
+                if _has_dv(add)
+                else {}
+            ),
+        }
+    }
 
 
 _TOMBSTONE_RETENTION_MS = 7 * 24 * 3600 * 1000  # delta's default
@@ -3118,11 +3140,10 @@ def optimize_delta(
     latest = delta_latest_version(table)
     if latest < 0:
         raise FileNotFoundError(f"not a Delta table (no _delta_log): {table}")
-    while True:
-        current = delta_latest_version(table)
-        snap = _replay_full(table, current)
-        adds, _rm, meta, _txns, proto = snap
-        _check_writer_supported(proto, meta, "optimize")
+
+    def _attempt(current, snap):
+        nonlocal zorder_by
+        adds, _rm, meta, _txns, _proto = snap
         if zorder_by is None:
             # LIQUID CLUSTERING (r19): a clustered table's OPTIMIZE
             # clusters by the delta.clustering domain's columns —
@@ -3358,49 +3379,18 @@ def optimize_delta(
             staged_all.extend(staged)
             removed_paths.extend(a["path"] for a in group)
         if not staged_all:
-            return current, n_before, n_before  # nothing to do
+            return None, [], (current, n_before, n_before)  # nothing to do
         now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": False,
-                    **(
-                        {"deletionVector": adds[p]["deletionVector"]}
-                        if _has_dv(adds[p])
-                        else {}
-                    ),
-                }
-            }
+        actions = [
+            _remove_action(adds[p], now_ms, data_change=False)
             for p in sorted(removed_paths)
         ]
         actions.extend({"add": a} for a in staged_all)
-        staged = staged_all  # the race-retry loop unstages these
         n_after = n_untouched + len(staged_all)
-        try:
-            _publish_commit(
-                table, current + 1, actions, meta=meta
-            )
-        except FileExistsError:
-            for a in staged:  # lost the race: unstage and retry
-                try:
-                    os.unlink(os.path.join(table, a["path"]))
-                except OSError:
-                    pass
-            continue
-        # log compaction is per-VERSION, not per-writer: a maintenance
-        # commit landing on an interval multiple must checkpoint too,
-        # or interleaved OPTIMIZE/write histories grow the replay tail
-        # toward 2× the interval (review r16)
-        new_version = current + 1
-        if (
-            checkpoint_interval > 0
-            and new_version > 0
-            and new_version % checkpoint_interval == 0
-        ):
-            _write_checkpoint_auto(table, new_version)
-        return new_version, n_before, n_after
+        unstage = [os.path.join(table, a["path"]) for a in staged_all]
+        return actions, unstage, (current + 1, n_before, n_after)
+
+    return _commit_loop(table, "optimize", _attempt, checkpoint_interval)
 
 
 def delete_delta(
@@ -3566,12 +3556,9 @@ def _mor_mutation(
     if latest < 0:
         raise FileNotFoundError(f"not a Delta table (no _delta_log): {table}")
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    while True:
-        current = delta_latest_version(table)
-        adds, _removes, meta, _txns, protocol = _replay_full(table, current)
-        _check_writer_supported(
-            protocol, meta, "update" if transform is not None else "delete"
-        )
+
+    def _attempt(current, snap):
+        adds, _removes, meta, _txns, protocol = snap
         part_cols = meta.get("partitionColumns", [])
         rel_by_uri = {
             path_key(_add_abs_path(table, p)): p for p in adds
@@ -3647,7 +3634,7 @@ def _mor_mutation(
         ).collect()
         if not descriptors:
             matched_rows.unpersist()
-            return current, 0, 0
+            return None, [], (current, 0, 0)
         staged_new: list[dict] = []
         logical_matched = matched_rows.drop("__jm_file", "__jm_pos")
         replacement = None
@@ -3744,7 +3731,11 @@ def _mor_mutation(
             conf["delta.enableDeletionVectors"] = "true"
             actions.append({"metaData": {**meta, "configuration": conf}})
         n_new = 0
-        written: list[str] = []
+        # a lost race computed its positions against a stale snapshot:
+        # the loop unstages the DV, replacement and CDC files and the
+        # match runs again
+        unstage = [os.path.join(table, a["path"]) for a in staged_new]
+        unstage += [os.path.join(table, c["cdc"]["path"]) for c in cdc_actions]
         for d in sorted(descriptors, key=lambda d: d["uri"]):
             rel = rel_by_uri[d["uri"]]
             old_add = adds[rel]
@@ -3756,24 +3747,11 @@ def _mor_mutation(
                 "sizeInBytes": int(d["dv_size"]),
                 "cardinality": int(d["cardinality"]),
             }
-            written.append(d["dv_path"])
+            unstage.append(_dv_file_path(table, new_dv))
             n_new += int(d["cardinality"]) - int(
                 (old_dv or {}).get("cardinality") or 0
             )
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        **(
-                            {"deletionVector": old_dv}
-                            if _has_dv(old_add)
-                            else {}
-                        ),
-                    }
-                }
-            )
+            actions.append(_remove_action(old_add, now_ms))
             actions.append(
                 {
                     "add": {
@@ -3786,42 +3764,14 @@ def _mor_mutation(
             )
         actions.extend({"add": a} for a in staged_new)
         actions.extend(cdc_actions)
-        new_version = current + 1
-        try:
-            _publish_commit(
-                table, new_version, actions, meta=meta
-            )
-        except FileExistsError:
-            # lost the race: positions were computed against a stale
-            # snapshot — unstage the DV files + replacement files +
-            # CDC files and redo the match
-            for c in cdc_actions:
-                try:
-                    os.unlink(os.path.join(table, c["cdc"]["path"]))
-                except OSError:
-                    pass
-            for enc in written:
-                try:
-                    os.unlink(
-                        _dv_file_path(
-                            table,
-                            {"storageType": "u", "pathOrInlineDv": enc},
-                        )
-                    )
-                except OSError:
-                    pass
-            for a in staged_new:
-                try:
-                    os.unlink(os.path.join(table, a["path"]))
-                except OSError:
-                    pass
-            continue
-        if (
-            checkpoint_interval > 0
-            and new_version % checkpoint_interval == 0
-        ):
-            _write_checkpoint_auto(table, new_version)
-        return new_version, n_new, len(descriptors)
+        return actions, unstage, (current + 1, n_new, len(descriptors))
+
+    return _commit_loop(
+        table,
+        "update" if transform is not None else "delete",
+        _attempt,
+        checkpoint_interval,
+    )
 
 
 def delta_change_feed(
@@ -4193,12 +4143,9 @@ def restore_delta(
                 f"cannot restore to version {version}: {missing[0]} was "
                 "vacuumed — the snapshot's data is gone"
             )
-    while True:
-        current = delta_latest_version(table)
-        cur_adds, _crm, cur_meta, _ctx, cur_proto = _replay_full(
-            table, current
-        )
-        _check_writer_supported(cur_proto, cur_meta, "restore")
+
+    def _attempt(current, snap):
+        cur_adds, _crm, cur_meta, _ctx, _cur_proto = snap
         now_ms = int(time.time() * 1000)
         actions: list[dict] = []
         if (
@@ -4212,21 +4159,7 @@ def restore_delta(
         n_removed = 0
         for rel in sorted(set(cur_adds) - set(target_adds)):
             n_removed += 1
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        **(
-                            {"deletionVector":
-                             cur_adds[rel]["deletionVector"]}
-                            if _has_dv(cur_adds[rel])
-                            else {}
-                        ),
-                    }
-                }
-            )
+            actions.append(_remove_action(cur_adds[rel], now_ms))
         n_readded = 0
         for rel, a in sorted(target_adds.items()):
             cur = cur_adds.get(rel)
@@ -4248,20 +4181,11 @@ def restore_delta(
                 }
             )
         if not actions:
-            return current, 0, 0  # already identical
-        new_version = current + 1
-        try:
-            _publish_commit(
-                table, new_version, actions, meta=cur_meta
-            )
-        except FileExistsError:
-            continue  # pure metadata: nothing staged to unstage
-        if (
-            checkpoint_interval > 0
-            and new_version % checkpoint_interval == 0
-        ):
-            _write_checkpoint_auto(table, new_version)
-        return new_version, n_readded, n_removed
+            return None, [], (current, 0, 0)  # already identical
+        # pure metadata: nothing staged to unstage
+        return actions, [], (current + 1, n_readded, n_removed)
+
+    return _commit_loop(table, "restore", _attempt, checkpoint_interval)
 
 
 def clone_delta(

@@ -1946,43 +1946,20 @@ def write_iceberg(
         lineage_meta = meta
     first_rid, next_rid = _assign_row_lineage(lineage_meta, data_files)
 
-    snapshot_id = version + 1  # deterministic, monotone
-    seq = snapshot_id  # v2 sequence number, assigned per commit
-    manifest_path = os.path.join(md, f"manifest-{commit}.avro")
-    write_avro_file(
-        manifest_path,
-        _data_manifest_schema(spec_tuples, part_avro_types),
-        data_files,
-    )
-    partitions_summary = _partition_summaries(
-        spec_tuples, src_types, data_files
-    )
-
-    prior_records = _prior_manifest_records(
-        table, meta, base_snapshot_id=base_sid
-    )
-    list_records = prior_records + [
-        {
-            "manifest_path": os.path.abspath(manifest_path),
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": spec_id,
-            "partitions": partitions_summary,
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(data_files),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": sum(
-                e["data_file"]["record_count"] for e in data_files
-            ),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
+    # the snapshot id (deterministic, monotone) is also its v2
+    # sequence number; the list carries the base snapshot's manifests
+    records = _snapshot_records(table, meta, base_sid) + [
+        _added_manifest(
+            md,
+            commit,
+            _data_manifest_schema(spec_tuples, part_avro_types),
+            data_files,
+            version + 1,
+            0,
+            spec_id,
+            _partition_summaries(spec_tuples, src_types, data_files),
+        )
     ]
-    list_path = os.path.join(md, f"snap-{snapshot_id}-{commit}.avro")
-    write_avro_file(list_path, _MANIFEST_LIST_SCHEMA, list_records)
 
     if meta is None:
         fields = []
@@ -2070,8 +2047,8 @@ def write_iceberg(
             "streaming-app-id": str(stream_commit[0]),
             "streaming-batch-id": str(int(stream_commit[1])),
         }
-    return _publish_metadata(
-        md, meta, version, snapshot_id, seq, list_path, "append",
+    return _commit_snapshot(
+        md, meta, version, commit, records, "append",
         snapshot_extra=extra or None,
         branch=branch,
         parent_snapshot_id=base_sid,
@@ -2432,41 +2409,32 @@ def drop_iceberg_column(table: str, name: str) -> int:
     return _evolve_schema(table, mutate)
 
 
-def _prior_manifest_records(
-    table: str,
-    meta: dict | None,
-    base_snapshot_id: int | None = None,
+def _snapshot_records(
+    table: str, meta: dict | None, snapshot_id: int | None = None
 ) -> list[dict]:
-    """The base snapshot's manifest-list records, normalized for
-    re-reference in a new list: re-referenced manifests keep their own
-    sequence numbers/stats; records from a pre-v2 table (older writer)
-    get conservative defaults so the upgraded list stays
+    """The manifest-list records of snapshot ``snapshot_id`` (the
+    current one when None; none before the first snapshot), normalized
+    to be carried into a new list: re-referenced manifests keep their
+    own sequence numbers/stats; records from a pre-v2 table (older
+    writer) get conservative defaults so the upgraded list stays
     self-consistent (pre-upgrade manifests carry data sequence number
-    0, the spec's assignment for pre-v2 history). The base is the
-    CURRENT snapshot unless ``base_snapshot_id`` names another (a
-    branch head — r20 branch writes build on their branch, not on
-    main)."""
-    prior_manifests: list[dict] = []
-    if meta is not None and meta.get("snapshots"):
-        base = (
-            meta["current-snapshot-id"]
-            if base_snapshot_id is None
-            else base_snapshot_id
-        )
-        current = next(
-            s
-            for s in meta["snapshots"]
-            if s["snapshot-id"] == base
-        )
-        _, prior_manifests = read_avro_records(
-            _resolve_path(table, current["manifest-list"])
-        )
+    0, the spec's assignment for pre-v2 history)."""
+    if meta is None or not meta.get("snapshots"):
+        return []
+    if snapshot_id is None:
+        snapshot_id = meta["current-snapshot-id"]
+    snap = next(
+        s for s in meta["snapshots"] if s["snapshot-id"] == snapshot_id
+    )
+    _, records = read_avro_records(
+        _resolve_path(table, snap["manifest-list"])
+    )
     return [
         {
             "manifest_path": m["manifest_path"],
             "manifest_length": m["manifest_length"],
             "partition_spec_id": m.get("partition_spec_id", 0),
-            "content": m.get("content", 0),
+            "content": m.get("content") or 0,
             "sequence_number": m.get("sequence_number", 0),
             "min_sequence_number": m.get("min_sequence_number", 0),
             "added_snapshot_id": m.get("added_snapshot_id") or 0,
@@ -2478,8 +2446,120 @@ def _prior_manifest_records(
             "deleted_rows_count": m.get("deleted_rows_count", 0),
             "partitions": m.get("partitions"),
         }
-        for m in prior_manifests
+        for m in records
     ]
+
+
+def _write_manifest(
+    md: str,
+    name: str,
+    schema: dict,
+    entries: list[dict],
+    snapshot_id: int,
+    record: dict,
+) -> dict:
+    """Write ``entries`` as ``manifest-{name}.avro`` and return its
+    manifest-list record: ``record`` plus the manifest's path and
+    length, the snapshot that wrote it and the six stats counts, taken
+    from the entries by status."""
+    path = os.path.join(md, f"manifest-{name}.avro")
+    write_avro_file(path, schema, entries)
+    out = {
+        **record,
+        "manifest_path": os.path.abspath(path),
+        "manifest_length": os.path.getsize(path),
+        "added_snapshot_id": snapshot_id,
+    }
+    for status, kind in (
+        (1, "added"), (0, "existing"), (_STATUS_DELETED, "deleted")
+    ):
+        group = [e for e in entries if e["status"] == status]
+        out[f"{kind}_files_count"] = len(group)
+        out[f"{kind}_rows_count"] = sum(
+            e["data_file"].get("record_count", 0) for e in group
+        )
+    return out
+
+
+def _added_manifest(
+    md: str,
+    commit: str,
+    schema: dict,
+    entries: list[dict],
+    snapshot_id: int,
+    content: int,
+    spec_id: int = 0,
+    partitions: list[dict] | None = None,
+) -> dict:
+    """Write the manifest of the files snapshot ``snapshot_id`` adds
+    (ADDED entries, content 0 = data or 1 = deletes) and return its
+    manifest-list record; the snapshot id is also its sequence
+    number."""
+    return _write_manifest(
+        md, commit, schema, entries, snapshot_id,
+        {
+            "partition_spec_id": spec_id,
+            "partitions": partitions,
+            "content": content,
+            "sequence_number": snapshot_id,
+            "min_sequence_number": snapshot_id,
+        },
+    )
+
+
+def _retire_entries(
+    table: str,
+    md: str,
+    record: dict,
+    retire,
+    snapshot_id: int,
+    name: str,
+) -> tuple[dict, int]:
+    """Rewrite the manifest of list ``record`` so the live entries
+    ``retire`` picks become DELETED by snapshot ``snapshot_id`` and the
+    others EXISTING, both with inheritance resolved to explicit
+    sequence numbers and snapshot ids (inheritance covers only ADDED
+    entries, the spec's rule for rewritten manifests). The rewritten
+    manifest keeps its DELETED rows so snapshot diffing still sees
+    which snapshot retired them. Returns (the list record to
+    reference, the number of entries retired); the record comes back
+    unchanged when nothing retires."""
+    mschema, entries = read_avro_records(
+        _resolve_path(table, record["manifest_path"])
+    )
+    live = [e for e in entries if e["status"] != _STATUS_DELETED]
+    retired = [retire(e) for e in live]
+    if not any(retired):
+        return record, 0
+    out = []
+    for e, gone in zip(live, retired):
+        e_seq = e.get("sequence_number")
+        if e_seq is None:
+            e_seq = record["sequence_number"]
+        e_snap = e.get("snapshot_id")
+        if e_snap is None:
+            e_snap = record["added_snapshot_id"]
+        out.append(
+            {
+                **e,
+                "status": _STATUS_DELETED if gone else 0,
+                "snapshot_id": snapshot_id if gone else e_snap,
+                "sequence_number": e_seq,
+                "file_sequence_number": e.get("file_sequence_number")
+                or e_seq,
+            }
+        )
+    kept_seqs = [e["sequence_number"] for e in out if e["status"] == 0]
+    new_record = _write_manifest(
+        md, name, mschema, out, snapshot_id,
+        {
+            **record,
+            "min_sequence_number": min(
+                kept_seqs, default=record["min_sequence_number"]
+            ),
+        },
+    )
+    return new_record, sum(retired)
 
 
 def _metadata_version(md: str) -> int:
@@ -2541,22 +2621,16 @@ def _commit_delete_snapshot(
     staged: list,
     commit: str,
     content: int,
-    equality_ids: list[int] | None,
 ) -> int:
     """The delete writers' shared commit tail: one delete manifest
     (entries at ``content`` with inherited sequence numbers), a
     manifest list re-referencing every prior manifest plus the new
     content=1 record, and the published metadata version. ``staged``
-    rows are (path, n) pairs sharing ``equality_ids``, or
-    (path, n, per_file_ids) triples — several equality-column sets
-    may ride one snapshot (the shape a multi-predicate MERGE
-    produces)."""
+    rows are (path, n, equality_ids) triples — several equality-column
+    sets may ride one snapshot (the shape a multi-predicate MERGE
+    produces); position deletes carry None."""
     md = _metadata_dir(table)
     version = _metadata_version(md)
-    norm = [
-        (s[0], s[1], s[2] if len(s) > 2 else equality_ids)
-        for s in staged
-    ]
     entries = [
         {
             "status": 1,  # ADDED
@@ -2572,34 +2646,12 @@ def _commit_delete_snapshot(
                 "equality_ids": eq_ids,
             },
         }
-        for path, n, eq_ids in norm
+        for path, n, eq_ids in staged
     ]
-    snapshot_id = version + 1
-    seq = snapshot_id
-    manifest_path = os.path.join(md, f"manifest-{commit}.avro")
-    write_avro_file(manifest_path, _MANIFEST_SCHEMA, entries)
-    list_records = _prior_manifest_records(table, meta) + [
-        {
-            "manifest_path": os.path.abspath(manifest_path),
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "content": 1,  # a DELETE manifest
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": sum(n for _p, n, _e in norm),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
+    records = _snapshot_records(table, meta) + [
+        _added_manifest(md, commit, _MANIFEST_SCHEMA, entries, version + 1, 1)
     ]
-    list_path = os.path.join(md, f"snap-{snapshot_id}-{commit}.avro")
-    write_avro_file(list_path, _MANIFEST_LIST_SCHEMA, list_records)
-    return _publish_metadata(
-        md, meta, version, snapshot_id, seq, list_path, "delete"
-    )
+    return _commit_snapshot(md, meta, version, commit, records, "delete")
 
 
 def write_iceberg_deletes(
@@ -2632,7 +2684,9 @@ def write_iceberg_deletes(
         commit,
         "delete",
     )
-    return _commit_delete_snapshot(table, meta, staged, commit, 1, None)
+    return _commit_delete_snapshot(
+        table, meta, [(p, n, None) for p, n in staged], commit, 1
+    )
 
 
 def write_iceberg_equality_deletes(
@@ -2677,7 +2731,7 @@ def write_iceberg_equality_deletes(
             spark, table, df, commit, f"eqdelete{i}"
         ):
             staged.append((path, n, eq_ids))
-    return _commit_delete_snapshot(table, meta, staged, commit, 2, None)
+    return _commit_delete_snapshot(table, meta, staged, commit, 2)
 
 
 def read_iceberg_meta(
@@ -2718,45 +2772,18 @@ def read_iceberg_meta(
             " long, operation string, manifest_list string",
         )
     if kind == "manifests":
-        snaps = meta.get("snapshots", [])
-        if not snaps:
-            return spark.createDataFrame(
-                [],
-                "path string, length long, partition_spec_id int,"
-                " content int, sequence_number long,"
-                " min_sequence_number long, added_snapshot_id long,"
-                " added_files_count int, existing_files_count int,"
-                " deleted_files_count int, added_rows_count long,"
-                " existing_rows_count long, deleted_rows_count long",
-            )
-        cur = next(
-            s
-            for s in snaps
-            if s["snapshot-id"] == meta["current-snapshot-id"]
+        counts = (
+            "manifest_length", "partition_spec_id", "content",
+            "sequence_number", "min_sequence_number", "added_snapshot_id",
+            "added_files_count", "existing_files_count",
+            "deleted_files_count", "added_rows_count",
+            "existing_rows_count", "deleted_rows_count",
         )
-        _, records = read_avro_records(
-            _resolve_path(table, cur["manifest-list"])
-        )
-        rows = [
-            (
-                m["manifest_path"],
-                int(m.get("manifest_length", 0)),
-                int(m.get("partition_spec_id", 0)),
-                int(m.get("content") or 0),
-                int(m.get("sequence_number", 0)),
-                int(m.get("min_sequence_number", 0)),
-                int(m.get("added_snapshot_id") or 0),
-                int(m.get("added_files_count", 0)),
-                int(m.get("existing_files_count", 0)),
-                int(m.get("deleted_files_count", 0)),
-                int(m.get("added_rows_count", 0)),
-                int(m.get("existing_rows_count", 0)),
-                int(m.get("deleted_rows_count", 0)),
-            )
-            for m in records
-        ]
         return spark.createDataFrame(
-            rows,
+            [
+                (m["manifest_path"], *(int(m[k]) for k in counts))
+                for m in _snapshot_records(table, meta)
+            ],
             "path string, length long, partition_spec_id int,"
             " content int, sequence_number long, min_sequence_number"
             " long, added_snapshot_id long, added_files_count int,"
@@ -2915,7 +2942,6 @@ def write_iceberg_dvs(
     if not meta.get("snapshots"):
         raise ValueError("cannot commit deletes to an empty table")
     md = _metadata_dir(table)
-    data_dir = os.path.join(table, "data")
     data, old_deletes, _eq = _snapshot_files(table)
     commit = uuid.uuid4().hex[:12]
 
@@ -3057,7 +3083,6 @@ def write_iceberg_dvs(
 
     version = _metadata_version(md)
     snapshot_id = version + 1
-    seq = snapshot_id
     entries = [
         {
             "status": 1,
@@ -3078,124 +3103,30 @@ def write_iceberg_dvs(
         }
         for d in sorted(descriptors, key=lambda d: d.ref)
     ]
-    manifest_path = os.path.join(md, f"manifest-{commit}.avro")
-    write_avro_file(manifest_path, _dv_manifest_schema(), entries)
 
-    # manifest inventory: prior DELETE manifests drop superseded DV
+    def _superseded(e: dict) -> bool:
+        dfl = e["data_file"]
+        return (dfl.get("file_format") or "").upper() == "PUFFIN" and (
+            _resolve_path(table, dfl.get("referenced_data_file") or "")
+            in touched
+        )
+
+    # manifest inventory: prior DELETE manifests retire superseded DV
     # entries (at most one DV per data file); everything else
     # re-references as-is
-    snap = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    _, prior_records = read_avro_records(
-        _resolve_path(table, snap["manifest-list"])
-    )
-    list_records: list[dict] = []
-    for i, m in enumerate(prior_records):
-        norm = {
-            "manifest_path": m["manifest_path"],
-            "manifest_length": m["manifest_length"],
-            "partition_spec_id": m.get("partition_spec_id", 0),
-            "content": m.get("content", 0),
-            "sequence_number": m.get("sequence_number", 0),
-            "min_sequence_number": m.get("min_sequence_number", 0),
-            "added_snapshot_id": m.get("added_snapshot_id") or 0,
-            "added_files_count": m.get("added_files_count", 0),
-            "existing_files_count": m.get("existing_files_count", 0),
-            "deleted_files_count": m.get("deleted_files_count", 0),
-            "added_rows_count": m.get("added_rows_count", 0),
-            "existing_rows_count": m.get("existing_rows_count", 0),
-            "deleted_rows_count": m.get("deleted_rows_count", 0),
-            "partitions": m.get("partitions"),
-        }
-        if (m.get("content") or 0) != 1:
-            list_records.append(norm)
-            continue
-        mschema, mentries = read_avro_records(
-            _resolve_path(table, m["manifest_path"])
+    records = [
+        _retire_entries(
+            table, md, rec, _superseded, snapshot_id, f"{commit}-dv{i:03d}"
+        )[0]
+        if rec["content"] == 1
+        else rec
+        for i, rec in enumerate(_snapshot_records(table, meta))
+    ]
+    records.append(
+        _added_manifest(
+            md, commit, _dv_manifest_schema(), entries, snapshot_id, 1
         )
-        superseded = [
-            e
-            for e in mentries
-            if e["status"] != _STATUS_DELETED
-            and (e["data_file"].get("file_format") or "").upper()
-            == "PUFFIN"
-            and _resolve_path(
-                table, e["data_file"].get("referenced_data_file") or ""
-            )
-            in touched
-        ]
-        if not superseded:
-            list_records.append(norm)
-            continue
-        kept_entries = []
-        kept = dropped = 0
-        for e in mentries:
-            if e["status"] == _STATUS_DELETED:
-                continue
-            e_seq = e.get("sequence_number")
-            if e_seq is None:
-                e_seq = m.get("sequence_number", 0)
-            e_snap = e.get("snapshot_id")
-            if e_snap is None:
-                e_snap = m.get("added_snapshot_id") or 0
-            if e in superseded:
-                status = _STATUS_DELETED
-                e_snap = snapshot_id
-                dropped += 1
-            else:
-                status = 0
-                kept += 1
-            kept_entries.append(
-                {
-                    **e,
-                    "status": status,
-                    "snapshot_id": e_snap,
-                    "sequence_number": e_seq,
-                    "file_sequence_number": e.get(
-                        "file_sequence_number"
-                    )
-                    or e_seq,
-                }
-            )
-        new_mpath = os.path.join(
-            md, f"manifest-{commit}-dv{i:03d}.avro"
-        )
-        write_avro_file(new_mpath, mschema, kept_entries)
-        list_records.append(
-            {
-                **norm,
-                "manifest_path": os.path.abspath(new_mpath),
-                "manifest_length": os.path.getsize(new_mpath),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": kept,
-                "deleted_files_count": dropped,
-            }
-        )
-    list_records.append(
-        {
-            "manifest_path": os.path.abspath(manifest_path),
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "content": 1,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": sum(
-                e["data_file"]["record_count"] for e in entries
-            ),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
     )
-    list_path = os.path.join(md, f"snap-{snapshot_id}-{commit}.avro")
-    write_avro_file(list_path, _MANIFEST_LIST_SCHEMA, list_records)
     # the first DV commit upgrades the table to format v3 (DVs are
     # v3-only); row-lineage bookkeeping starts at 0 — pre-upgrade
     # files carry no lineage, the spec's upgrade shape
@@ -3203,9 +3134,7 @@ def write_iceberg_dvs(
     if meta.get("format-version", 1) < 3:
         meta["format-version"] = 3
         meta.setdefault("next-row-id", 0)
-    return _publish_metadata(
-        md, meta, version, snapshot_id, seq, list_path, "delete"
-    )
+    return _commit_snapshot(md, meta, version, commit, records, "delete")
 
 
 
@@ -3235,7 +3164,6 @@ def rewrite_iceberg_data_files(
     oversized groups' files; manifest surgery is O(manifests)
     driver-side like every commit here."""
     meta = iceberg_metadata(table)
-    md = _metadata_dir(table)
     data, deletes, eq_deletes = _snapshot_files(table)
     if not data:
         return meta.get("current-snapshot-id"), 0
@@ -3251,8 +3179,33 @@ def rewrite_iceberg_data_files(
     ]
     if not affected:
         return meta.get("current-snapshot-id"), 0
-    affected_paths = {r["path"] for r in affected}
+    return _commit_rewrite(
+        spark, table, meta, affected, deletes, eq_deletes,
+        drop_delete_manifests=False, coalesce_to=max(int(target_files), 1),
+    )
 
+
+def _commit_rewrite(
+    spark: SparkSession,
+    table: str,
+    meta: dict,
+    affected: list[dict],
+    deletes: list[dict],
+    eq_deletes: list[dict],
+    drop_delete_manifests: bool,
+    coalesce_to: int | None = None,
+) -> tuple[int, int]:
+    """The commit both rewrite maintenance ops share: rewrite the
+    ``affected`` data files with the snapshot's deletes applied (the
+    table's sort clustering restored; ``coalesce_to`` caps an
+    unpartitioned rewrite's file count, Spark's per-directory task
+    layout caps a partitioned one), retire the replaced entries in
+    their data manifests, and either drop the delete manifests
+    (delete-file compaction) or keep them minus the entries left
+    dangling (data-file binpack, where surviving deletes still gate
+    the untouched files). Returns (new snapshot id, data entries
+    retired)."""
+    md = _metadata_dir(table)
     commit = uuid.uuid4().hex[:12]
     names_by_id = _schema_field_names_by_id(meta)
     spec_id = meta.get("default-spec-id", 0)
@@ -3267,30 +3220,26 @@ def rewrite_iceberg_data_files(
         name: _spec_avro_type(transform, src_types[src])
         for name, transform, src in spec_tuples
     }
-    ids_by_name = {name: fid for fid, name in names_by_id.items()}
-    # deletes touching the affected files are applied here; the
-    # partitioned staging repartitions per tuple, then target_files
-    # caps the per-group output via coalesce on the unpartitioned
-    # path / Spark's per-directory task layout on the partitioned one
-    compacted = _apply_row_deletes(
-        spark, meta, _spark_ddl(meta), affected, deletes, eq_deletes
-    )
-    if not spec_tuples:
-        compacted = compacted.coalesce(max(int(target_files), 1))
-    sort_cols, so_id = _default_sort_order(meta, names_by_id)
-    new_entries = _stage_table_data(
-        spark,
-        table,
-        compacted,
-        spec_tuples,
-        src_types,
-        ids_by_name,
-        part_avro_types,
-        commit,
-        sort_cols=sort_cols,
-        sort_order_id=so_id,
-    )
-
+    new_entries: list[dict] = []
+    if affected:
+        compacted = _apply_row_deletes(
+            spark, meta, _spark_ddl(meta), affected, deletes, eq_deletes
+        )
+        if coalesce_to is not None and not spec_tuples:
+            compacted = compacted.coalesce(coalesce_to)
+        sort_cols, so_id = _default_sort_order(meta, names_by_id)
+        new_entries = _stage_table_data(
+            spark,
+            table,
+            compacted,
+            spec_tuples,
+            src_types,
+            {name: fid for fid, name in names_by_id.items()},
+            part_avro_types,
+            commit,
+            sort_cols=sort_cols,
+            sort_order_id=so_id,
+        )
     # v3 lineage: rewritten files take FRESH row-id ranges (see
     # _assign_row_lineage — stability through rewrites would need
     # materialized _row_id columns)
@@ -3298,229 +3247,25 @@ def rewrite_iceberg_data_files(
 
     version = _metadata_version(md)
     snapshot_id = version + 1
-    seq = snapshot_id
-    snap = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    _, prior = read_avro_records(
-        _resolve_path(table, snap["manifest-list"])
-    )
-    # delete manifests survive (they still gate the untouched files),
-    # minus entries whose every target was just replaced
-    list_records, rewritten = _replacement_manifest_records(
-        table, md, prior, affected_paths, snapshot_id, commit,
-        drop_delete_manifests=False,
-    )
-    if new_entries:
-        new_mpath = os.path.join(md, f"manifest-{commit}.avro")
-        write_avro_file(
-            new_mpath,
-            _data_manifest_schema(spec_tuples, part_avro_types),
-            new_entries,
-        )
-        list_records.append(
-            {
-                "manifest_path": os.path.abspath(new_mpath),
-                "manifest_length": os.path.getsize(new_mpath),
-                "partition_spec_id": spec_id,
-                "partitions": _partition_summaries(
-                    spec_tuples, src_types, new_entries
-                ),
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(new_entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    list_path = os.path.join(md, f"snap-{snapshot_id}-{commit}.avro")
-    write_avro_file(list_path, _MANIFEST_LIST_SCHEMA, list_records)
-    if next_rid is not None:
-        meta = {**meta, "next-row-id": next_rid}
-    _publish_metadata(
-        md, meta, version, snapshot_id, seq, list_path, "replace",
-        snapshot_extra=(
-            {"first-row-id": first_rid}
-            if first_rid is not None and new_entries
-            else None
-        ),
-    )
-    return snapshot_id, rewritten
+    affected_paths = {r["path"] for r in affected}
 
-
-def _replacement_manifest_records(
-    table: str,
-    md: str,
-    prior: list[dict],
-    affected_paths: set[str],
-    snapshot_id: int,
-    commit: str,
-    drop_delete_manifests: bool,
-) -> tuple[list[dict], int]:
-    """Manifest surgery shared by the two rewrite maintenance ops:
-    re-reference untouched manifests as-is, rewrite any DATA manifest
-    whose live entries include replaced files (replaced -> DELETED by
-    this snapshot, kept -> EXISTING, inheritance resolved to explicit
-    sequence numbers), and either drop delete manifests
-    (delete-file compaction) or re-reference them (data-file binpack,
-    where surviving deletes still gate untouched files). Returns
-    (manifest-list records, number of replaced entries)."""
-    list_records: list[dict] = []
-    rewritten = 0
-    for i, m in enumerate(prior):
-        norm = {
-            "manifest_path": m["manifest_path"],
-            "manifest_length": m["manifest_length"],
-            "partitions": m.get("partitions"),
-            "partition_spec_id": m.get("partition_spec_id", 0),
-            "content": m.get("content") or 0,
-            "sequence_number": m.get("sequence_number", 0),
-            "min_sequence_number": m.get("min_sequence_number", 0),
-            "added_snapshot_id": m.get("added_snapshot_id") or 0,
-            "added_files_count": m.get("added_files_count", 0),
-            "existing_files_count": m.get("existing_files_count", 0),
-            "deleted_files_count": m.get("deleted_files_count", 0),
-            "added_rows_count": m.get("added_rows_count", 0),
-            "existing_rows_count": m.get("existing_rows_count", 0),
-            "deleted_rows_count": m.get("deleted_rows_count", 0),
-        }
-        if (m.get("content") or 0) == 1:
-            if drop_delete_manifests:
-                continue
-            list_records.append(
-                _prune_dangling_delete_entries(
-                    table, md, norm, affected_paths, snapshot_id,
-                    f"{commit}-dd{i:03d}",
-                )
-            )
-            continue
-        mschema, entries = read_avro_records(
-            _resolve_path(table, m["manifest_path"])
-        )
-        live_entries = [
-            e for e in entries if e["status"] != _STATUS_DELETED
-        ]
-        touched = [
-            e
-            for e in live_entries
-            if _resolve_path(table, e["data_file"]["file_path"])
+    def _replaced(e: dict) -> bool:
+        return (
+            _resolve_path(table, e["data_file"]["file_path"])
             in affected_paths
-        ]
-        if not touched:
-            list_records.append(norm)
-            continue
-        # rewritten manifest: replaced entries flip to DELETED, kept
-        # ones to EXISTING — both with inheritance resolved to
-        # explicit sequence numbers (the original manifest's seq)
-        out_entries = []
-        kept = dropped = 0
-        kept_rows = dropped_rows = 0
-        min_seq = None
-        for e in live_entries:
-            e_seq = e.get("sequence_number")
-            if e_seq is None:
-                e_seq = m.get("sequence_number", 0)
-            e_snap = e.get("snapshot_id")
-            if e_snap is None:
-                e_snap = m.get("added_snapshot_id") or 0
-            replaced = (
-                _resolve_path(table, e["data_file"]["file_path"])
-                in affected_paths
-            )
-            n = e["data_file"].get("record_count", 0)
-            if replaced:
-                dropped += 1
-                dropped_rows += n
-                status = _STATUS_DELETED
-                e_snap = snapshot_id  # deleted BY this snapshot
-            else:
-                kept += 1
-                kept_rows += n
-                status = 0  # EXISTING
-                min_seq = (
-                    e_seq if min_seq is None else min(min_seq, e_seq)
-                )
-            out_entries.append(
-                {
-                    **e,
-                    "status": status,
-                    "snapshot_id": e_snap,
-                    "sequence_number": e_seq,
-                    "file_sequence_number": e.get(
-                        "file_sequence_number"
-                    )
-                    or e_seq,
-                }
-            )
-        rewritten += dropped
-        if not kept and not dropped:
-            continue
-        new_mpath = os.path.join(
-            md, f"manifest-{commit}-rw{i:03d}.avro"
         )
-        write_avro_file(new_mpath, mschema, out_entries)
-        list_records.append(
-            {
-                **norm,
-                "manifest_path": os.path.abspath(new_mpath),
-                "manifest_length": os.path.getsize(new_mpath),
-                "min_sequence_number": (
-                    min_seq
-                    if min_seq is not None
-                    else m.get("min_sequence_number", 0)
-                ),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": kept,
-                "deleted_files_count": dropped,
-                "added_rows_count": 0,
-                "existing_rows_count": kept_rows,
-                "deleted_rows_count": dropped_rows,
-            }
-        )
-    return list_records, rewritten
-
-
-def _prune_dangling_delete_entries(
-    table: str,
-    md: str,
-    norm: dict,
-    affected_paths: set[str],
-    snapshot_id: int,
-    tag: str,
-) -> dict:
-    """Rewrite one DELETE manifest for the binpack path, flipping to
-    DELETED any live entry whose every target data file was just
-    replaced (ADVICE r18): a DV or position-delete file aimed only at
-    replaced files is dead weight — harmless at read time (rewritten
-    files take a newer sequence number, the strict gate skips the
-    delete) but it accumulates across compactions, inflating $files
-    and every later commit's manifest surgery. Mirrors
-    write_iceberg_dvs's superseded-DV surgery.
-
-    Targets resolve from referenced_data_file when stamped (DVs
-    always, single-file position deletes usually); an unstamped
-    position-delete parquet is probed for its distinct file_path set
-    (driver-side, O(delete files) — maintenance-op bounded).
-    Equality deletes target by VALUE, not path — always kept.
-    Returns the manifest-list record to reference (the rewritten
-    manifest keeps its DELETED rows so snapshot diffing still sees
-    which snapshot retired them), or the record unchanged when
-    nothing dangles."""
-    mschema, mentries = read_avro_records(
-        _resolve_path(table, norm["manifest_path"])
-    )
 
     def _dangling(e: dict) -> bool:
+        """A DV or position-delete file aimed only at replaced files
+        (ADVICE r18) is dead weight — harmless at read time (rewritten
+        files take a newer sequence number, the strict gate skips the
+        delete) but it accumulates across compactions, inflating $files
+        and every later commit's manifest surgery. Targets resolve
+        from referenced_data_file when stamped (DVs always,
+        single-file position deletes usually); an unstamped
+        position-delete parquet is probed for its distinct file_path
+        set (driver-side, O(delete files) — maintenance-op bounded).
+        Equality deletes target by VALUE, not path — always kept."""
         dfl = e["data_file"]
         if (dfl.get("content") or 0) == 2:
             return False
@@ -3544,61 +3289,44 @@ def _prune_dangling_delete_entries(
             _resolve_path(table, t) in affected_paths for t in targets
         )
 
-    live = [e for e in mentries if e["status"] != _STATUS_DELETED]
-    dang = [e for e in live if _dangling(e)]
-    if not dang:
-        return norm
-    out_entries = []
-    kept = dropped = 0
-    kept_rows = dropped_rows = 0
-    min_seq = None
-    for e in live:
-        e_seq = e.get("sequence_number")
-        if e_seq is None:
-            e_seq = norm.get("sequence_number", 0)
-        e_snap = e.get("snapshot_id")
-        if e_snap is None:
-            e_snap = norm.get("added_snapshot_id") or 0
-        n = e["data_file"].get("record_count", 0)
-        if e in dang:
-            status = _STATUS_DELETED
-            e_snap = snapshot_id
-            dropped += 1
-            dropped_rows += n
+    records: list[dict] = []
+    rewritten = 0
+    for i, rec in enumerate(_snapshot_records(table, meta)):
+        if rec["content"] != 1:
+            rec, n = _retire_entries(
+                table, md, rec, _replaced, snapshot_id, f"{commit}-rw{i:03d}"
+            )
+            rewritten += n
+        elif drop_delete_manifests:
+            continue
         else:
-            status = 0  # EXISTING
-            kept += 1
-            kept_rows += n
-            min_seq = e_seq if min_seq is None else min(min_seq, e_seq)
-        out_entries.append(
-            {
-                **e,
-                "status": status,
-                "snapshot_id": e_snap,
-                "sequence_number": e_seq,
-                "file_sequence_number": e.get("file_sequence_number")
-                or e_seq,
-            }
+            rec, _n = _retire_entries(
+                table, md, rec, _dangling, snapshot_id, f"{commit}-dd{i:03d}"
+            )
+        records.append(rec)
+    if new_entries:
+        records.append(
+            _added_manifest(
+                md,
+                commit,
+                _data_manifest_schema(spec_tuples, part_avro_types),
+                new_entries,
+                snapshot_id,
+                0,
+                spec_id,
+                _partition_summaries(spec_tuples, src_types, new_entries),
+            )
         )
-    new_mpath = os.path.join(md, f"manifest-{tag}.avro")
-    write_avro_file(new_mpath, mschema, out_entries)
-    return {
-        **norm,
-        "manifest_path": os.path.abspath(new_mpath),
-        "manifest_length": os.path.getsize(new_mpath),
-        "min_sequence_number": (
-            min_seq
-            if min_seq is not None
-            else norm.get("min_sequence_number", 0)
+    if next_rid is not None:
+        meta = {**meta, "next-row-id": next_rid}
+    return _commit_snapshot(
+        md, meta, version, commit, records, "replace",
+        snapshot_extra=(
+            {"first-row-id": first_rid}
+            if first_rid is not None and new_entries
+            else None
         ),
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": 0,
-        "existing_files_count": kept,
-        "deleted_files_count": dropped,
-        "added_rows_count": 0,
-        "existing_rows_count": kept_rows,
-        "deleted_rows_count": dropped_rows,
-    }
+    ), rewritten
 
 
 def rewrite_iceberg_deletes(
@@ -3630,7 +3358,6 @@ def rewrite_iceberg_deletes(
     maintenance actions (public spec + docs); the reference engine
     (JobScraper) has no table maintenance at all."""
     meta = iceberg_metadata(table)
-    md = _metadata_dir(table)
     data, deletes, eq_deletes = _snapshot_files(table)
     if not deletes and not eq_deletes:
         return meta["current-snapshot-id"], 0
@@ -3680,123 +3407,31 @@ def rewrite_iceberg_deletes(
             r["path"] for r in data if r["seq"] < max_eq
         }
     affected = [r for r in data if r["path"] in affected_paths]
-
-    # --- rewrite the affected files with deletes applied ----------
-    commit = uuid.uuid4().hex[:12]
-    new_entries: list[dict] = []
-    spec_id = meta.get("default-spec-id", 0)
-    names_by_id = _schema_field_names_by_id(meta)
-    src_types = {
-        f["name"]: f["type"] for f in _current_schema(meta)["fields"]
-    }
-    spec_tuples = [
-        (f["name"], f["transform"], names_by_id[f["source-id"]])
-        for f in _partition_spec_fields(meta, spec_id)
-    ]
-    part_avro_types = {
-        name: _spec_avro_type(transform, src_types[src])
-        for name, transform, src in spec_tuples
-    }
-    ids_by_name = {name: fid for fid, name in names_by_id.items()}
-    if affected:
-        compacted = _apply_row_deletes(
-            spark, meta, _spark_ddl(meta), affected, deletes, eq_deletes
-        )
-        # compaction restores the table's sort clustering
-        sort_cols, so_id = _default_sort_order(meta, names_by_id)
-        new_entries = _stage_table_data(
-            spark,
-            table,
-            compacted,
-            spec_tuples,
-            src_types,
-            ids_by_name,
-            part_avro_types,
-            commit,
-            sort_cols=sort_cols,
-            sort_order_id=so_id,
-        )
-
-    # v3 lineage: rewritten files take FRESH row-id ranges
-    first_rid, next_rid = _assign_row_lineage(meta, new_entries)
-
-    # --- rewrite the manifest inventory ---------------------------
-    version = _metadata_version(md)
-    snapshot_id = version + 1
-    seq = snapshot_id
-    snap = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    _, prior = read_avro_records(
-        _resolve_path(table, snap["manifest-list"])
-    )
-    # delete manifests are DROPPED from the new inventory — that's
-    # the point of this op; data manifests go through the shared
-    # surgery
-    list_records, rewritten = _replacement_manifest_records(
-        table, md, prior, affected_paths, snapshot_id, commit,
+    # delete manifests are DROPPED from the new inventory — that's the
+    # point of this op
+    snapshot_id, _n = _commit_rewrite(
+        spark, table, meta, affected, deletes, eq_deletes,
         drop_delete_manifests=True,
-    )
-    if new_entries:
-        new_mpath = os.path.join(md, f"manifest-{commit}.avro")
-        write_avro_file(
-            new_mpath,
-            _data_manifest_schema(spec_tuples, part_avro_types),
-            new_entries,
-        )
-        list_records.append(
-            {
-                "manifest_path": os.path.abspath(new_mpath),
-                "manifest_length": os.path.getsize(new_mpath),
-                "partition_spec_id": spec_id,
-                "partitions": _partition_summaries(
-                    spec_tuples, src_types, new_entries
-                ),
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(new_entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    list_path = os.path.join(md, f"snap-{snapshot_id}-{commit}.avro")
-    write_avro_file(list_path, _MANIFEST_LIST_SCHEMA, list_records)
-    if next_rid is not None:
-        meta = {**meta, "next-row-id": next_rid}
-    _publish_metadata(
-        md, meta, version, snapshot_id, seq, list_path, "replace",
-        snapshot_extra=(
-            {"first-row-id": first_rid}
-            if first_rid is not None and new_entries
-            else None
-        ),
     )
     return snapshot_id, len(affected)
 
 
-def _publish_metadata(
+def _commit_snapshot(
     md: str,
     meta: dict,
     version: int,
-    snapshot_id: int,
-    seq: int,
-    list_path: str,
+    commit: str,
+    records: list[dict],
     operation: str,
     snapshot_extra: dict | None = None,
     branch: str | None = None,
     parent_snapshot_id: int | None = None,
 ) -> int:
-    """Publish the vN+1 metadata JSON + version hint for a new
-    snapshot — the shared commit tail of every Iceberg write here.
+    """Commit snapshot ``version`` + 1, which is also its sequence
+    number: write its manifest list ``snap-<id>-<commit>.avro`` from
+    ``records`` (the snapshot's complete manifest inventory), then
+    publish the vN+1 metadata JSON + version hint — the shared commit
+    tail of every Iceberg write here. Returns the snapshot id.
 
     v2 sequence-number semantics; committing onto a table created by
     the earlier v1 writer upgrades its metadata in place (a legal
@@ -3812,6 +3447,9 @@ def _publish_metadata(
     (the base it was committed onto — ``parent_snapshot_id`` for
     branch writes, else the prior current snapshot) so fast-forward
     publishing can check real ancestry."""
+    snapshot_id = seq = version + 1
+    list_path = os.path.join(md, f"snap-{snapshot_id}-{commit}.avro")
+    write_avro_file(list_path, _MANIFEST_LIST_SCHEMA, records)
     meta = dict(meta)
     parent = (
         parent_snapshot_id

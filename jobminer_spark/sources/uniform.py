@@ -34,22 +34,22 @@ import os
 import urllib.parse
 import uuid
 
-from jobminer_spark.sources.avro import write_avro_file
 from jobminer_spark.sources.delta import (
     _add_abs_path,
+    _commit_loop,
     _has_dv,
     _mapping_mode,
-    _publish_commit,
+    _remove_action,
     _replay_full,
     delta_latest_version,
 )
 from jobminer_spark.sources.iceberg import (
-    _MANIFEST_LIST_SCHEMA,
+    _added_manifest,
+    _commit_snapshot,
     _data_manifest_schema,
     _metadata_dir,
     _metadata_version,
     _partition_summaries,
-    _publish_metadata,
     _spec_avro_type,
     iceberg_metadata,
 )
@@ -208,39 +208,19 @@ def write_uniform_iceberg_metadata(table: str) -> int:
     except FileNotFoundError:
         prior = None
     commit = uuid.uuid4().hex[:12]
-    manifest_path = os.path.join(md, f"manifest-{commit}.avro")
-    write_avro_file(
-        manifest_path,
-        _data_manifest_schema(spec_tuples, part_avro_types),
-        entries,
-    )
     version = _metadata_version(md) if prior is not None else 0
-    snapshot_id = version + 1
-    seq = snapshot_id
-    list_records = [
-        {
-            "manifest_path": os.path.abspath(manifest_path),
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "partitions": _partition_summaries(
-                spec_tuples, types_by_name, entries
-            ),
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": sum(
-                e["data_file"]["record_count"] for e in entries
-            ),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
+    records = [
+        _added_manifest(
+            md,
+            commit,
+            _data_manifest_schema(spec_tuples, part_avro_types),
+            entries,
+            version + 1,
+            0,
+            0,
+            _partition_summaries(spec_tuples, types_by_name, entries),
+        )
     ]
-    list_path = os.path.join(md, f"snap-{snapshot_id}-{commit}.avro")
-    write_avro_file(list_path, _MANIFEST_LIST_SCHEMA, list_records)
     ice_meta = {
         "format-version": 2,
         "table-uuid": (prior or {}).get("table-uuid")
@@ -268,9 +248,7 @@ def write_uniform_iceberg_metadata(table: str) -> int:
         # the Delta side
         "snapshots": [],
     }
-    return _publish_metadata(
-        md, ice_meta, version, snapshot_id, seq, list_path, "append"
-    )
+    return _commit_snapshot(md, ice_meta, version, commit, records, "append")
 
 
 # Iceberg type → Delta schema-string type (the reverse direction)
@@ -359,50 +337,41 @@ def export_iceberg_to_delta(ice_table: str, delta_table: str) -> int:
                 "dataChange": True,
             }
         )
-    current = delta_latest_version(delta_table)
     os.makedirs(
         os.path.join(delta_table, "_delta_log"), exist_ok=True
     )
-    actions: list[dict] = []
-    prev_adds: dict = {}
-    if current < 0:
+
+    def _attempt(current, snap):
+        actions: list[dict] = []
+        if snap is None:
+            actions.append(
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+            )
         actions.append(
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-        )
-    else:
-        prev_adds, _rm, _m, _tx, _proto = _replay_full(
-            delta_table, current
-        )
-    actions.append(
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(
-                    {"type": "struct", "fields": fields}
-                ),
-                "partitionColumns": [],
-                "configuration": {
-                    "delta.universalFormat.source": "iceberg",
-                    "delta.universalFormat.icebergSnapshot": str(
-                        meta.get("current-snapshot-id")
+            {
+                "metaData": {
+                    "id": str(uuid.uuid4()),
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": json.dumps(
+                        {"type": "struct", "fields": fields}
                     ),
-                },
-                "createdTime": 0,
+                    "partitionColumns": [],
+                    "configuration": {
+                        "delta.universalFormat.source": "iceberg",
+                        "delta.universalFormat.icebergSnapshot": str(
+                            meta.get("current-snapshot-id")
+                        ),
+                    },
+                    "createdTime": 0,
+                }
             }
-        }
-    )
-    now_ms = int(time.time() * 1000)
-    actions.extend(
-        {
-            "remove": {
-                "path": p,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for p in sorted(prev_adds)
-    )
-    actions.extend({"add": a} for a in adds)
-    _publish_commit(delta_table, current + 1, actions)
-    return current + 1
+        )
+        now_ms = int(time.time() * 1000)
+        prev_adds = {} if snap is None else snap[0]
+        actions.extend(
+            _remove_action(prev_adds[p], now_ms) for p in sorted(prev_adds)
+        )
+        actions.extend({"add": a} for a in adds)
+        return actions, [], current + 1
+
+    return _commit_loop(delta_table, "overwrite", _attempt)
