@@ -6,10 +6,16 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Session startup is excluded (a warmup action runs first); each query
-is timed to full materialization (collect)."""
+is timed to full materialization (collect).
+
+``--queries a,b [--passes N]`` times just the named registered queries
+(headline or not) the same way — same warm-up, min over N passes
+(default $SPARK_GRAFT_BENCH_PASSES or 5) — for quick per-change A/B
+legs; the line printed has the same shape."""
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -133,6 +139,16 @@ HEADLINE = [
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    ap.add_argument(
+        "--queries", help="comma-separated query names (default: the headline set)"
+    )
+    ap.add_argument(
+        "--passes", type=int, help="timed passes (default: $SPARK_GRAFT_BENCH_PASSES or 5)"
+    )
+    args = ap.parse_args()
+    names = args.queries.split(",") if args.queries else HEADLINE
+
     from jobminer_spark import QUERIES, load_all_operators
     from jobminer_spark.operators.common import forget_scenarios
     from jobminer_spark.session import get_spark
@@ -144,8 +160,11 @@ def main() -> None:
     # EVERY fixture table (so the first query over each table doesn't
     # absorb scan warmup — q1's r4 number was exactly that), and the
     # Python worker pool (one-time fork-per-core storm that a
-    # long-lived cluster amortizes; multimodal_decode_features is the
-    # only headline query that needs workers at all)
+    # long-lived cluster amortizes; the headline queries that still
+    # need workers are multimodal_decode_features,
+    # html_badge_parse_udf, embedding_neardup_bucketed,
+    # tfidf_top_similar_pairs, bm25_topk_per_query,
+    # pca_power_iteration_audit and filter_agreement_kappa)
     from jobminer_spark.sources.parquet import FIXTURE_TABLES, load_table
 
     for t in FIXTURE_TABLES:
@@ -164,9 +183,9 @@ def main() -> None:
     # bursts that can double a whole pass) — the number recorded is
     # the engine's cost, not the noisy host's.
     timings: dict[str, float] = {}
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
+    n_passes = args.passes or int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
     for _pass in range(n_passes):
-        for name in HEADLINE:
+        for name in names:
             fn = QUERIES[name]
             if name == "lakehouse_merge_parity":
                 # its memoized scenario result would otherwise time a

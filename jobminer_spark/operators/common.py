@@ -132,7 +132,7 @@ def bucket_sql(key_sql: str, n_buckets: int = 100) -> str:
 
 
 def word_shingles(docs, n: int = 3, max_df: int | None = None):
-    """(doc_id, shingle) distinct word n-grams via array slicing —
+    """(doc_id, shingle) distinct word n-grams via :func:`ngram_rows` —
     pure built-ins, stays in whole-stage codegen.
 
     With ``max_df`` set, shingles with document frequency above the cap
@@ -144,14 +144,12 @@ def word_shingles(docs, n: int = 3, max_df: int | None = None):
     it a second time (measured ~15% slower end-to-end at sf0.1). An
     over-limit hot set fails loudly (Spark's broadcast size error), not
     silently wrong."""
-    sh = ngram_rows_arrow(
-        # spread_scan (r20): a single-row-group input would serialize
-        # shingle generation, and a keyed repartition here is
-        # AQE-coalescible by BYTES — a bad proxy for the Python-side
-        # tokenize cost. Explicit round-robin only when splits <
-        # cores; no-op at scale. A null text splits to a null array
-        # the old size(w) >= n filter dropped — the explicit filter
-        # keeps that contract.
+    sh = ngram_rows(
+        # spread_scan: a single-row-group input would run the whole
+        # tokenize + n-gram explode in one task. Round-robin only when
+        # splits < cores; a no-op at scale. Dropping NULL texts before
+        # the exchange keeps them off the wire (ngram_rows would drop
+        # them anyway).
         spread_scan(docs.filter(F.col("text").isNotNull())),
         n,
     ).distinct()
@@ -292,212 +290,56 @@ def dot_col(a, b):
     return qdot(a, b).cast("double") / F.lit(float(QUANT))
 
 
-def ngram_rows_arrow(
-    docs, n: int, id_col: str = "doc_id", text_col: str = "text", out: str = "shingle"
-):
-    """(id, word-n-gram) rows — one per POSITION, duplicates kept —
-    via one vectorized Arrow pass instead of the interpreted
-    transform-lambda + JVM explode (higher-order functions get no
-    codegen and dominated the shingle pipelines' wall clock).
+def ngram_rows(docs, n: int, out: str = "shingle"):
+    """(doc_id, word-n-gram) rows — one per POSITION, duplicates kept.
 
-    Exactness contract vs the expression path it replaces
-    (``explode(transform(sequence(0, size(w)-n), i -> concat_ws(' ',
-    w[i..i+n-1])))`` over ``w = split(text, ' ')``):
-    ``pa.compute.split_pattern(text, ' ')`` == Spark ``split(text,
-    ' ')`` (literal single-space pattern, trailing/consecutive empties
-    kept in both, Java Pattern.split(limit=-1) semantics), and the
-    n-gram is a plain space-join of n adjacent non-null tokens ==
-    concat_ws. Docs with fewer than n tokens emit nothing (the
-    ``size(w) >= n`` filter upstream becomes max(L-n+1, 0) here).
-    NULL ids/texts must be filtered upstream (checked loudly)."""
-    from pyspark.sql.types import StructField, StructType
-
-    src = docs.select(id_col, text_col)
-    id_field = src.schema.fields[0]
-    out_schema = StructType(
-        [id_field, StructField(out, src.schema.fields[1].dataType, True)]
+    Tokens are ``w = split(text, ' ', -1)`` (literal single space,
+    leading, trailing and consecutive empties kept — Python's
+    ``text.split(' ')``); only docs with ``size(w) >= n`` emit rows,
+    so a shorter doc or a NULL text emits nothing. Gram i is
+    ``concat_ws(' ', w[i+1], …, w[i+n])``, its n terms spelled out
+    here because n is known when the plan is built. No higher-order
+    function and no lambda, so the whole chain — split,
+    explode(sequence) and the join — compiles under whole-stage
+    codegen."""
+    w = F.split(F.col("text"), " ", -1)
+    i = F.col("_i")
+    # the size guard sits inside the generator, not in a Filter: the
+    # optimizer pushes a Filter below the projection and inlines the
+    # split into it, which tokenizes every row twice
+    starts = F.when(F.size("_w") >= n, F.sequence(F.lit(0), F.size("_w") - n))
+    return (
+        docs.select("doc_id", w.alias("_w"))
+        .select("doc_id", "_w", F.explode(starts).alias("_i"))
+        .select(
+            "doc_id",
+            F.concat_ws(
+                " ", *[F.element_at("_w", i + (j + 1)) for j in range(n)]
+            ).alias(out),
+        )
     )
 
-    def _gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute  # noqa: F401 — pa.compute needs the explicit import
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0)
-            texts = batch.column(1)
-            if ids.null_count or texts.null_count:
-                raise ValueError(
-                    "ngram_rows_arrow: null ids/texts must be filtered upstream"
-                )
-            toks = pa.compute.split_pattern(texts, pattern=" ")
-            lens = pa.compute.list_value_length(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            flat = toks.flatten()
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            counts = np.maximum(lens - n + 1, 0)
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            rep_starts = np.repeat(starts, counts)
-            within = np.arange(total, dtype=np.int64) - np.repeat(
-                np.cumsum(counts) - counts, counts
-            )
-            base = rep_starts + within
-            parts = [flat.take(pa.array(base + j)) for j in range(n)]
-            if n == 1:
-                grams = parts[0]
-            else:
-                grams = pa.compute.binary_join_element_wise(*parts, " ")
-            out_ids = ids.take(
-                pa.array(np.repeat(np.arange(len(lens), dtype=np.int64), counts))
-            )
-            yield pa.RecordBatch.from_arrays([out_ids, grams], names=[id_field.name, out])
+def posting_pairs(idx, list_col: str = "ds", size_markers: bool = False):
+    """(doc_a, doc_b) rows from an inverted index of per-key SORTED id
+    arrays: for each list, every (ds[i], ds[j]) with i < j — the upper
+    triangle, for any element type. ``posexplode`` gives each element
+    its position, and ``explode(slice(ds, pos + 2, size(ds)))`` pairs
+    it with every later element; no lambda, so it stays in codegen.
 
-    return src.mapInArrow(_gen, out_schema)
-
-
-def posting_pairs_arrow(idx, list_col: str = "ds"):
-    """(doc_a, doc_b) candidate-pair rows from an inverted index of
-    per-shingle doc-id arrays — the vectorized Arrow twin of the
-    in-row C(df,2) struct transform (interpreted lambdas, no codegen).
-    The pair multiset is identical: for each list, every
-    (ds[i], ds[j]) with i < j, exactly what
-    ``flatten(transform(...slice...))`` emits. Requires a bigint
-    element type (callers with non-integer doc ids keep the
-    expression path)."""
-
-    def _gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute  # noqa: F401 — pa.compute needs the explicit import
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ds = batch.column(0)
-            vals = ds.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            lens = pa.compute.list_value_length(ds).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            out_a, out_b = [], []
-            for L in np.unique(lens):
-                if L < 2:
-                    continue
-                rows = np.nonzero(lens == L)[0]
-                mat = vals[starts[rows][:, None] + np.arange(L)[None, :]]
-                iu, ju = np.triu_indices(int(L), k=1)
-                out_a.append(mat[:, iu].ravel())
-                out_b.append(mat[:, ju].ravel())
-            if not out_a:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_a)), pa.array(np.concatenate(out_b))],
-                names=["doc_a", "doc_b"],
-            )
-
-    return idx.select(list_col).mapInArrow(_gen, "doc_a bigint, doc_b bigint")
-
-
-def shingle_pair_counts_arrow(docs, n: int, max_df: int | None = None):
-    """Partial-counted (doc_a, doc_b, cnt) rows from word n-gram
-    shingles — the fused twin of ``shingle_doc_lists`` +
-    ``posting_pairs_arrow``: doc_b-non-NULL rows sum (per pair) to the
-    shared-surviving-shingle count, doc_b-NULL marker rows sum (per
-    doc) to the surviving-shingle total. ONE hash exchange on the
-    shingle string, then a single Arrow pass per task does the
-    (shingle, doc) dedup, per-shingle grouping, df cap, upper-triangle
-    pair generation (sorted doc ids, i < j) and per-task run-length
-    pre-counting — removing the collect_set ObjectHashAggregate, the
-    sorted-array materialization, and the second Python boundary of
-    the two-step shape (guide §4.2, §2.3). Callers MUST sum ``cnt``,
-    not count rows.
-
-    Equivalence: hash partitioning on shingle colocates every posting
-    of a shingle in one task, so per-task groups ARE the global
-    groups; the pair/marker multisets (weighted by cnt) are identical
-    to the two-step path's. Memory: a task holds its partition's
-    postings plus per-shingle segments — the same order as the
-    ObjectHashAggregate hash map it replaces; partition count scales
-    with the corpus via spark.sql.shuffle.partitions/AQE. Requires
-    bigint doc ids (same contract as posting_pairs_arrow)."""
-    raw = ngram_rows_arrow(
-        spread_scan(docs.filter(F.col("text").isNotNull())), n
+    With ``size_markers`` every posting also emits one (doc, NULL)
+    row, so a single ``groupBy(doc_a, doc_b).count()`` yields both the
+    per-pair shared-key counts (doc_b non-NULL) and the per-doc key
+    totals (doc_b NULL)."""
+    ds = F.col(list_col)
+    tail = F.slice(ds, F.col("_pos") + 2, F.size(ds))
+    if size_markers:
+        elem = idx.schema[list_col].dataType.elementType
+        tail = F.concat(F.array(F.lit(None).cast(elem)), tail)
+    return (
+        idx.select(F.posexplode(ds).alias("_pos", "doc_a"), ds)
+        .select("doc_a", F.explode(tail).alias("doc_b"))
     )
-    # hash partitioning on shingle is CORRECTNESS here (per-task
-    # groups must be the global groups); the explicit width pins it
-    # against AQE's byte-based coalescing, which under-parallelizes
-    # the Python-side pair kernel (bytes are a bad proxy for its CPU).
-    rep = raw.repartition(
-        raw.sparkSession.sparkContext.defaultParallelism, "shingle"
-    )
-
-    def _gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        ids_l, sh_l = [], []
-        for b in batches:
-            if b.num_rows:
-                ids_l.append(b.column(0))
-                sh_l.append(b.column(1))
-        if not ids_l:
-            return
-        ids = pa.chunked_array(ids_l).combine_chunks()
-        sh = pa.chunked_array(sh_l).combine_chunks()
-        codes = (
-            pc.dictionary_encode(sh)
-            .indices.to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        doc = ids.to_numpy(zero_copy_only=False).astype(np.int64)
-        order = np.lexsort((doc, codes))
-        c, d = codes[order], doc[order]
-        keep = np.concatenate(([True], (c[1:] != c[:-1]) | (d[1:] != d[:-1])))
-        c, d = c[keep], d[keep]
-        bnd = np.concatenate(
-            ([0], np.nonzero(c[1:] != c[:-1])[0] + 1, [len(c)])
-        )
-        lens = np.diff(bnd)
-        ok = lens <= max_df if max_df is not None else np.ones(len(lens), bool)
-        surv = np.repeat(ok, lens)
-        md, mc = np.unique(d[surv], return_counts=True)
-        out_a = [md]
-        out_b = [np.zeros(len(md), np.int64)]
-        msk = [np.ones(len(md), bool)]
-        cnts = [mc]
-        starts = bnd[:-1]
-        for L in np.unique(lens[ok & (lens >= 2)]):
-            rows = np.nonzero(ok & (lens == L))[0]
-            mat = d[starts[rows][:, None] + np.arange(L)[None, :]]
-            iu, ju = np.triu_indices(int(L), k=1)
-            pa_, pb_ = mat[:, iu].ravel(), mat[:, ju].ravel()
-            o2 = np.lexsort((pb_, pa_))
-            pa_, pb_ = pa_[o2], pb_[o2]
-            new = np.concatenate(
-                ([True], (pa_[1:] != pa_[:-1]) | (pb_[1:] != pb_[:-1]))
-            )
-            idxs = np.nonzero(new)[0]
-            cnt = np.diff(np.concatenate((idxs, [len(pa_)])))
-            out_a.append(pa_[idxs])
-            out_b.append(pb_[idxs])
-            msk.append(np.zeros(len(idxs), bool))
-            cnts.append(cnt)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.concatenate(out_a)),
-                pa.array(np.concatenate(out_b), mask=np.concatenate(msk)),
-                pa.array(np.concatenate(cnts)),
-            ],
-            names=["doc_a", "doc_b", "cnt"],
-        )
-
-    return rep.mapInArrow(_gen, "doc_a bigint, doc_b bigint, cnt bigint")
 
 
 def pair_cosine_arrow(

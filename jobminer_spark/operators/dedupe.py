@@ -25,9 +25,8 @@ from pyspark.sql import functions as F
 
 from jobminer_spark.operators.common import word_shingles  # noqa: F401 — re-export (tests/trainprep import it from here)
 from jobminer_spark.operators.common import (
-    ngram_rows_arrow as _ngram_rows_arrow,
-    posting_pairs_arrow as _posting_pairs_arrow,
-    shingle_pair_counts_arrow as _shingle_pair_counts_arrow,
+    ngram_rows as _ngram_rows,
+    posting_pairs as _posting_pairs,
 )
 from jobminer_spark.registry import query
 from jobminer_spark.sources import load_table
@@ -280,13 +279,11 @@ def shingle_doc_lists(
     max_df caps assume natural-language df distributions; for
     adversarial corpora use word_shingles(max_df=...) + the join-based
     pair path, which counts df without materializing doc lists."""
-    raw = _ngram_rows_arrow(
-        # spread_scan (r20): single-row-group input would serialize
-        # shingle generation, and a keyed repartition is
-        # AQE-coalescible by bytes — a bad proxy for the tokenize
-        # kernel's CPU. Null texts were dropped by the old
-        # size(split(..)) >= n filter — the explicit filter keeps
-        # that contract.
+    raw = _ngram_rows(
+        # spread_scan: a single-row-group input would run the whole
+        # tokenize + n-gram explode in one task (the map side of the
+        # aggregation below). Round-robin only when splits < cores; a
+        # no-op at scale. NULL texts are dropped before the exchange.
         _spread_scan(docs.filter(F.col("text").isNotNull())),
         n,
     )
@@ -300,15 +297,28 @@ def shingle_doc_lists(
 
 def pair_counts_from_doclists(idx: DataFrame) -> DataFrame:
     """(doc_a, doc_b, n_inter) from an inverted index of per-shingle
-    SORTED doc-id arrays ``idx(..., ds)``: C(df,2) pair structs are
-    generated IN-ROW from each list (bounded by the df cap upstream),
+    SORTED doc-id arrays ``idx(..., ds)``: the C(df,2) pairs of each
+    list come from posting_pairs (bounded by the df cap upstream),
     then one aggregation counts shared shingles per pair — no
-    self-join of the posting lists. Shared by the batch dedup path and
-    the incremental-admission probe (increment.py)."""
+    self-join of the posting lists. Shared by the batch dedup path,
+    the incremental-admission probe (increment.py) and the winnowing
+    index (winnow.py)."""
     return (
-        _posting_pairs_arrow(idx.filter(F.size("ds") >= 2), "ds")
+        _posting_pairs(idx.filter(F.size("ds") >= 2), "ds")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+
+def _pair_size_counts(
+    docs: DataFrame, n: int = 3, max_df: int | None = None
+) -> DataFrame:
+    """(doc_a, doc_b, cnt): shared surviving shingles per candidate
+    pair, plus one (doc, NULL, n_sh) size row per document."""
+    return (
+        _posting_pairs(shingle_doc_lists(docs, n, max_df), "ds", size_markers=True)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
@@ -317,39 +327,24 @@ def _jaccard_pair_counts(
 ) -> DataFrame:
     """(doc_a, doc_b, n_inter, n_sh_a, n_sh_b) for every candidate
     pair sharing ≥1 surviving shingle. Built on shingle_doc_lists:
-    candidate pairs are generated IN-ROW from each shingle's sorted
-    doc list (C(df,2) structs, bounded by the df cap) instead of a
-    shingle self-join. ONE corpus-scale pass: each index row emits its
-    pair structs AND one (doc, NULL) size marker per posting, so a
-    single explode + aggregation yields both the per-pair shared-
-    shingle counts (doc_b non-NULL) and the per-doc surviving-shingle
-    totals (doc_b NULL). The r13–r19 shape aggregated the two in
-    separate branches and recomputed the whole index per branch
-    (measured then as cheaper than a checkpoint barrier); folding both
-    into one aggregation removes the second corpus pipeline outright —
-    strictly less work than either side of that old trade. The fused
-    aggregate is pair+doc-sized (≪ corpus) and is lazily
-    localCheckpointed so the three downstream reads (inter + both size
-    joins) don't re-run the corpus pass. Identical output to the
-    join-based path (same capped shingle set, same counts).
+    candidate pairs come from each shingle's sorted doc list
+    (posting_pairs, bounded by the df cap) instead of a shingle
+    self-join. ONE corpus-scale pass: every posting emits its pairs
+    with the later docs of its list AND one (doc, NULL) size marker,
+    so a single aggregation yields both the per-pair shared-shingle
+    counts (doc_b non-NULL) and the per-doc surviving-shingle totals
+    (doc_b NULL), exact counts with no re-sum. The fused aggregate is
+    pair+doc-sized (≪ corpus) and is lazily localCheckpointed so the
+    three downstream reads (inter + both size joins) don't re-run the
+    corpus pass. Identical output to the join-based path (same capped
+    shingle set, same counts). The whole chain is built-in
+    expressions — no Python worker, no lambda.
 
     No broadcast hint on the size joins: sizes has one row PER
     DOCUMENT, so forcing a broadcast is an OOM at corpus scale. AQE
     picks — broadcast when the measured size is small, doc-id-keyed
     shuffle when it isn't."""
-    # Pairs + size markers via the FUSED Arrow pass (one shingle-hash
-    # exchange; per-task dedup, grouping, df cap, pair generation and
-    # run-length pre-counting all inside one vectorized generator —
-    # guide §4.2/§2.3; identical weighted multisets to the two-step
-    # index + pair-explode shape, measured 2.24→1.26 s at sf0.1). Doc
-    # ids are bigint on every current caller, which the helper
-    # requires; ``cnt`` is a partial count and must be SUMMED.
-    agg = (
-        _shingle_pair_counts_arrow(docs, n, max_df)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
+    agg = _pair_size_counts(docs, n, max_df).localCheckpoint(eager=False)
     inter = agg.filter(F.col("doc_b").isNotNull()).select(
         "doc_a", "doc_b", F.col("cnt").alias("n_inter")
     )
@@ -518,8 +513,8 @@ def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     sf0.1, the one piece numpy cannot vectorize) lost 1.2–2× to the
     codegen'd JVM md5 across every interleaved A/B leg (JVM 4.3 s vs
     fused 7.3+ s steady-state at sf0.1), so the JVM expression path
-    is the keeper — unlike the round's other fused kernels, whose
-    inner loops are fully vectorized."""
+    is the keeper. The shingles themselves come from ngram_rows, also
+    built-in expressions, so no stage here runs Python."""
     flat = (
         shingle_doc_lists(docs, n, max_df=SHINGLE_MAX_DF)
         .select(

@@ -50,7 +50,7 @@ def _rep_stats_arrow(docs: DataFrame) -> DataFrame:
     (doc_id) rollup bit-identically:
 
     * tokenization: ``pa.compute.split_pattern(text, ' ')`` == Spark
-      ``split(text, ' ')`` (see ngram_rows_arrow) — empties kept,
+      ``split(text, ' ')`` (see common.ngram_rows) — empties kept,
       exactly like the gram stream this replaces;
     * gram identity: tokens cannot contain the separator, so 2-gram
       string equality == token-pair equality — counting dictionary-

@@ -74,7 +74,7 @@ def _bm25_tf_arrow(docs: DataFrame, vocab: list[str]) -> DataFrame:
     ``pa.compute.split_pattern(text, ' ')`` == Spark
     ``split(text, ' ')`` (literal pattern, Java Pattern.split(limit=-1)
     semantics — consecutive/trailing empties kept; see
-    ngram_rows_arrow); dl = len(split) including empty tokens; NULL
+    common.ngram_rows); dl = len(split) including empty tokens; NULL
     texts are dropped exactly as the old ``size(w) >= 1`` filter did
     (size(split) >= 1 always holds for non-null text)."""
     # spread_scan: the tokenize kernel is the heavy per-row work here,

@@ -437,7 +437,7 @@ def _tfidf_tf_rows_arrow(docs: DataFrame) -> DataFrame:
     Exactness contract vs the expression path it replaces
     (``explode(split(text,' '))`` → ``!= ''`` → ``lower``):
     ``pa.compute.split_pattern(text, ' ')`` == Spark split (see
-    ngram_rows_arrow), empty tokens dropped identically (lowercasing
+    common.ngram_rows), empty tokens dropped identically (lowercasing
     never empties a string, so filter-then-lower == lower-then-filter),
     and ``pa.compute.utf8_lower`` == Spark ``lower`` (both full
     Unicode lowercase; the fixture vocabulary is ASCII where the two

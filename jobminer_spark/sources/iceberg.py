@@ -67,6 +67,7 @@ are ordinary distributed parquet scans with pushdown intact.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import json
 import os
@@ -3426,6 +3427,7 @@ def _commit_snapshot(
     snapshot_extra: dict | None = None,
     branch: str | None = None,
     parent_snapshot_id: int | None = None,
+    added_files_staged: bool = True,
 ) -> int:
     """Commit snapshot ``version`` + 1, which is also its sequence
     number: write its manifest list ``snap-<id>-<commit>.avro`` from
@@ -3446,7 +3448,14 @@ def _commit_snapshot(
     staging half). Every snapshot records ``parent-snapshot-id``
     (the base it was committed onto — ``parent_snapshot_id`` for
     branch writes, else the prior current snapshot) so fast-forward
-    publishing can check real ancestry."""
+    publishing can check real ancestry.
+
+    A commit that loses the race for vN+1 (FileExistsError) removes
+    its whole attempt before re-raising: the list, every manifest
+    this snapshot wrote, and the files those manifests ADD — unless
+    ``added_files_staged`` is False (an export whose ADDED entries
+    reference another table's live files). EXISTING and DELETED
+    entries name files earlier snapshots own and are never touched."""
     snapshot_id = seq = version + 1
     list_path = os.path.join(md, f"snap-{snapshot_id}-{commit}.avro")
     write_avro_file(list_path, _MANIFEST_LIST_SCHEMA, records)
@@ -3498,8 +3507,42 @@ def _commit_snapshot(
         "snapshot-id": snapshot_id, "type": "branch",
     }
     meta["refs"] = refs
-    _write_metadata(md, meta, version)
+    try:
+        _write_metadata(md, meta, version)
+    except FileExistsError:
+        _discard_attempt(md, list_path, records, snapshot_id, added_files_staged)
+        raise
     return snapshot_id
+
+
+def _discard_attempt(
+    md: str,
+    list_path: str,
+    records: list[dict],
+    snapshot_id: int,
+    added_files_staged: bool,
+) -> None:
+    """Unlink what a losing commit of ``snapshot_id`` wrote: its
+    manifest list, the manifests it wrote (``added_snapshot_id`` is
+    this snapshot) and, when ``added_files_staged``, the files their
+    ADDED entries name."""
+    table = os.path.dirname(md)
+    doomed = {list_path}
+    for r in records:
+        if r["added_snapshot_id"] != snapshot_id:
+            continue
+        manifest = _resolve_path(table, r["manifest_path"])
+        doomed.add(manifest)
+        if added_files_staged:
+            _schema, entries = read_avro_records(manifest)
+            doomed.update(
+                _resolve_path(table, e["data_file"]["file_path"])
+                for e in entries
+                if e["status"] == 1
+            )
+    for path in doomed:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(path)
 
 
 def expire_iceberg_snapshots(

@@ -248,7 +248,12 @@ def write_uniform_iceberg_metadata(table: str) -> int:
         # the Delta side
         "snapshots": [],
     }
-    return _commit_snapshot(md, ice_meta, version, commit, records, "append")
+    # the ADDED entries are the Delta table's own live files: a lost
+    # race must not unlink them
+    return _commit_snapshot(
+        md, ice_meta, version, commit, records, "append",
+        added_files_staged=False,
+    )
 
 
 # Iceberg type → Delta schema-string type (the reverse direction)

@@ -312,3 +312,49 @@ def test_one_commit_path_per_table_format():
                 ):
                     bad.append(f"{where}: 'min_sequence_number' record key")
     assert not bad, bad
+
+
+def _iceberg_winner_takes_v2(monkeypatch, md):
+    """Make the next Iceberg metadata publish lose to a concurrent
+    writer that lands v2 first (a copy of v1)."""
+    from jobminer_spark.sources import iceberg
+
+    real_publish = iceberg.publish_new
+    v1 = os.path.join(md, "v1.metadata.json")
+    v2 = os.path.join(md, "v2.metadata.json")
+
+    def _racing_publish(path, text):
+        if path == v2 and not os.path.exists(v2):
+            with open(v1) as f:
+                real_publish(v2, f.read())
+        return real_publish(path, text)
+
+    monkeypatch.setattr(iceberg, "publish_new", _racing_publish)
+    return v2
+
+
+@pytest.mark.parametrize("writer", ["write_iceberg", "uniform"])
+def test_iceberg_writer_that_loses_the_race_leaves_nothing(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A concurrent writer takes v2 while an append is publishing: the
+    loser re-raises FileExistsError and no data file, manifest or
+    manifest list of its attempt stays on disk. A UniForm export's
+    ADDED entries are the Delta table's own files, which stay."""
+    t = str(tmp_path / writer)
+    if writer == "write_iceberg":
+        write_iceberg(spark, t, _df(spark, 0, 10))
+    else:
+        write_delta(spark, t, _df(spark, 0, 10))
+        write_uniform_iceberg_metadata(t)
+        write_delta(spark, t, _df(spark, 10, 15))
+    before = _files_on_disk(t)
+    v2 = _iceberg_winner_takes_v2(monkeypatch, os.path.join(t, "metadata"))
+    with pytest.raises(FileExistsError):
+        if writer == "write_iceberg":
+            write_iceberg(spark, t, _df(spark, 10, 20))
+        else:
+            write_uniform_iceberg_metadata(t)
+    assert _files_on_disk(t) == before | {os.path.abspath(v2)}
+    if writer == "uniform":
+        assert _rows(spark, t) == [(k, k * 10) for k in range(15)]

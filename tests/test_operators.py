@@ -1006,7 +1006,7 @@ def test_rep_stats_arrow_matches_shuffle_path(spark):
     n_grams, and bit-identical IEEE fractions."""
     from pyspark.sql import functions as F
 
-    from jobminer_spark.operators.common import ngram_rows_arrow
+    from jobminer_spark.operators.common import ngram_rows
     from jobminer_spark.operators.docquality import _rep_stats_arrow
     from jobminer_spark.sources import load_table
     from tests.conftest import SF_DIR
@@ -1014,7 +1014,7 @@ def test_rep_stats_arrow_matches_shuffle_path(spark):
     docs = load_table(spark, SF_DIR, "documents").filter(
         F.col("text").isNotNull()
     )
-    grams = ngram_rows_arrow(docs, 2, out="g")
+    grams = ngram_rows(docs, 2, out="g")
     gc = grams.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
     old = {
         r["doc_id"]: r

@@ -820,3 +820,49 @@ def test_iceberg_sorted_write_plans_local_sort_no_range_exchange(spark):
     assert "ASC NULLS FIRST], false, 0" in plan
     assert "rangepartitioning" not in plan.lower()
     assert "hashpartitioning(p" in plan  # the layout repartition
+
+
+_PYTHON_OR_LAMBDA = (
+    "MapInArrow",
+    "PythonMapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "lambdafunction",
+)
+
+
+def test_shingle_helpers_run_no_python_and_no_lambda(spark):
+    """The shingle kernels are built-in expressions end to end: no
+    Python-worker node (a forked-worker round trip per batch) and no
+    lambda (higher-order functions run interpreted, outside
+    whole-stage codegen). The registered queries' plans stop at the
+    lazy localCheckpoint's ``Scan ExistingRDD``, so the helpers —
+    including the frame _jaccard_pair_counts checkpoints — are
+    checked directly."""
+    from jobminer_spark.operators.dedupe import (
+        SHINGLE_MAX_DF,
+        _pair_size_counts,
+        pair_counts_from_doclists,
+        shingle_doc_lists,
+        word_shingles,
+    )
+    from jobminer_spark.sources import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    frames = {
+        "word_shingles": word_shingles(docs, 3),
+        "shingle_doc_lists": shingle_doc_lists(docs, 3, SHINGLE_MAX_DF),
+        "pair_counts_from_doclists": pair_counts_from_doclists(
+            shingle_doc_lists(docs, 3, SHINGLE_MAX_DF)
+        ),
+        "_pair_size_counts": _pair_size_counts(docs, 3, SHINGLE_MAX_DF),
+    }
+    for name, df in frames.items():
+        plan = physical_plan(df)
+        assert "Generate" in plan, name  # the n-gram / pair explodes
+        for node in _PYTHON_OR_LAMBDA:
+            assert node not in plan, (name, node)
+    top = _plan(spark, "ngram_jaccard_top_pairs")
+    assert "Scan ExistingRDD" in top
+    for node in _PYTHON_OR_LAMBDA:
+        assert node not in top, node

@@ -1120,3 +1120,77 @@ def test_distributed_prefix_matches_python_cumsum(spark):
             ).collect()
         }
         assert got == want, n_part
+
+
+def test_ngram_rows_matches_python_split_windows_property(spark):
+    """∀ texts over an adversarial alphabet (spaces, tabs, non-ASCII,
+    empty and all-space strings, docs shorter than n): ngram_rows
+    emits exactly the multiset of ' '-joined n-token windows of
+    Python's ``text.split(' ')``, for n = 1..5; NULL texts emit
+    nothing. One Spark job per n over every generated case."""
+    from collections import Counter
+
+    from jobminer_spark.operators.common import ngram_rows
+
+    texts: list[str | None] = [
+        "", " ", "   ", "a  b", " a", "a ", "\t", "a\tb c", "é 漢字 😀",
+        None,
+    ]
+
+    @settings(max_examples=60, deadline=None)
+    @given(
+        st.one_of(
+            st.text(alphabet=" ab\té漢😀", max_size=24),
+            st.lists(
+                st.sampled_from(["", "a", "b", "\t", "é", "漢字", "😀"]),
+                max_size=8,
+            ).map(" ".join),
+        )
+    )
+    def collect(t):
+        texts.append(t)
+
+    collect()
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    for n in range(1, 6):
+        want = Counter(
+            (i, " ".join(w[k : k + n]))
+            for i, t in enumerate(texts)
+            if t is not None
+            for w in [t.split(" ")]
+            for k in range(len(w) - n + 1)
+        )
+        got = Counter((r.doc_id, r.shingle) for r in ngram_rows(df, n).collect())
+        assert got == want, n
+
+
+def test_posting_pairs_matches_combinations_property(spark):
+    """∀ sorted id lists of length 0, 1, 2 and up to the df cap, with
+    bigint and with string ids: posting_pairs emits exactly
+    ``itertools.combinations(ds, 2)`` per list (the upper triangle)."""
+    from collections import Counter
+    from itertools import combinations
+
+    from jobminer_spark.operators.common import posting_pairs
+    from jobminer_spark.operators.dedupe import SHINGLE_MAX_DF
+
+    lists: list[list[int]] = [[], [7], [3, 9], list(range(SHINGLE_MAX_DF))]
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.sets(st.integers(-(2**40), 2**40), max_size=SHINGLE_MAX_DF))
+    def collect(ids):
+        lists.append(sorted(ids))
+
+    collect()
+    for elem, cases in (
+        ("bigint", lists),
+        ("string", [sorted(str(v) for v in ds) for ds in lists]),
+    ):
+        idx = spark.createDataFrame(
+            list(enumerate(cases)), f"k int, ds array<{elem}>"
+        )
+        want = Counter(p for ds in cases for p in combinations(ds, 2))
+        got = Counter((r.doc_a, r.doc_b) for r in posting_pairs(idx).collect())
+        assert got == want, elem
